@@ -1153,10 +1153,6 @@ _SCALARS["MV_CONCAT"] = _scalar_mv_concat
 _SCALARS["MV_APPEND"] = lambda a, r: F.concat(a[0], a[1])
 _SCALARS["MV_ZIP"] = _scalar_mv_zip
 
-#: strict dotted-quad octet (leading zeros rejected, the ES TO_IP default)
-_IPV4_OCTET = r"(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9][0-9]|[0-9])"
-_IPV4_RE = f"^{_IPV4_OCTET}(\\.{_IPV4_OCTET}){{3}}$"
-
 
 def _scalar_to_ip(args, raw):
     # IPv4 dotted quad passes through; IPv6 canonicalizes per RFC 5952

@@ -203,16 +203,6 @@ def tokens_for_mode(col: Column | str, mode: str = "ascii") -> Column:
                      f"expected one of {TOKEN_MODES}")
 
 
-def toks_sql_for_mode(expr: str = "text", mode: str = "ascii") -> str:
-    """Mode-dispatched DuckDB twin of :func:`tokens_for_mode`."""
-    if mode == "ascii":
-        return analyze_toks_sql(expr)
-    if mode == "unicode":
-        return analyze_toks_unicode_sql(expr)
-    raise ValueError(f"unknown analyzer mode {mode!r}; "
-                     f"expected one of {TOKEN_MODES}")
-
-
 # ---------------------------------------------------------------------------
 # The ``english`` analyzer: standard chain + stopword removal + S-stemming.
 # ES's english analyzer adds a stop filter and a stemmer on top of the

@@ -634,13 +634,6 @@ def mask_hex32_sql(hexpr: str, bits: int) -> str:
     return parts[0] if len(parts) == 1 else "(" + " || ".join(parts) + ")"
 
 
-def hex32_to_hextets_col(h: Column) -> Column:
-    """hex32 → colon-joined 8×4 hextet text (feedable to to_ip_col for
-    canonical rendering, which also maps ::ffff:0:0/96 back to dots)."""
-    return F.concat_ws(":", *[F.substring(h, 1 + 4 * i, 4)
-                              for i in range(8)])
-
-
 def hex32_to_hextets_sql(hexpr: str) -> str:
     return " || ':' || ".join(f"substr({hexpr}, {1 + 4 * i}, 4)"
                               for i in range(8))

@@ -351,7 +351,7 @@ def q_knn_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the metadata side projects 1 column; scoring stays a JVM
     higher-order dot product; the ranking is TakeOrderedAndProject with the
     rank window over the ≤k survivors."""
-    from elasticsearch_hbase_river_spark.operators.similarity import _dot, _norm
+    from elasticsearch_hbase_river_spark.operators.similarity import _norm
 
     emb = load_table(spark, sf_dir, "embeddings")
     eligible = (load_table(spark, sf_dir, "documents")
@@ -435,21 +435,6 @@ def _hash32(col) -> F.Column:
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
-def _pin_small(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Materialize a SMALL relation as driver-local rows re-parallelized
-    into the plan. Functionally what an eager localCheckpoint did here,
-    but immune to the accumulated-session block-manager pressure class
-    (SCALE.md §8): checkpointed blocks share eviction state with every
-    earlier query's leftovers, and the percolate family's two pinned
-    relations (slot dictionary <= PERC_SLOTS rows, stored-query sets
-    |Q| rows) measured 2-3x slower in-bench than isolated because of
-    it. Only for constant-bounded relations — never corpus-sized."""
-    # collect(), not toPandas(): pandas coerces nullable integer
-    # columns to float64/NaN, which a re-application of the original
-    # schema then rejects — the Row round-trip is schema-faithful
-    return spark.createDataFrame(df.collect(), df.schema)
-
-
 def slot_dictionary(vocab: DataFrame) -> DataFrame:
     """(sid, token[, df]): the percolator's hash-slot dictionary — one
     vocab pass (partial-aggregated groupBy onto ≤ PERC_SLOTS groups; the
@@ -478,15 +463,6 @@ def slot_dictionary(vocab: DataFrame) -> DataFrame:
     sdict = vocab.groupBy(slot).agg(F.min("token").alias("token"))
     return sdict.select(
         (F.row_number().over(w) - 1).cast("long").alias("sid"), "token")
-
-
-def _stored_queries(spark: SparkSession, vocab: DataFrame,
-                    n_queries: int, k: int) -> DataFrame:
-    """(query_id, token) synthesized from a vocabulary relation — builds
-    the slot dictionary inline (see :func:`_stored_queries_from_sidx`
-    for the index-served path that skips it)."""
-    return _stored_queries_from_sidx(spark, slot_dictionary(vocab),
-                                     n_queries, k)
 
 
 def _stored_queries_from_sidx(spark: SparkSession, sidx: DataFrame,
@@ -532,8 +508,9 @@ def _stored_queries_from_sidx(spark: SparkSession, sidx: DataFrame,
 
 
 def _stored_sql(n_queries: int, k: int) -> str:
-    """DuckDB twin of :func:`_stored_queries` — CTE chain ending in
-    ``stored(query_id, token)``; splice after a ``vocab(token)`` CTE."""
+    """DuckDB twin of :func:`_stored_queries_from_sidx` over an inline
+    slot dictionary — CTE chain ending in ``stored(query_id, token)``;
+    splice after a ``vocab(token)`` CTE."""
     return f"""
 sdict AS (
   SELECT ('0x' || substr(md5(token), 1, 8))::BIGINT % {PERC_SLOTS} AS slot,
@@ -585,9 +562,9 @@ def q_percolate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     idx = ensure_index(spark, sf_dir)
     # Registered at build time (layout v9): the |Q|·k stored relation is
-    # a single-file sidecar — the per-query synthesis (+ the _pin_small
-    # driver round-trip that kept it from re-running per consumer) is
-    # gone from the serving path.
+    # a single-file sidecar — the per-query synthesis (+ the driver
+    # round-trip that kept it from re-running per consumer) is gone from
+    # the serving path.
     stored = read_percstored(spark, idx)
     # |Q|·k is a small constant here (24 terms): collecting them enables
     # bucket-literal pruning of the postings read — the bounded-literal

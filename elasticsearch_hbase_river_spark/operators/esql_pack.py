@@ -958,14 +958,17 @@ FROM events
 """
 
 
-def ensure_esql_stream_state(spark: SparkSession, sf_dir: str) -> str:
-    """Idempotent drained-stream fixture: build once per corpus, serve
-    forever after (same discipline as ``ensure_live_epochs``)."""
-    import json
+def _drain_esql_stream(spark: SparkSession, sf_dir: str, tag: str,
+                       text: str, cols: tuple[str, ...],
+                       ts_specs: dict | None = None) -> str:
+    """Idempotent drained-stream fixture: stream ``cols`` of the events
+    table through ``text`` once per corpus into the published directory
+    ``<index path>-<tag>`` (state/ + ckpt/ + the ``_drained.json``
+    marker), then serve it forever after (same discipline as
+    ``ensure_live_epochs``)."""
     import os
-    import shutil
-    import uuid
 
+    from elasticsearch_hbase_river_spark.artifacts import publish_dir
     from elasticsearch_hbase_river_spark.operators.indexed_search import (
         index_path_for,
     )
@@ -974,41 +977,41 @@ def ensure_esql_stream_state(spark: SparkSession, sf_dir: str) -> str:
         start_esql_stream,
     )
 
-    root = index_path_for(sf_dir) + "-esql-stream-v1"
-    done = os.path.join(root, "_drained.json")
-    if os.path.exists(done):
-        return root
-    tmp = f"{root}.tmp-{uuid.uuid4().hex}"
-    src, state = os.path.join(tmp, "src"), os.path.join(tmp, "state")
-    # 2 source files -> 2 real micro-batch epochs: the multi-epoch merge
-    # this fixture exists to exercise needs >=2 (asserted below), and
-    # each extra micro-batch costs a full foreachBatch tick of fixed
-    # streaming-engine overhead at any data size (r11: 4 -> 2 epochs,
-    # drain ~1 s cheaper, identical merged result — the partials are
-    # exact).
-    (load_table(spark, sf_dir, "events")
-     .select("event_id", "event_type", "value")
-     .repartition(2).write.parquet(src))
-    sdf = (spark.readStream.schema(spark.read.parquet(src).schema)
-           .option("maxFilesPerTrigger", "1").parquet(src))
-    q = start_esql_stream(spark, ESQL_STREAM_TEXT, sdf, state,
-                          os.path.join(tmp, "ckpt"))
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("esql stream fixture did not drain in 600s")
-    epochs = [n for n in os.listdir(os.path.join(state, "partials"))
-              if n.startswith("epoch=")]
-    if len(epochs) < 2:
-        raise RuntimeError(f"expected >=2 real micro-batches, got {epochs}")
-    with open(os.path.join(tmp, "_drained.json"), "w") as f:
-        json.dump({"epochs": len(epochs)}, f)
-    try:
-        os.rename(tmp, root)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(done):
-            raise
+    root = index_path_for(sf_dir) + f"-{tag}"
+
+    def _build(tmp: str) -> dict:
+        src, state = os.path.join(tmp, "src"), os.path.join(tmp, "state")
+        # 2 source files -> 2 real micro-batch epochs: the multi-epoch
+        # merge this fixture exists to exercise needs >=2 (asserted
+        # below), and each extra micro-batch costs a full foreachBatch
+        # tick of fixed streaming-engine overhead at any data size (r11:
+        # 4 -> 2 epochs, drain ~1 s cheaper, identical merged result —
+        # the partials are exact). The split is not time-partitioned, so
+        # a TS series' bucket spans both micro-batches.
+        (load_table(spark, sf_dir, "events").select(*cols)
+         .repartition(2).write.parquet(src))
+        sdf = (spark.readStream.schema(spark.read.parquet(src).schema)
+               .option("maxFilesPerTrigger", "1").parquet(src))
+        q = start_esql_stream(spark, text, sdf, state,
+                              os.path.join(tmp, "ckpt"), ts_specs=ts_specs)
+        if not q.awaitTermination(600):
+            q.stop()
+            raise RuntimeError(f"{tag} fixture did not drain in 600s")
+        epochs = [n for n in os.listdir(os.path.join(state, "partials"))
+                  if n.startswith("epoch=")]
+        if len(epochs) < 2:
+            raise RuntimeError(
+                f"expected >=2 real micro-batches, got {epochs}")
+        return {"epochs": len(epochs)}
+
+    publish_dir(root, "_drained.json", {}, _build)
     return root
+
+
+def ensure_esql_stream_state(spark: SparkSession, sf_dir: str) -> str:
+    return _drain_esql_stream(spark, sf_dir, "esql-stream-v1",
+                              ESQL_STREAM_TEXT,
+                              ("event_id", "event_type", "value"))
 
 
 def q_esql_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1490,55 +1493,13 @@ TS metrics
 
 
 def ensure_esql_stream_ts_state(spark: SparkSession, sf_dir: str) -> str:
-    import json
-    import os
-    import shutil
-    import uuid
-
     from elasticsearch_hbase_river_spark.esql import TimeSeriesSpec
-    from elasticsearch_hbase_river_spark.operators.indexed_search import (
-        index_path_for,
-    )
-    from elasticsearch_hbase_river_spark.sources.tables import load_table
-    from elasticsearch_hbase_river_spark.streaming.esql_stream import (
-        start_esql_stream,
-    )
 
-    root = index_path_for(sf_dir) + "-esql-stream-ts-v1"
-    done = os.path.join(root, "_drained.json")
-    if os.path.exists(done):
-        return root
-    tmp = f"{root}.tmp-{uuid.uuid4().hex}"
-    src, state = os.path.join(tmp, "src"), os.path.join(tmp, "state")
-    # 2 files -> 2 epochs (same rationale as ensure_esql_stream_state:
-    # >=2 is what the merge demonstration needs; per-epoch tick overhead
-    # is fixed cost). Still not time-partitioned, so a series' bucket
-    # spans both micro-batches.
-    (load_table(spark, sf_dir, "events")
-     .select("event_id", "ts", "user_id", "event_type", "value")
-     .repartition(2).write.parquet(src))
-    sdf = (spark.readStream.schema(spark.read.parquet(src).schema)
-           .option("maxFilesPerTrigger", "1").parquet(src))
-    q = start_esql_stream(
-        spark, ESQL_STREAM_TS_TEXT, sdf, state, os.path.join(tmp, "ckpt"),
+    return _drain_esql_stream(
+        spark, sf_dir, "esql-stream-ts-v1", ESQL_STREAM_TS_TEXT,
+        ("event_id", "ts", "user_id", "event_type", "value"),
         ts_specs={"metrics": TimeSeriesSpec("ts",
                                             ("user_id", "event_type"))})
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("esql TS stream fixture did not drain in 600s")
-    epochs = [n for n in os.listdir(os.path.join(state, "partials"))
-              if n.startswith("epoch=")]
-    if len(epochs) < 2:
-        raise RuntimeError(f"expected >=2 real micro-batches, got {epochs}")
-    with open(os.path.join(tmp, "_drained.json"), "w") as f:
-        json.dump({"epochs": len(epochs)}, f)
-    try:
-        os.rename(tmp, root)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(done):
-            raise
-    return root
 
 
 def q_esql_stream_ts_peak(spark: SparkSession, sf_dir: str) -> DataFrame:

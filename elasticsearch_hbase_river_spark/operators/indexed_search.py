@@ -57,14 +57,17 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import tempfile
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from elasticsearch_hbase_river_spark.artifacts import (
+    artifact_path,
+    publish_dir,
+    write_json_atomic,
+)
 from elasticsearch_hbase_river_spark.functions.concurrency import run_jobs
 from elasticsearch_hbase_river_spark.functions.determinism import roundn_col
 from elasticsearch_hbase_river_spark.functions.xxh64 import pmod_bucket
@@ -136,25 +139,22 @@ META = "_index_meta.json"
 #: never served or appended.
 LAYOUT_VERSION = 9
 
-#: Root for on-demand index builds (override with RIVER_INDEX_ROOT).
-_DEFAULT_ROOT = os.path.join(tempfile.gettempdir(), "river_search_index")
-
 #: Driver-side cache of the 1-row stats sidecar, keyed by index path.
 #: Index directories are immutable once published (fingerprint- or
 #: generation-keyed), so entries never go stale.
 _STATS_CACHE: dict[str, dict[str, float]] = {}
 
 
-def _fingerprint(sf_dir: str) -> str:
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    return f"{st.st_size}-{st.st_mtime_ns}"
+def index_root() -> str:
+    """Root for on-demand index builds (override with RIVER_INDEX_ROOT)."""
+    return os.environ.get(
+        "RIVER_INDEX_ROOT",
+        os.path.join(tempfile.gettempdir(), "river_search_index"))
 
 
 def index_path_for(sf_dir: str) -> str:
-    root = os.environ.get("RIVER_INDEX_ROOT", _DEFAULT_ROOT)
-    name = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(
-        root, f"{name}-{_fingerprint(sf_dir)}-L{LAYOUT_VERSION}")
+    return artifact_path(index_root(), sf_dir, "documents",
+                         suffix=f"-L{LAYOUT_VERSION}")
 
 
 def _tbucket(col) -> F.Column:
@@ -441,14 +441,20 @@ def build_index(spark: SparkSession, docs: DataFrame, path: str,
     multilingual); query terms must be analyzed with the same mode."""
     from elasticsearch_hbase_river_spark.functions.analyzer import (
         assert_analyzable_corpus,
-        tokens_for_mode,
     )
 
     # fail loudly on corpora outside the selected analyzer mode's scope —
     # a mis-tokenizing corpus would otherwise pass through a green gate
     assert_analyzable_corpus(docs, mode=mode)
-    preexisting = os.path.exists(os.path.join(path, META))
-    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+    _publish(path, lambda tmp: _write_index(spark, docs, mode, tmp), mode)
+
+
+def _write_index(spark: SparkSession, docs: DataFrame, mode: str,
+                 tmp: str) -> None:
+    """The serving layout of ``docs`` under ``tmp`` (see build_index)."""
+    from elasticsearch_hbase_river_spark.functions.analyzer import (
+        tokens_for_mode,
+    )
 
     # The build is a DAG of independent parquet writes; overlapping the
     # independent branches lets one write's tasks back-fill executors
@@ -525,7 +531,6 @@ def build_index(spark: SparkSession, docs: DataFrame, path: str,
         run_jobs(_vkeys_job, _percslots_chain)
 
     run_jobs(_tvectors, _vocab_chain)
-    _publish(tmp, path, preexisting, mode=mode)
 
 
 def _write_stats_from_doclen(spark: SparkSession, doclen: DataFrame,
@@ -596,24 +601,21 @@ def index_mode(path: str) -> str:
         return json.load(f).get("mode", "ascii")
 
 
-def _publish(tmp: str, path: str, preexisting: bool,
+def _publish(path: str, build: Callable[[str], None],
              mode: str = "ascii") -> None:
-    """Atomic publish, same discipline as the vector index: concurrent
-    builders of the SAME immutable path race safely (first rename wins,
-    losers discard); any other rename failure re-raises — stale data
-    standing in for a requested build is silent data loss. The analyzer
-    ``mode`` is stamped into META (same marker discipline as the layout
-    version): mixing tokenizations across build/maintenance is silent
-    corruption, so every maintenance path checks it."""
-    with open(os.path.join(tmp, META), "w") as f:
-        json.dump({"layout": LAYOUT_VERSION, "n_buckets": N_BUCKETS,
-                   "mode": mode}, f)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if preexisting or not os.path.exists(os.path.join(path, META)):
-            raise
+    """Publish a new index generation at ``path`` (``publish_dir``:
+    concurrent builders of the same immutable path race safely). An
+    occupied ``path`` is a caller error, refused before the build —
+    conceding it would leave the STALE index standing in for the build or
+    merge the caller asked for. The analyzer ``mode`` is stamped into META
+    next to the layout version: mixing tokenizations across
+    build/maintenance is silent corruption, so every maintenance path
+    checks it."""
+    if os.path.exists(os.path.join(path, META)):
+        raise FileExistsError(
+            f"{path} already holds an index; publish into a fresh path")
+    publish_dir(path, META, {"layout": LAYOUT_VERSION,
+                             "n_buckets": N_BUCKETS, "mode": mode}, build)
 
 
 # ---------------------------------------------------------------------------
@@ -864,9 +866,15 @@ def apply_epoch_deltas(spark: SparkSession, base_path: str,
     changed = fresh_docs.select("doc_id")
     # bounded-collect + saturation-to-full-scan guard (changed_dbuckets)
     dbuckets = changed_dbuckets(changed)
+    _publish(out_path, lambda tmp: _write_merged(
+        spark, base_path, fresh, fresh_docs, changed, dbuckets, tmp),
+        base_mode)
 
-    preexisting = os.path.exists(os.path.join(out_path, META))
-    tmp = f"{out_path}.tmp-{uuid.uuid4().hex}"
+
+def _write_merged(spark: SparkSession, base_path: str, fresh: DataFrame,
+                  fresh_docs: DataFrame, changed: DataFrame,
+                  dbuckets: list[int] | None, tmp: str) -> None:
+    """The next snapshot's layout under ``tmp`` (see apply_epoch_deltas)."""
     # Carry-over WITHOUT a global shuffle: the base postings are already
     # tbucket-partitioned on disk, so reading them WITH the partition
     # column and writing partitionBy(tbucket) keeps each carry-over task
@@ -954,7 +962,6 @@ def apply_epoch_deltas(spark: SparkSession, base_path: str,
         "sum_title long, n_body long, sum_body long")
      .coalesce(1).write.mode("overwrite")
      .parquet(os.path.join(tmp, "stats")))
-    _publish(tmp, out_path, preexisting, mode=base_mode)
 
 
 def q_rescore_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1255,10 +1262,7 @@ GROUP BY tok.doc_id"""
 def write_alias(alias_path: str, index_path: str) -> None:
     """Atomically point ``alias_path`` at ``index_path`` (tmp + rename —
     same publish discipline as the index itself)."""
-    tmp = f"{alias_path}.tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump({"index": index_path}, f)
-    os.replace(tmp, alias_path)
+    write_json_atomic(alias_path, {"index": index_path})
 
 
 def resolve_alias(alias_path: str) -> str:

@@ -35,12 +35,11 @@ overhead is not.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from elasticsearch_hbase_river_spark.artifacts import publish_dir
 from elasticsearch_hbase_river_spark.functions.concurrency import run_jobs
 from elasticsearch_hbase_river_spark.functions.determinism import (
     roundn_col,
@@ -249,33 +248,28 @@ def ensure_live_epochs(spark: SparkSession, sf_dir: str) -> str:
         analyze_tokens,
     )
     from elasticsearch_hbase_river_spark.streaming.river_stream import (
-        _stamp_epochs_layout,
+        EPOCHS_META,
+        epochs_marker,
     )
 
     path = index_path_for(sf_dir) + "-live-epochs"
-    marker = os.path.join(path, "_epochs_meta.json")
-    if os.path.exists(marker):
-        return path
-    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-    churned = _churned_docs(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text"))
-    # two independent writes from the same churned relation — overlapped
-    # (guide §2.6)
-    run_jobs(
-        lambda: (inverted_postings(churned)
-                 .write.mode("overwrite")
-                 .parquet(f"{tmp}/postings/epoch=0")),
-        lambda: (churned.select(
-            "doc_id",
-            F.size(analyze_tokens(F.col("text"))).cast("long").alias("dl"))
-            .write.mode("overwrite").parquet(f"{tmp}/docs/epoch=0")))
-    _stamp_epochs_layout(tmp)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(marker):
-            raise
+
+    def _build(tmp: str) -> None:
+        churned = _churned_docs(
+            load_table(spark, sf_dir, "documents").select("doc_id", "text"))
+        # two independent writes from the same churned relation, run
+        # concurrently
+        run_jobs(
+            lambda: (inverted_postings(churned)
+                     .write.mode("overwrite")
+                     .parquet(f"{tmp}/postings/epoch=0")),
+            lambda: (churned.select(
+                "doc_id",
+                F.size(analyze_tokens(F.col("text"))).cast("long")
+                .alias("dl"))
+                .write.mode("overwrite").parquet(f"{tmp}/docs/epoch=0")))
+
+    publish_dir(path, EPOCHS_META, epochs_marker(), _build)
     return path
 
 

@@ -61,7 +61,6 @@ from elasticsearch_hbase_river_spark.sources.tables import load_table
 TITLE_LEN = 8
 
 MM_TERMS = ("spark", "join")
-MM_FIELDS = ("title", "body")
 MM_BOOSTS = {"title": 2.0, "body": 1.0}
 MM_TIE = 0.3          # best_fields tie_breaker
 MM_TOP = 10

@@ -58,14 +58,12 @@ serving reads only the query terms' bucket directories.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from elasticsearch_hbase_river_spark.artifacts import artifact_path, publish_dir
 from elasticsearch_hbase_river_spark.functions.analyzer import (
     analyze_tokens,
     analyze_toks_sql,
@@ -424,21 +422,13 @@ def q_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The materialized fielded index (field column = real qualifiers).
 
 
-def _default_root() -> str:
-    import tempfile
-
-    return os.environ.get(
-        "RIVER_INDEX_ROOT",
-        os.path.join(tempfile.gettempdir(), "river_search_index"))
-
-
 def nested_index_path_for(sf_dir: str) -> str:
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    name = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(
-        _default_root(),
-        f"nested-{name}-{st.st_size}-{st.st_mtime_ns}"
-        f"-L{NESTED_LAYOUT_VERSION}")
+    from elasticsearch_hbase_river_spark.operators.indexed_search import (
+        index_root,
+    )
+
+    return artifact_path(index_root(), sf_dir, "events", prefix="nested-",
+                         suffix=f"-L{NESTED_LAYOUT_VERSION}")
 
 
 def _tbucket(col) -> F.Column:
@@ -456,9 +446,16 @@ def build_nested_index(spark: SparkSession, fcells: DataFrame,
     ``assembled`` is given, ``docstore`` — the assembled documents
     themselves (ES's ``_source``), doc-bucket-partitioned for point
     lookups. Fully distributed; the only driver work is the atomic
-    publish rename."""
-    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+    publish (``publish_dir``)."""
+    publish_dir(path, _META,
+                {"layout": NESTED_LAYOUT_VERSION, "n_buckets": N_FBUCKETS},
+                lambda tmp: _write_nested_index(spark, fcells, assembled,
+                                                tmp))
 
+
+def _write_nested_index(spark: SparkSession, fcells: DataFrame,
+                        assembled: DataFrame | None, tmp: str) -> None:
+    """The fielded serving layout under ``tmp`` (see build_nested_index)."""
     # Independent parquet writes overlapped per optimization guide §2.6:
     # docstore / fpostings / fdoclen derive only from their inputs and
     # run concurrently; fvocab (from landed fpostings) and fstats (from
@@ -523,15 +520,6 @@ def build_nested_index(spark: SparkSession, fcells: DataFrame,
          .write.mode("overwrite").parquet(os.path.join(tmp, "fstats")))
 
     run_jobs(_fvocab, _fstats)
-    with open(os.path.join(tmp, _META), "w") as f:
-        json.dump({"layout": NESTED_LAYOUT_VERSION,
-                   "n_buckets": N_FBUCKETS}, f)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(os.path.join(path, _META)):
-            raise
 
 
 def _assembled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -883,40 +871,35 @@ def ensure_nested_live_epochs(spark: SparkSession, sf_dir: str) -> str:
     """Idempotent churn epoch in the nested-epochs layout (fpostings/ +
     fdl/ + docs/ per epoch + marker), fingerprint-keyed."""
     from elasticsearch_hbase_river_spark.streaming.river_stream import (
-        _stamp_nested_epochs_layout,
+        NESTED_EPOCHS_LAYOUT_VERSION,
+        NESTED_EPOCHS_META,
     )
 
     path = nested_index_path_for(sf_dir) + "-live-epochs"
-    marker = os.path.join(path, "_nested_epochs_meta.json")
-    if os.path.exists(marker):
-        return path
-    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-    churned = (load_table(spark, sf_dir, "events")
-               .filter(_nlive_churn_sel())
-               .withColumn("value", F.col("value") + NLIVE_VALUE_BUMP))
-    fc = fielded_cells_from(sparse_melt(churned))
-    # three independent writes from the same churned relation —
-    # overlapped (guide §2.6)
-    run_jobs(
-        lambda: (_fpostings(fc).write.mode("overwrite")
-                 .parquet(f"{tmp}/fpostings/epoch=0")),
-        lambda: (_field_dl(fc).write.mode("overwrite")
-                 .parquet(f"{tmp}/fdl/epoch=0")),
-        lambda: (churned.select(
-            F.col("event_id").cast("string").alias("doc_id"))
-            .distinct().write.mode("overwrite")
-            .parquet(f"{tmp}/docs/epoch=0")))
-    # length-stats sidecar: the serve path reads these tiny sums instead
-    # of re-deriving the base removal per query
-    write_nested_epoch_stats_sidecar(
-        spark, ensure_nested_index(spark, sf_dir), tmp, 0)
-    _stamp_nested_epochs_layout(tmp)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(marker):
-            raise
+
+    def _build(tmp: str) -> None:
+        churned = (load_table(spark, sf_dir, "events")
+                   .filter(_nlive_churn_sel())
+                   .withColumn("value", F.col("value") + NLIVE_VALUE_BUMP))
+        fc = fielded_cells_from(sparse_melt(churned))
+        # three independent writes from the same churned relation, run
+        # concurrently
+        run_jobs(
+            lambda: (_fpostings(fc).write.mode("overwrite")
+                     .parquet(f"{tmp}/fpostings/epoch=0")),
+            lambda: (_field_dl(fc).write.mode("overwrite")
+                     .parquet(f"{tmp}/fdl/epoch=0")),
+            lambda: (churned.select(
+                F.col("event_id").cast("string").alias("doc_id"))
+                .distinct().write.mode("overwrite")
+                .parquet(f"{tmp}/docs/epoch=0")))
+        # length-stats sidecar: the serve path reads these tiny sums
+        # instead of re-deriving the base removal per query
+        write_nested_epoch_stats_sidecar(
+            spark, ensure_nested_index(spark, sf_dir), tmp, 0)
+
+    publish_dir(path, NESTED_EPOCHS_META,
+                {"layout": NESTED_EPOCHS_LAYOUT_VERSION}, _build)
     return path
 
 

@@ -10,9 +10,12 @@ parquet scan (check ``PushedFilters`` in ``.explain``), and at 100 TB the
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from elasticsearch_hbase_river_spark.artifacts import artifact_path, publish_dir
 from elasticsearch_hbase_river_spark.sources.cells import CELLS_CTE, cells_from_events
 
 #: Fixed incremental watermark for the oracle-checked query: the median
@@ -67,29 +70,23 @@ def q_cellstore_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``pushFilters`` into the storage layer (watermark-dead regions are
     pruned from the manifest without being opened). Oracle-identical to
     ``q_incremental_scan`` — the connector must be transparent."""
-    import hashlib
-    import os
-    import tempfile
-
     from elasticsearch_hbase_river_spark.sources import cellstore
 
-    # Cache key includes the fixture file's identity (size+mtime), so a
-    # regenerated fixture directory never hits a stale store.
-    ev = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(ev)
-    key = f"{sf_dir}|{st.st_size}|{int(st.st_mtime)}"
-    store = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_cellstore_" + hashlib.md5(key.encode()).hexdigest()[:12])
-    if not os.path.exists(os.path.join(store, cellstore.MANIFEST)):
-        tmp = store + ".building"
-        cellstore.write_cellstore(cells_from_events(spark, sf_dir), tmp,
-                                  n_regions=8)
-        if not os.path.exists(store):
-            os.replace(tmp, store)
+    store = cellstore_path_for(sf_dir)
+    publish_dir(store, cellstore.MANIFEST, {}, lambda tmp: {
+        "regions": cellstore.write_regions(cells_from_events(spark, sf_dir),
+                                           tmp, n_regions=8)})
     cellstore.register(spark)
     return (spark.read.format("cellstore").option("path", store).load()
             .filter(F.col("ts_ms") > WATERMARK_MS))
+
+
+def cellstore_path_for(sf_dir: str) -> str:
+    """The cached connector store of ``sf_dir``'s cells, keyed by the
+    events fixture's fingerprint so a regenerated fixture directory never
+    hits a stale store."""
+    return artifact_path(tempfile.gettempdir(), sf_dir, "events",
+                         prefix="spark_graft_cellstore_")
 
 
 QUERIES = {

@@ -413,51 +413,6 @@ def _sem_sqdist(a: Column, b: Column) -> Column:
         F.lit(0.0), lambda acc, v: acc + v), 4)
 
 
-def _sem_assign(emb: DataFrame, cent_rows: list) -> DataFrame:
-    """(vec_id, embedding, k): nearest-centroid assignment as a MAP-SIDE
-    literal argmin — the K (<= SEM_K) centroids ride the expression as
-    literal arrays, so an assignment pass is zero shuffles (the earlier
-    K-row-join + per-vec window shape shuffled K x N rows per Lloyd
-    iteration). The zip_with/aggregate fold runs interpreted, but an
-    UNROLLED 8 x dim arithmetic chain measured 5x SLOWER end-to-end
-    (janino chokes on the generated method) — measured, not assumed.
-    Ties break on the first (smallest-k) minimum, the same rule as the
-    oracle's ORDER BY dist, k."""
-    # single array-LITERAL node per centroid (F.lit(list)) — the
-    # F.array(*[F.lit(v)...]) form built 64 literal nodes per centroid
-    # and Catalyst analysis of the resulting tree dominated the query's
-    # wall time at fixture scale (the corpus is small; the plan wasn't)
-    dists = [_sem_sqdist(F.col("embedding"),
-                         F.lit([float(v) for v in c]))
-             for _k, c in cent_rows]
-    arr = F.array(*dists)
-    kpick = F.array(*[F.lit(int(k)) for k, _c in cent_rows])[
-        (F.array_position(arr, F.array_min(arr)) - 1).cast("int")]
-    return emb.select("vec_id", "embedding", kpick.cast("int").alias("k"))
-
-
-def _sem_centroid_rows(assigned: DataFrame,
-                       kcol: str = "k") -> list[tuple[int, list[float]]]:
-    """Per-cluster centroid components via posexplode + (k, pos) partial
-    aggregation, assembled DRIVER-side (K·dim rows, constant-bounded).
-    The exploded corpus collapses map-side onto K·dim groups before the
-    shuffle, so the wire carries K·dim·partitions rows regardless of
-    corpus size; the previous dim-wide column aggregate (64 rounded AVG
-    columns) was shuffle-optimal too but spent ~2 s PER Lloyd call in
-    codegen of the wide aggregate — the measured bottleneck, since every
-    caller collects the K-row result anyway."""
-    cv = roundn_col(F.avg(F.col("v").cast("double")), 4)
-    rows = (assigned
-            .select(F.col(kcol).alias("k"),
-                    F.posexplode("embedding").alias("pos", "v"))
-            .groupBy("k", "pos").agg(cv.alias("cv")).collect())
-    cents: dict[int, dict[int, float]] = {}
-    for r in rows:
-        cents.setdefault(int(r["k"]), {})[int(r["pos"])] = float(r["cv"])
-    return sorted((k, [d[p] for p in sorted(d)])
-                  for k, d in cents.items())
-
-
 def _sem_cents_1row(assigned_k: DataFrame) -> DataFrame:
     """Lloyd re-estimation as a 1-ROW relation: from a (k, embedding)
     assignment, per-(k, pos) rounded component means (posexplode +
@@ -465,9 +420,7 @@ def _sem_cents_1row(assigned_k: DataFrame) -> DataFrame:
     into ``cents: array<struct<k, centroid, cnorm>>`` sorted by k.
     Broadcast into the next assignment, this keeps the whole Lloyd tail
     INSIDE one Spark action — no driver collect between iterations.
-    cnorm folds left-to-right over the pos-sorted components, the same
-    order the driver-side math.sqrt(sum()) used, so values are
-    bit-identical to the literal path."""
+    cnorm folds left-to-right over the pos-sorted components."""
     cv = roundn_col(F.avg(F.col("v").cast("double")), 4)
     comp = (assigned_k
             .select("k", F.posexplode("embedding").alias("pos", "v"))
@@ -494,36 +447,6 @@ def _sem_chosen(cents: Column) -> Column:
         c["cnorm"].alias("cnorm"))))
 
 
-#: Above this K, assignment switches from the literal-argmin expression
-#: (K array literals inlined in the plan — Catalyst analysis grows with
-#: K and stops being viable around K~10³) to a broadcast 1-row cents
-#: relation with the SAME rounded-dist/smallest-k contract. SEM_K = 8 is
-#: fixture-sized; at real scale K grows with the corpus (the per-cluster
-#: ranking window partitions by k, so cluster count must track data
-#: volume) and the relation path is the one that survives.
-SEM_LITERAL_K_MAX = 64
-
-
-def _sem_assign_rel(spark: SparkSession, emb: DataFrame,
-                    cent_rows: list) -> DataFrame:
-    """(vec_id, embedding, k): the broadcast-relation twin of
-    :func:`_sem_assign` — centroids ride a K-row DataFrame aggregated to
-    a 1-row cents array (cnorm folded in-plan, the same left-to-right
-    order as everywhere else), argmin via :func:`_sem_chosen`. Identical
-    output to the literal path (pinned by test), viable at any K."""
-    cdf = spark.createDataFrame(
-        [(int(k), [float(v) for v in c]) for k, c in cent_rows],
-        "k int, centroid array<double>")
-    cn = F.sqrt(F.aggregate(F.col("centroid"), F.lit(0.0),
-                            lambda a, v: a + v * v))
-    rel = (cdf.select(F.struct("k", "centroid", cn.alias("cnorm"))
-                      .alias("c"))
-           .agg(F.array_sort(F.collect_list("c")).alias("cents")))
-    return (emb.crossJoin(F.broadcast(rel))
-            .select("vec_id", "embedding",
-                    _sem_chosen(F.col("cents"))["k"].alias("k")))
-
-
 def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup over the (near-dup-augmented) embedding corpus: k-means
     blocks, within-cluster cosine >= {SEM_TAU} marks duplicates; the keep
@@ -547,9 +470,8 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cand vec_id is exactly the smaller-k rule, since k is the vec_id
     # rank); the driver relabels k = rank after the K-row collect.
     # This one fused pass shuffles N rows twice (vec_id argmin, then
-    # cluster re-estimation) where the literal-argmin form shuffles
-    # only K — but it saves a whole sequential job + its top-K scan;
-    # later iterations keep the zero-shuffle literal-argmin shape.
+    # cluster re-estimation) — but it saves a whole sequential job + its
+    # top-K scan.
     cand = (emb.orderBy("vec_id").limit(SEM_K)
             .select(F.col("vec_id").alias("ck"),
                     F.col("embedding").alias("cent")))
@@ -567,8 +489,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidates' OWN vec_ids, relabeled in-plan to k = rank (the
     # struct's position in the k-sorted cents array — exactly the
     # enumerate() the driver used to do), then broadcast into the next
-    # per-row argmin. The literal-argmin helpers stay for the pinned
-    # K-scaling A/B tests.
+    # per-row argmin.
     cents1 = (_sem_cents_1row(best.select(F.col("m.ck").alias("k"),
                                           "embedding"))
               .select(F.transform(

@@ -38,15 +38,13 @@ cell partition).
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from elasticsearch_hbase_river_spark.artifacts import artifact_path, publish_dir
 from elasticsearch_hbase_river_spark.functions.determinism import roundn_col
 from elasticsearch_hbase_river_spark.operators.similarity import (
     IVF_TOP_K,
@@ -67,15 +65,9 @@ META = "_vindex_meta.json"
 _DEFAULT_ROOT = os.path.join(tempfile.gettempdir(), "river_vector_index")
 
 
-def _fingerprint(sf_dir: str) -> str:
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    return f"{st.st_size}-{st.st_mtime_ns}"
-
-
 def vindex_path_for(sf_dir: str) -> str:
-    root = os.environ.get("RIVER_VINDEX_ROOT", _DEFAULT_ROOT)
-    name = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(root, f"{name}-{_fingerprint(sf_dir)}")
+    return artifact_path(os.environ.get("RIVER_VINDEX_ROOT", _DEFAULT_ROOT),
+                         sf_dir, "embeddings")
 
 
 def _centroids_of(cells: DataFrame) -> DataFrame:
@@ -95,41 +87,32 @@ def _centroids_of(cells: DataFrame) -> DataFrame:
 
 
 def _publish(spark: SparkSession, assigned: DataFrame, path: str) -> None:
-    """Land (cell, vec_id, embedding) in the serving layout atomically.
-    One repartition on the cell key so each writer task owns whole cells;
-    ``enorm`` is precomputed at build time so queries never re-fold the
-    array for the norm."""
-    # A destination that exists BEFORE the build starts is a caller error
-    # (e.g. upsert_vectors into an occupied out_path): proceeding would end
-    # in a failed rename that silently leaves the STALE index in place while
-    # the caller believes the merge landed. Only a destination that appears
-    # DURING the build is a genuine lost race to identical content
-    # (fingerprint-keyed paths), which is safe to concede below.
-    preexisting = os.path.exists(os.path.join(path, META))
-    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-    (assigned
-     .select("cell", "vec_id", "embedding",
-             _norm(F.col("embedding")).alias("enorm"))
-     .repartition("cell")
-     .write.mode("overwrite").partitionBy("cell")
-     .parquet(os.path.join(tmp, "cells")))
-    landed = spark.read.parquet(os.path.join(tmp, "cells"))
-    (_centroids_of(landed).coalesce(1)
-     .write.mode("overwrite").parquet(os.path.join(tmp, "centroids")))
-    n_cells = spark.read.parquet(os.path.join(tmp, "centroids")).count()
-    with open(os.path.join(tmp, META), "w") as f:
-        json.dump({"n_cells": int(n_cells)}, f)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        # Swallowing the failure is only correct for a genuine lost race
-        # (a concurrent builder published the SAME fingerprint-keyed index
-        # while we were building). Pre-existing destination or any other
-        # rename failure: re-raise — stale data standing in for the merge
-        # the caller asked for is silent data loss.
-        if preexisting or not os.path.exists(os.path.join(path, META)):
-            raise
+    """Land (cell, vec_id, embedding) in the serving layout atomically
+    (``publish_dir``). One repartition on the cell key so each writer task
+    owns whole cells; ``enorm`` is precomputed at build time so queries
+    never re-fold the array for the norm. An occupied ``path`` (e.g.
+    ``upsert_vectors`` into an existing out_path) is a caller error,
+    refused before the build: conceding it would leave the STALE index
+    standing in for the merge the caller asked for."""
+    if os.path.exists(os.path.join(path, META)):
+        raise FileExistsError(
+            f"{path} already holds a vector index; publish into a fresh "
+            "path")
+
+    def _build(tmp: str) -> dict:
+        (assigned
+         .select("cell", "vec_id", "embedding",
+                 _norm(F.col("embedding")).alias("enorm"))
+         .repartition("cell")
+         .write.mode("overwrite").partitionBy("cell")
+         .parquet(os.path.join(tmp, "cells")))
+        landed = spark.read.parquet(os.path.join(tmp, "cells"))
+        (_centroids_of(landed).coalesce(1)
+         .write.mode("overwrite").parquet(os.path.join(tmp, "centroids")))
+        n_cells = spark.read.parquet(os.path.join(tmp, "centroids")).count()
+        return {"n_cells": int(n_cells)}
+
+    publish_dir(path, META, {}, _build)
 
 
 def build_vector_index(spark: SparkSession, emb: DataFrame, path: str) -> None:

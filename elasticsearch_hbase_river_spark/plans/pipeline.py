@@ -18,15 +18,18 @@ upsert is a per-id window rank, and the sink write batches per partition
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
-import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from elasticsearch_hbase_river_spark.artifacts import (
+    read_json,
+    swap_dir,
+    write_json_atomic,
+)
 from elasticsearch_hbase_river_spark.config import RiverConfig
 from elasticsearch_hbase_river_spark.operators.assemble import _esc_json
 
@@ -260,11 +263,8 @@ def _check_bands_format(bands_path: str) -> None:
     discard) the history explicitly. Old ``streaming_near_dedup``
     checkpoints have the same incompatibility (STRING grouping key) and
     must be discarded alongside."""
-    meta = os.path.join(bands_path, _BANDS_META)
-    found: object = None
-    if os.path.exists(meta):
-        with open(meta) as f:
-            found = json.load(f).get("format_version")
+    found = (read_json(os.path.join(bands_path, _BANDS_META))
+             or {}).get("format_version")
     if found != BANDS_FORMAT_VERSION:
         raise ValueError(
             f"persistent band table at {bands_path} has format_version="
@@ -276,12 +276,9 @@ def _check_bands_format(bands_path: str) -> None:
 
 
 def _stamp_bands_format(bands_path: str, ticks_since_compact: int = 0) -> None:
-    meta = os.path.join(bands_path, _BANDS_META)
-    tmp = f"{meta}.tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump({"format_version": BANDS_FORMAT_VERSION,
-                   "ticks_since_compact": ticks_since_compact}, f)
-    os.replace(tmp, meta)
+    write_json_atomic(os.path.join(bands_path, _BANDS_META),
+                      {"format_version": BANDS_FORMAT_VERSION,
+                       "ticks_since_compact": ticks_since_compact})
 
 
 #: Compact the band table every N append ticks (same decoupled-cadence
@@ -290,20 +287,13 @@ def _stamp_bands_format(bands_path: str, ticks_since_compact: int = 0) -> None:
 #: degrading every tick's table scan through small-file accretion).
 BANDS_COMPACT_EVERY = 16
 
-#: Target rows per compacted band-table file — ~25 MB parquet at the
-#: 4-column BIGINT-signature row width, a healthy split size.
-BANDS_ROWS_PER_FILE = 4_000_000
-
 
 def band_ticks_since_compact(bands_path: str) -> int:
     """Append ticks since the last compaction (0 for a fresh/absent sink;
     pre-counter metas read as 0 — the first post-upgrade append starts
     the count)."""
-    meta = os.path.join(bands_path, _BANDS_META)
-    if not os.path.exists(meta):
-        return 0
-    with open(meta) as f:
-        return int(json.load(f).get("ticks_since_compact", 0))
+    meta = read_json(os.path.join(bands_path, _BANDS_META)) or {}
+    return int(meta.get("ticks_since_compact", 0))
 
 
 def band_compaction_due(bands_path: str,
@@ -382,19 +372,18 @@ def compact_band_table(spark: SparkSession, bands_path: str,
     before = _band_files(bands_path)
     total_bytes = sum(os.path.getsize(f) for f in before)
     n_files = max(1, -(-total_bytes // bytes_per_file))
-    tmp = f"{bands_path}.compact-{uuid.uuid4().hex}"
-    (spark.read.parquet(bands_path).repartition(n_files)
-     .write.mode("overwrite").parquet(tmp))
-    _stamp_bands_format(tmp, ticks_since_compact=0)
-    # footer-only row count of the rewrite (no data scan)
-    import pyarrow.parquet as pq
 
-    rows = sum(pq.ParquetFile(f).metadata.num_rows
-               for f in _band_files(tmp))
-    old = f"{bands_path}.old-{uuid.uuid4().hex}"
-    os.rename(bands_path, old)
-    os.rename(tmp, bands_path)
-    shutil.rmtree(old, ignore_errors=True)
+    def _rewrite(tmp: str) -> int:
+        (spark.read.parquet(bands_path).repartition(n_files)
+         .write.mode("overwrite").parquet(tmp))
+        _stamp_bands_format(tmp, ticks_since_compact=0)
+        # footer-only row count of the rewrite (no data scan)
+        import pyarrow.parquet as pq
+
+        return sum(pq.ParquetFile(f).metadata.num_rows
+                   for f in _band_files(tmp))
+
+    rows = swap_dir(bands_path, _rewrite)
     return {"rows": rows, "files_before": len(before),
             "files_after": len(_band_files(bands_path))}
 

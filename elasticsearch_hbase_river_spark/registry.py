@@ -50,10 +50,7 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for mod_name in _MODULES:
-        try:
-            mod = importlib.import_module(mod_name)
-        except ModuleNotFoundError:
-            continue  # module not built yet this round
+        mod = importlib.import_module(mod_name)
         for name, fn in mod.QUERIES.items():
             assert name not in out, f"duplicate query name {name}"
             out[name] = fn
@@ -65,9 +62,6 @@ def all_oracles() -> dict[str, str]:
 
     out: dict[str, str] = {}
     for mod_name in _MODULES:
-        try:
-            mod = importlib.import_module(mod_name)
-        except ModuleNotFoundError:
-            continue
+        mod = importlib.import_module(mod_name)
         out.update(getattr(mod, "ORACLES", {}))
     return out

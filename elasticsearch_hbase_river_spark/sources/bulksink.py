@@ -40,6 +40,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import Row, StructType
 
+from elasticsearch_hbase_river_spark.artifacts import read_json, write_json_atomic
+
 MANIFEST = "_bulk_manifest.json"
 
 ES_INDEX = "river"
@@ -103,9 +105,8 @@ def _publish(path: str, messages: List[Optional[WriterCommitMessage]],
             n_docs += m.n_docs
     mpath = os.path.join(path, MANIFEST)
     state = {"bulks": [], "n_docs": 0, "epochs": []}
-    if not overwrite and os.path.exists(mpath):
-        with open(mpath) as f:
-            state = json.load(f)
+    if not overwrite:
+        state = read_json(mpath) or state
     if epoch is not None and epoch in state["epochs"]:
         for fname in new_files:
             try:
@@ -117,10 +118,7 @@ def _publish(path: str, messages: List[Optional[WriterCommitMessage]],
     state["n_docs"] += n_docs
     if epoch is not None:
         state["epochs"].append(epoch)
-    tmp = mpath + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(state, f)
-    os.replace(tmp, mpath)
+    write_json_atomic(mpath, state)
 
 
 def _discard(path: str, messages: List[Optional[WriterCommitMessage]]) -> None:

@@ -45,7 +45,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import uuid
 from collections.abc import Iterable, Iterator, Sequence
 from dataclasses import dataclass
 from typing import Any
@@ -62,6 +61,8 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import StructType
+
+from elasticsearch_hbase_river_spark.artifacts import write_json_atomic
 
 #: The canonical cells schema (sources/cells.py docstring).
 CELLS_DDL = "row_key STRING, family STRING, qualifier STRING, value STRING, ts_ms BIGINT"
@@ -113,8 +114,11 @@ def _write_region_files(df, path: str, start_idx: int) -> list[dict[str, Any]]:
     return sorted((r.asDict() for r in rows), key=lambda d: d["file"])
 
 
-def write_cellstore(cells_df, path: str, n_regions: int = 8) -> None:
-    """Materialize a cells DataFrame as a region-sharded store.
+def write_regions(cells_df, path: str, n_regions: int,
+                  start_idx: int = 0) -> list[dict[str, Any]]:
+    """Write ``cells_df`` as region files under the existing directory
+    ``path`` and return their manifest rows; publishing the manifest is
+    the caller's step.
 
     Rows are range-sharded on ``row_key`` (sorted within each region, like
     an HBase region's key range — ``repartitionByRange`` keeps equal keys
@@ -123,11 +127,15 @@ def write_cellstore(cells_df, path: str, n_regions: int = 8) -> None:
     can skip whole regions without opening them. The writer is fully
     distributed (``_write_region_files``): the relation is never
     materialized on the driver."""
-    os.makedirs(path, exist_ok=True)
     sharded = (cells_df.repartitionByRange(n_regions, "row_key")
                .sortWithinPartitions("row_key", "family", "qualifier"))
-    regions = _write_region_files(sharded, path, start_idx=0)
-    _publish_manifest(path, regions)
+    return _write_region_files(sharded, path, start_idx)
+
+
+def write_cellstore(cells_df, path: str, n_regions: int = 8) -> None:
+    """Materialize a cells DataFrame as a region-sharded store."""
+    os.makedirs(path, exist_ok=True)
+    _publish_manifest(path, write_regions(cells_df, path, n_regions))
 
 
 def append_cells(cells_df, path: str, n_regions: int = 1) -> None:
@@ -136,15 +144,13 @@ def append_cells(cells_df, path: str, n_regions: int = 1) -> None:
     distributed writer as the bulk path; manifest entries are appended
     after the existing regions."""
     existing = _load_manifest(path)
-    sharded = (cells_df.repartitionByRange(n_regions, "row_key")
-               .sortWithinPartitions("row_key", "family", "qualifier"))
     # Next index = max index already on disk + 1, NOT len(existing):
     # _write_region_files names files by partition id and skips empty
     # partitions, so a prior write can leave index gaps (e.g. files 0 and 2
     # with only 2 manifest entries). len() would then re-issue index 2 and
     # os.replace-clobber a live region.
-    new_regions = _write_region_files(sharded, path,
-                                      start_idx=_next_region_idx(existing))
+    new_regions = write_regions(cells_df, path, n_regions,
+                                start_idx=_next_region_idx(existing))
     if not new_regions:
         return
     _publish_manifest(path, existing + new_regions)
@@ -160,13 +166,10 @@ def _next_region_idx(existing: list[dict[str, Any]]) -> int:
 
 
 def _publish_manifest(path: str, regions: list[dict[str, Any]]) -> None:
-    """Atomic manifest publish (tmp + ``os.replace``), matching the region
-    files' rename discipline: a concurrent reader on a shared mount sees
-    either the old or the new manifest, never a truncated JSON."""
-    tmp = os.path.join(path, f".{MANIFEST}.{uuid.uuid4().hex}.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"regions": regions}, f)
-    os.replace(tmp, os.path.join(path, MANIFEST))
+    """Atomic manifest publish (``write_json_atomic``), matching the
+    region files' rename discipline: a concurrent reader on a shared mount
+    sees either the old or the new manifest, never a truncated JSON."""
+    write_json_atomic(os.path.join(path, MANIFEST), {"regions": regions})
 
 
 def _load_manifest(path: str) -> list[dict[str, Any]]:

@@ -52,13 +52,16 @@ instead of silently merging incompatible partials.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from elasticsearch_hbase_river_spark.artifacts import (
+    read_json,
+    write_json_atomic,
+)
 from elasticsearch_hbase_river_spark.esql import (
     DEFAULT_POLICIES,
     DEFAULT_TS_SPECS,
@@ -242,10 +245,8 @@ def plan_esql_stream(text: str) -> dict:
 
 def _stamp_state(state_dir: str, text: str, mode: str,
                  extra: Optional[dict] = None) -> None:
-    marker = os.path.join(state_dir, _META)
-    if os.path.exists(marker):
-        with open(marker) as f:
-            meta = json.load(f)
+    meta = read_json(os.path.join(state_dir, _META))
+    if meta is not None:
         if meta.get("query_sha") != _query_sha(text):
             raise ValueError(
                 f"esql stream state at {state_dir} was built for a "
@@ -259,23 +260,20 @@ def _stamp_state(state_dir: str, text: str, mode: str,
             f"{state_dir} is non-empty but carries no esql-stream marker; "
             "refusing a foreign layout")
     os.makedirs(state_dir, exist_ok=True)
-    with open(marker, "w") as f:
-        json.dump({"query_sha": _query_sha(text), "mode": mode,
-                   "text": text, **(extra or {})}, f)
+    write_json_atomic(os.path.join(state_dir, _META),
+                      {"query_sha": _query_sha(text), "mode": mode,
+                       "text": text, **(extra or {})})
 
 
 def _read_meta(state_dir: str) -> dict:
-    with open(os.path.join(state_dir, _META)) as f:
-        return json.load(f)
+    meta = read_json(os.path.join(state_dir, _META))
+    if meta is None:
+        raise ValueError(f"{state_dir} carries no esql-stream marker")
+    return meta
 
 
 def _check_state(state_dir: str, text: str) -> None:
-    marker = os.path.join(state_dir, _META)
-    if not os.path.exists(marker):
-        raise ValueError(f"{state_dir} carries no esql-stream marker")
-    with open(marker) as f:
-        meta = json.load(f)
-    if meta.get("query_sha") != _query_sha(text):
+    if _read_meta(state_dir).get("query_sha") != _query_sha(text):
         raise ValueError(
             f"esql stream state at {state_dir} belongs to a different "
             "query; refusing")

@@ -25,6 +25,8 @@ canonical cells schema.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -33,6 +35,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from elasticsearch_hbase_river_spark.artifacts import (
+    read_json,
+    write_json_atomic,
+)
 from elasticsearch_hbase_river_spark.config import RiverConfig
 from elasticsearch_hbase_river_spark.plans.pipeline import assemble_documents
 
@@ -44,7 +50,12 @@ from elasticsearch_hbase_river_spark.plans.pipeline import assemble_documents
 #: marker (same discipline as the band table's _bands_meta.json) and both
 #: writer and readers refuse a mismatch.
 EPOCHS_LAYOUT_VERSION = 2
-_EPOCHS_META = "_epochs_meta.json"
+EPOCHS_META = "_epochs_meta.json"
+
+
+def epochs_marker(mode: str = "ascii") -> dict:
+    """The epochs-directory marker content for analyzer ``mode``."""
+    return {"layout": EPOCHS_LAYOUT_VERSION, "mode": mode}
 
 
 def _check_epochs_layout(index_dir: str, mode: str | None = None) -> None:
@@ -55,17 +66,9 @@ def _check_epochs_layout(index_dir: str, mode: str | None = None) -> None:
     read as 'ascii', the only mode that existed): resuming a unicode
     stream over ascii epochs (or vice versa) would merge two
     tokenizations into one index with no error anywhere."""
-    import json as _json
-    import os as _os
-
-    meta = _os.path.join(index_dir, _EPOCHS_META)
-    found: object = None
-    found_mode = "ascii"
-    if _os.path.exists(meta):
-        with open(meta) as f:
-            m = _json.load(f)
-        found = m.get("layout")
-        found_mode = m.get("mode", "ascii")
+    m = read_json(os.path.join(index_dir, EPOCHS_META)) or {}
+    found = m.get("layout")
+    found_mode = m.get("mode", "ascii")
     if found == EPOCHS_LAYOUT_VERSION:
         if mode is not None and found_mode != mode:
             raise ValueError(
@@ -75,11 +78,11 @@ def _check_epochs_layout(index_dir: str, mode: str | None = None) -> None:
                 "merged index. Rebuild into a fresh directory (and "
                 "discard the checkpoint) or match the mode.")
         return
-    if found is None and not _os.path.exists(index_dir):
+    if found is None and not os.path.exists(index_dir):
         return  # nothing written yet; the writer will stamp it
     if found is None:
-        entries = [e for e in _os.listdir(index_dir)
-                   if not e.startswith(".") and e != _EPOCHS_META]
+        entries = [e for e in os.listdir(index_dir)
+                   if not e.startswith(".") and e != EPOCHS_META]
         if not entries:
             return
         # A populated but marker-less directory that already HAS the v2
@@ -92,15 +95,15 @@ def _check_epochs_layout(index_dir: str, mode: str | None = None) -> None:
         # additionally require the epoch=N partition children under both,
         # the shape only this writer produces.
         def _has_epoch_children(sub: str) -> bool:
-            p = _os.path.join(index_dir, sub)
-            return _os.path.isdir(p) and any(
-                e.startswith("epoch=") for e in _os.listdir(p))
+            p = os.path.join(index_dir, sub)
+            return os.path.isdir(p) and any(
+                e.startswith("epoch=") for e in os.listdir(p))
 
         if (all(e in ("postings", "docs") for e in entries)
                 and not any(e.startswith("epoch=") for e in entries)
                 and _has_epoch_children("postings")
                 and _has_epoch_children("docs")):
-            _stamp_epochs_layout(index_dir)
+            stamp_epochs_layout(index_dir)
             return
     raise ValueError(
         f"index epochs directory {index_dir} has layout={found!r}, engine "
@@ -110,17 +113,13 @@ def _check_epochs_layout(index_dir: str, mode: str | None = None) -> None:
         "checkpoint), or migrate the old epochs explicitly.")
 
 
-def _stamp_epochs_layout(index_dir: str, mode: str = "ascii") -> None:
-    import json as _json
-    import os as _os
-    import uuid as _uuid
+def stamp_epochs_layout(index_dir: str, mode: str = "ascii") -> None:
+    """Mark ``index_dir`` (created if absent) as a current-layout epochs
+    directory written with analyzer ``mode``."""
+    os.makedirs(index_dir, exist_ok=True)
+    write_json_atomic(os.path.join(index_dir, EPOCHS_META),
+                      epochs_marker(mode))
 
-    _os.makedirs(index_dir, exist_ok=True)
-    meta = _os.path.join(index_dir, _EPOCHS_META)
-    tmp = f"{meta}.tmp-{_uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        _json.dump({"layout": EPOCHS_LAYOUT_VERSION, "mode": mode}, f)
-    _os.replace(tmp, meta)
 
 CELLS_SCHEMA = StructType([
     StructField("row_key", StringType()),
@@ -186,8 +185,7 @@ def start_river_stream(
                        sink_dir, config.batch_size)
 
     writer = (
-        assemble_and_stream(cells, config)
-        .writeStream
+        cells.writeStream
         .foreachBatch(upsert_batch)
         .option("checkpointLocation", checkpoint_dir)
     )
@@ -248,13 +246,6 @@ def start_connector_river(
         writer = writer.trigger(
             processingTime=f"{config.interval_ms} milliseconds")
     return writer.start()
-
-
-def assemble_and_stream(cells: DataFrame, config: RiverConfig) -> DataFrame:
-    """Hook point: the per-batch transform happens in foreachBatch (document
-    assembly needs a full-row group); the stream itself stays untransformed
-    cells. Kept separate so windowed variants can pre-aggregate here."""
-    return cells
 
 
 def streaming_event_rollup(spark: SparkSession, source_dir: str) -> DataFrame:
@@ -416,98 +407,6 @@ def streaming_near_dedup(spark: SparkSession, docs_source_dir: str,
     )
 
 
-def streaming_latest_version_v2(spark: SparkSession, source_dir: str,
-                                files_per_trigger: int = 16,
-                                state_ttl_ms: int | None = None,
-                                allow_fallback: bool = True) -> DataFrame:
-    """The latest-version-wins operator on the arbitrary-state V2 API
-    (``transformWithStateInPandas``, Spark 4): typed ValueState per row
-    key with optional TTL — the state-hygiene knob the V1 API lacks (an
-    abandoned key's state expires instead of living forever; at 100 TB
-    with churning row keys that difference IS the state-store size).
-
-    Same semantics as :func:`streaming_latest_version`; both are kept —
-    V1 (`applyInPandasWithState`) for the classic shape, V2 as the
-    forward path. Processor class is defined in-function so cloudpickle
-    ships it by value to Python workers.
-
-    NB: the V2 operator requires the RocksDB state store (also the right
-    provider at scale: incremental checkpoints, state larger than heap);
-    this sets the session's provider conf before planning the query. Its
-    control channel also needs ``google.protobuf`` at runtime — a
-    capability probe decides the path: where protobuf is present the query
-    plans on transformWithStateInPandas; where it's absent (this
-    container) the call degrades to the V1 ``applyInPandasWithState``
-    implementation, which has the identical output contract
-    (``_LATEST_OUT_SCHEMA``) and identical latest-version semantics —
-    only the TTL knob has no V1 equivalent, so a TTL request without
-    protobuf raises rather than silently dropping state hygiene.
-    ``allow_fallback=False`` turns the degradation into an ImportError
-    for deployments that require the V2 state store specifically."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as e:
-        if not allow_fallback:
-            raise ImportError(
-                "transformWithStateInPandas needs google.protobuf (not "
-                "installed in this environment); use "
-                "streaming_latest_version (V1) instead") from e
-        if state_ttl_ms is not None:
-            raise ImportError(
-                "state TTL requires the V2 state API (google.protobuf "
-                "missing) — the V1 fallback cannot honor ttlDurationMs"
-            ) from e
-        return streaming_latest_version(spark, source_dir, files_per_trigger)
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle,
-    )
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
-    class LatestVersion(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "latest", "ts_ms LONG, n_versions LONG",
-                ttlDurationMs=state_ttl_ms)
-
-        def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            (row_key,) = key
-            if self._state.exists():
-                latest, versions = self._state.get()
-            else:
-                latest, versions = None, 0
-            batch_rows = 0
-            for pdf in rows:
-                batch_rows += len(pdf)
-                versions += len(pdf)
-                batch_max = int(pdf["ts_ms"].max())
-                latest = batch_max if latest is None else max(latest, batch_max)
-            self._state.update((int(latest), int(versions)))
-            yield pd.DataFrame({
-                "row_key": [row_key], "latest_ts_ms": [int(latest)],
-                "n_versions": [int(versions)], "batch_rows": [batch_rows]})
-
-        def close(self) -> None:
-            pass
-
-    cells = read_cells_stream(spark, source_dir, files_per_trigger)
-    return (
-        cells.groupBy("row_key")
-        .transformWithStateInPandas(
-            LatestVersion(),
-            outputStructType=_LATEST_OUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 _LATEST_STATE_SCHEMA = "row_key STRING, ts_ms LONG, n_versions LONG"
 _LATEST_OUT_SCHEMA = ("row_key STRING, latest_ts_ms LONG, n_versions LONG, "
                       "batch_rows LONG")
@@ -625,7 +524,7 @@ def start_index_stream(spark: SparkSession, docs_source_dir: str,
         # mode-mismatched) epochs directory BEFORE writing beside it,
         # then stamp the marker with this stream's analyzer mode.
         _check_epochs_layout(index_dir, mode=mode)
-        _stamp_epochs_layout(index_dir, mode=mode)
+        stamp_epochs_layout(index_dir, mode=mode)
 
         w = Window.partitionBy("doc_id").orderBy(
             F.col("ver").desc_nulls_last(),
@@ -701,23 +600,17 @@ def read_epoch_docs(spark: SparkSession, index_dir: str) -> DataFrame:
 # discipline as start_index_stream, for the dynamic-field search surface.
 
 NESTED_EPOCHS_LAYOUT_VERSION = 1
-_NESTED_EPOCHS_META = "_nested_epochs_meta.json"
+NESTED_EPOCHS_META = "_nested_epochs_meta.json"
 
 
 def _check_nested_epochs_layout(index_dir: str) -> None:
-    import json as _json
-    import os as _os
-
-    meta = _os.path.join(index_dir, _NESTED_EPOCHS_META)
-    found: object = None
-    if _os.path.exists(meta):
-        with open(meta) as f:
-            found = _json.load(f).get("layout")
+    found = (read_json(os.path.join(index_dir, NESTED_EPOCHS_META))
+             or {}).get("layout")
     if found == NESTED_EPOCHS_LAYOUT_VERSION:
         return
     if found is None and (
-            not _os.path.exists(index_dir)
-            or not any(e for e in _os.listdir(index_dir)
+            not os.path.exists(index_dir)
+            or not any(e for e in os.listdir(index_dir)
                        if not e.startswith("."))):
         return
     raise ValueError(
@@ -727,16 +620,9 @@ def _check_nested_epochs_layout(index_dir: str) -> None:
 
 
 def _stamp_nested_epochs_layout(index_dir: str) -> None:
-    import json as _json
-    import os as _os
-    import uuid as _uuid
-
-    _os.makedirs(index_dir, exist_ok=True)
-    meta = _os.path.join(index_dir, _NESTED_EPOCHS_META)
-    tmp = f"{meta}.tmp-{_uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        _json.dump({"layout": NESTED_EPOCHS_LAYOUT_VERSION}, f)
-    _os.replace(tmp, meta)
+    os.makedirs(index_dir, exist_ok=True)
+    write_json_atomic(os.path.join(index_dir, NESTED_EPOCHS_META),
+                      {"layout": NESTED_EPOCHS_LAYOUT_VERSION})
 
 
 def start_nested_index_stream(spark: SparkSession, cells_source_dir: str,

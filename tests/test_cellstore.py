@@ -5,6 +5,7 @@ incremental-scanner streaming source (HBaseParser.java:258-280)."""
 
 from __future__ import annotations
 
+import os
 from collections import Counter
 
 import pytest
@@ -206,3 +207,28 @@ def test_append_after_sparse_write_loses_nothing(spark, tmp_path):
     got = Counter(map(tuple, _read(spark, path).collect()))
     want = Counter(map(tuple, old.unionByName(new).collect()))
     assert got == want
+
+
+def test_cached_scan_store_ignores_a_crashed_builds_leftovers(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """Regression: ``q_cellstore_scan`` built its cached store in a fixed
+    ``<store>.building`` directory, so concurrent builders shared it and a
+    crashed build's leftovers were renamed into the published store. Each
+    build now gets its own tmp directory; a stale ``.building`` sibling is
+    never published."""
+    from elasticsearch_hbase_river_spark.operators import scan
+
+    cellstore.register(spark)
+    monkeypatch.setattr("tempfile.tempdir", str(tmp_path))
+    store = scan.cellstore_path_for(sf_dir)
+    os.makedirs(store + ".building")
+    with open(os.path.join(store + ".building", "stale"), "w") as f:
+        f.write("left by a crashed build")
+
+    got = scan.q_cellstore_scan(spark, sf_dir)
+    assert not os.path.exists(os.path.join(store, "stale"))
+    want = scan.q_incremental_scan(spark, sf_dir)
+    assert (Counter(map(tuple, got.collect()))
+            == Counter(map(tuple, want.collect())))
+    assert sorted(os.listdir(tmp_path)) == sorted(
+        os.path.basename(p) for p in (store, store + ".building"))

@@ -311,3 +311,30 @@ def test_stream_partial_agg_kql_dtype_dispatch(spark, tmp_path):
     # numeric equality: only 404.0 (an analyzed-text match would also
     # count 404.5, whose stringified tokens contain "404")
     assert got.n404 == 1
+
+
+def test_interrupted_marker_stamp_does_not_poison_state(tmp_path,
+                                                        monkeypatch):
+    """Regression: the state marker was written in place, so a write
+    interrupted mid-``json.dump`` left a truncated marker and every later
+    stamp failed with JSONDecodeError. The marker is now replaced whole."""
+    import json
+
+    from elasticsearch_hbase_river_spark.streaming import esql_stream as es
+
+    state = str(tmp_path / "state")
+    real_dump = json.dump
+    calls = []
+
+    def torn_once(obj, f, **kw):
+        if not calls:
+            calls.append(obj)
+            f.write('{"query_sha": "')
+            raise OSError("disk full")
+        return real_dump(obj, f, **kw)
+
+    monkeypatch.setattr(json, "dump", torn_once)
+    with pytest.raises(OSError, match="disk full"):
+        es._stamp_state(state, MERGE_TEXT, "merge")
+    es._stamp_state(state, MERGE_TEXT, "merge")
+    assert es._read_meta(state)["query_sha"] == es._query_sha(MERGE_TEXT)

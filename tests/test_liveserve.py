@@ -24,7 +24,7 @@ def _write_epoch(spark, epochs_dir: str, epoch: int, docs) -> None:
         analyze_tokens,
     )
     from elasticsearch_hbase_river_spark.streaming.river_stream import (
-        _stamp_epochs_layout,
+        stamp_epochs_layout,
     )
 
     df = spark.createDataFrame(docs, "doc_id long, text string")
@@ -33,7 +33,7 @@ def _write_epoch(spark, epochs_dir: str, epoch: int, docs) -> None:
     (df.select("doc_id",
                F.size(analyze_tokens(F.col("text"))).cast("long").alias("dl"))
      .write.mode("overwrite").parquet(f"{epochs_dir}/docs/epoch={epoch}"))
-    _stamp_epochs_layout(epochs_dir)
+    stamp_epochs_layout(epochs_dir)
 
 
 def test_live_bm25_equals_rebuild_across_epochs(spark, tmp_path):

@@ -193,36 +193,3 @@ class TestSparkTwinAgreement:
         for q in self.CASES:
             if q:
                 assert got[q] == normalize_field_py(q, "::"), q
-
-
-def test_sem_assign_literal_and_relation_paths_agree(spark):
-    """SemDeDup assignment has two physical paths — literal argmin
-    (K <= SEM_LITERAL_K_MAX, centroids inlined as array literals) and
-    the broadcast 1-row cents relation (any K). Same rounded-dist /
-    smallest-k contract: identical (vec_id, k) on every row, including
-    an exact-tie vector equidistant to two centroids."""
-    from pyspark.sql import functions as F
-
-    from elasticsearch_hbase_river_spark.operators.similarity import (
-        _sem_assign,
-        _sem_assign_rel,
-    )
-
-    cents = [(0, [0.0, 0.0, 0.0, 0.0]), (1, [2.0, 0.0, 0.0, 0.0]),
-             (2, [0.0, 2.0, 0.0, 0.0]), (3, [0.0, 0.0, 2.0, 0.0])]
-    rows = [
-        (1, [0.1, 0.0, 0.0, 0.0]),   # near k=0
-        (2, [1.9, 0.1, 0.0, 0.0]),   # near k=1
-        (3, [1.0, 0.0, 0.0, 0.0]),   # exact tie k=0 vs k=1 -> smallest k
-        (4, [2.0, 2.0, 0.0, 0.0]),   # tie k=1 vs k=2 (d=4) -> k=1
-        (5, [50.0, 50.0, 50.0, 50.0]),
-    ]
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>")
-    lit_out = sorted(
-        (r.vec_id, r.k) for r in _sem_assign(emb, cents).collect())
-    rel_out = sorted(
-        (r.vec_id, r.k)
-        for r in _sem_assign_rel(spark, emb, cents).collect())
-    assert lit_out == rel_out
-    assert dict(lit_out)[3] == 0 and dict(lit_out)[4] == 1

@@ -55,7 +55,7 @@ def main() -> None:
     )
     from elasticsearch_hbase_river_spark.sources.tables import load_table
     from elasticsearch_hbase_river_spark.streaming.river_stream import (
-        _stamp_epochs_layout,
+        stamp_epochs_layout,
     )
 
     def gc() -> None:
@@ -112,7 +112,7 @@ def main() -> None:
                           F.size(analyze_tokens(F.col("text")))
                           .cast("long").alias("dl"))
              .write.mode("overwrite").parquet(f"{epochs}/docs/epoch={e}"))
-            _stamp_epochs_layout(epochs)
+            stamp_epochs_layout(epochs)
             append_sec = round(time.time() - t0, 2)
             serve, rows = timed(
                 lambda: lv.bm25_live(spark, base, epochs, BM25_TERMS))
