@@ -10,6 +10,9 @@ Each query is materialized with the noop sink (full execution, no driver
 collect). AQE is on — this is the production-shaped config, not a tuned
 demo: shuffle partitions sized to cores, broadcast joins left to Catalyst
 plus explicit hints in the operators themselves.
+
+``bench_builder()`` and ``prebuild()`` are the session and fixture prep the
+tools in ``tools/`` share with this harness.
 """
 
 from __future__ import annotations
@@ -195,10 +198,11 @@ HEADLINE = (
 )
 
 
-def main() -> None:
+def bench_builder():
+    """The bench-shaped ``SparkSession.Builder`` (shared by the tools)."""
     from pyspark.sql import SparkSession
 
-    spark = (
+    return (
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName("river-bench")
         .config("spark.sql.shuffle.partitions", str(CPUS))
@@ -227,8 +231,50 @@ def main() -> None:
                 "-XX:ReservedCodeCacheSize=512m")
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
-        .getOrCreate()
     )
+
+
+def prebuild(spark, sf_dir: str) -> dict:
+    """Build the 7 persisted fixtures the registry serves from, each timed
+    as its own line item (seconds, keyed as in the bench JSON).
+
+    In the product the streaming river maintains these artifacts
+    continuously, so their build is a maintenance cost, never charged to
+    the first query that reads them (before r11 the first q_esql_stream_*
+    timing absorbed a ~4-10 s drain; see OPTIMIZATION_r11.md)."""
+    from elasticsearch_hbase_river_spark.operators.esql_pack import (
+        ensure_esql_stream_state,
+        ensure_esql_stream_ts_state,
+    )
+    from elasticsearch_hbase_river_spark.operators.indexed_search import ensure_index
+    from elasticsearch_hbase_river_spark.operators.liveserve import (
+        ensure_live_epochs,
+    )
+    from elasticsearch_hbase_river_spark.operators.nesteddoc import (
+        ensure_nested_index,
+        ensure_nested_live_epochs,
+    )
+    from elasticsearch_hbase_river_spark.operators.vector_index import (
+        ensure_vector_index,
+    )
+
+    line_items = {}
+    for key, build in (
+            ("index_build_sec", ensure_index),
+            ("vindex_build_sec", ensure_vector_index),
+            ("nested_index_build_sec", ensure_nested_index),
+            ("live_epochs_build_sec", ensure_live_epochs),
+            ("nested_live_build_sec", ensure_nested_live_epochs),
+            ("esql_stream_build_sec", ensure_esql_stream_state),
+            ("esql_stream_ts_build_sec", ensure_esql_stream_ts_state)):
+        t0 = time.time()
+        build(spark, sf_dir)
+        line_items[key] = round(time.time() - t0, 3)
+    return line_items
+
+
+def main() -> None:
+    spark = bench_builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     from elasticsearch_hbase_river_spark.registry import all_queries
@@ -243,19 +289,10 @@ def main() -> None:
     # Warm up the JVM / parquet footers once so q1 isn't charged for JIT.
     spark.read.parquet(f"{SF_DIR}/events.parquet").count()
 
-    # Materialize the search index once. In the product this artifact is
-    # maintained continuously by the streaming river (the reference's whole
-    # job); its build cost is an offline/maintenance cost, reported as its
-    # own line item rather than charged to the term queries that read it.
-    # The builds run COLD by default (fresh per-run index roots) so the
-    # line item is a real measurement, not 0.0 from a fingerprint-keyed
-    # directory left by an earlier process; export RIVER_INDEX_REUSE=1 to
-    # keep the warm-serving behavior instead.
-    from elasticsearch_hbase_river_spark.operators.indexed_search import ensure_index
-    from elasticsearch_hbase_river_spark.operators.vector_index import (
-        ensure_vector_index,
-    )
-
+    # The fixture builds run COLD by default (fresh per-run index roots) so
+    # their line items are real measurements, not 0.0 from a
+    # fingerprint-keyed directory left by an earlier process; export
+    # RIVER_INDEX_REUSE=1 to keep the warm-serving behavior instead.
     if not os.environ.get("RIVER_INDEX_REUSE"):
         import atexit
         import shutil
@@ -268,51 +305,7 @@ def main() -> None:
         os.environ.setdefault("RIVER_INDEX_ROOT", os.path.join(cold, "s"))
         os.environ.setdefault("RIVER_VINDEX_ROOT", os.path.join(cold, "v"))
 
-    from elasticsearch_hbase_river_spark.operators.liveserve import (
-        ensure_live_epochs,
-    )
-    from elasticsearch_hbase_river_spark.operators.nesteddoc import (
-        ensure_nested_index,
-        ensure_nested_live_epochs,
-    )
-
-    t0 = time.time()
-    ensure_index(spark, SF_DIR)
-    index_build = round(time.time() - t0, 3)
-    t0 = time.time()
-    ensure_vector_index(spark, SF_DIR)
-    vindex_build = round(time.time() - t0, 3)
-    t0 = time.time()
-    ensure_nested_index(spark, SF_DIR)
-    nested_build = round(time.time() - t0, 3)
-    t0 = time.time()
-    ensure_live_epochs(spark, SF_DIR)
-    live_epochs_build = round(time.time() - t0, 3)
-    t0 = time.time()
-    # without this prebuild, q_nested_field_search_live's first timing
-    # silently absorbed the churn-fixture build every other fixture-backed
-    # query gets charged separately
-    ensure_nested_live_epochs(spark, SF_DIR)
-    nested_live_build = round(time.time() - t0, 3)
-    # Same discipline for the drained-stream fixtures (r11): the state the
-    # two q_esql_stream_* queries serve from is maintained continuously by
-    # the streaming river in the product; its one-time build (write source
-    # files, start a checkpointed stream, drain the micro-batch epochs) is
-    # a maintenance cost reported as its own line item, not charged to the
-    # first query that reads the state. Old accounting (r10 and earlier):
-    # the first q_esql_stream_* timing absorbed the whole drain (~4-10 s);
-    # see OPTIMIZATION_r11.md for the before/after numbers.
-    from elasticsearch_hbase_river_spark.operators.esql_pack import (
-        ensure_esql_stream_state,
-        ensure_esql_stream_ts_state,
-    )
-
-    t0 = time.time()
-    ensure_esql_stream_state(spark, SF_DIR)
-    esql_stream_build = round(time.time() - t0, 3)
-    t0 = time.time()
-    ensure_esql_stream_ts_state(spark, SF_DIR)
-    esql_stream_ts_build = round(time.time() - t0, 3)
+    line_items = prebuild(spark, SF_DIR)
 
     import gc
 
@@ -370,13 +363,7 @@ def main() -> None:
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else SF_DIR,
         "cpus": CPUS,
-        "index_build_sec": index_build,
-        "vindex_build_sec": vindex_build,
-        "nested_index_build_sec": nested_build,
-        "live_epochs_build_sec": live_epochs_build,
-        "nested_live_build_sec": nested_live_build,
-        "esql_stream_build_sec": esql_stream_build,
-        "esql_stream_ts_build_sec": esql_stream_ts_build,
+        **line_items,
         "connector_demo_sec": connector_demo,
     }))
     spark.stop()

@@ -20,9 +20,9 @@ executor count.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -30,26 +30,37 @@ from pyspark.sql import functions as F
 class BulkWriteResult:
     rows_acked: int
     rows_failed: int
+    max_doc_ts_ms: int | None   # of the acked rows; None when none landed
 
 
 def write_bulk(docs: DataFrame, path: str, batch_size: int = 100,
-               mode: str = "append", partition_by_day: bool = False) -> None:
+               mode: str = "append",
+               partition_by_day: bool = False) -> BulkWriteResult:
     """Append documents as parquet with at most ``batch_size`` rows per file
     (the bulk-request analog, HBaseParser.java:137-162).
+
+    The row count and max ``doc_ts_ms`` of what landed come from the write
+    job itself (``DataFrame.observe``), the bulk-response analog — no
+    second pass over ``docs`` or the sink.
 
     ``partition_by_day`` lays the sink out as ``dt=YYYY-MM-DD/`` directories
     derived from ``doc_ts_ms`` — at scale this is what makes the watermark
     lookup (max doc_ts) and any time-ranged read partition-pruned instead
     of a full-table scan."""
-    w = docs
+    obs = Observation()
+    w = docs.observe(obs, F.count(F.lit(1)).alias("n"),
+                     F.max("doc_ts_ms").alias("mx"))
     if partition_by_day:
-        w = docs.withColumn(
+        w = w.withColumn(
             "dt", F.date_format(F.timestamp_millis(F.col("doc_ts_ms")),
                                 "yyyy-MM-dd"))
     writer = w.write.option("maxRecordsPerFile", batch_size).mode(mode)
     if partition_by_day:
         writer = writer.partitionBy("dt")
     writer.parquet(path)
+    m = obs.get
+    return BulkWriteResult(rows_acked=m["n"], rows_failed=0,
+                           max_doc_ts_ms=m["mx"])
 
 
 ES_INDEX = "river"      # hbase.index config analog, HBaseRiver.java:41,144
@@ -102,15 +113,16 @@ def write_with_dead_letter(docs: DataFrame, sink_path: str,
     to the dead-letter table with a reason column; everything else is
     bulk-appended to the sink. Failed keys are excluded from the ack set,
     so delete-after-read never drops source rows that didn't land
-    (HBaseParser.java:166-177)."""
+    (HBaseParser.java:166-177). ``rows_acked`` and ``max_doc_ts_ms``
+    describe the acked write alone."""
     docs = docs.persist()
     try:
         acked, failed = split_failed(docs, reject_when)
-        write_bulk(acked, sink_path, batch_size)
+        res = write_bulk(acked, sink_path, batch_size)
         n_failed = failed.count()
         if n_failed:
             (failed.withColumn("reject_reason", F.lit(reason))
                    .write.mode("append").parquet(dead_letter_path))
-        return BulkWriteResult(rows_acked=acked.count(), rows_failed=n_failed)
+        return replace(res, rows_failed=n_failed)
     finally:
         docs.unpersist()

@@ -128,14 +128,20 @@ def _doc_id_col(config: RiverConfig) -> F.Column:
     return F.get_json_object("doc_json", f"$['{family}']['{leaf}']")
 
 
+def scope_cells(cells: DataFrame, config: RiverConfig) -> DataFrame:
+    """The configured family/qualifiers restriction of the scan
+    (HBaseParser.java:89-100), shared by the batch tick and both streams."""
+    if config.family:
+        cells = cells.filter(F.col("family") == config.family)
+    if config.qualifiers:
+        cells = cells.filter(F.col("qualifier").isin(*config.qualifiers))
+    return cells
+
+
 def river_tick_plan(cells: DataFrame, config: RiverConfig,
                     watermark_ms: int) -> DataFrame:
     """The full §3.2 tick as one lazy plan: filter -> assemble -> upsert."""
-    scan = cells.filter(F.col("ts_ms") > F.lit(watermark_ms))
-    if config.family:
-        scan = scan.filter(F.col("family") == config.family)
-    if config.qualifiers:
-        scan = scan.filter(F.col("qualifier").isin(*config.qualifiers))
+    scan = scope_cells(cells, config).filter(F.col("ts_ms") > F.lit(watermark_ms))
     docs = assemble_documents(scan, config)
     # upsert-by-id: latest doc_ts wins (HBaseParser.java:145-159 + watermark)
     w = Window.partitionBy("doc_id").orderBy(F.col("doc_ts_ms").desc(),
@@ -174,8 +180,10 @@ class TickResult:
 
 def sink_max_ts(spark: SparkSession, sink_path: str) -> int:
     """Watermark lookup from the sink (HBaseParser.java:258-280): max+1,
-    cold-start 0. A 1-row agg on the sink table's stats — with parquet this
-    reads footer min/max only."""
+    cold-start 0. On an existing sink this is 3 jobs: the parquet read's
+    schema-inference job, then a two-stage aggregate that reads every
+    file's ``doc_ts_ms`` column (parquet aggregate pushdown is off by
+    default, so footer min/max stats do not answer it)."""
     if not os.path.exists(sink_path):
         return 0
     mx = spark.read.parquet(sink_path).agg(F.max("doc_ts_ms")).collect()[0][0]
@@ -188,10 +196,20 @@ def run_once(spark: SparkSession, cells: DataFrame, config: RiverConfig,
     """One scheduler tick (HBaseParser.java:82-128): incremental scan from
     the sink watermark, transform, upsert-append to the sink.
 
+    Watermark rule: the sink is read once, ``wm = sink_max_ts`` before the
+    write. An idle tick (no in-scope cell above ``wm``) writes nothing and
+    keeps ``wm``. Otherwise the write job itself reports the count and max
+    ``doc_ts_ms`` of the rows it appended, and the new watermark is
+    ``max(wm, max + 1)``: what a post-write ``sink_max_ts`` would return,
+    since the new sink is the old one plus exactly those rows. That holds
+    for a single writer per sink, as in the reference (one river thread
+    per index).
+
     With a ``reject_when`` predicate (the engine analog of bulk-response
     failures), failed rows are diverted to ``dead_letter_path`` and —
     exactly like the reference's failed-key exclusion,
-    HBaseParser.java:166-177 — never counted as delete candidates."""
+    HBaseParser.java:166-177 — never counted as delete candidates, and
+    never move the watermark."""
     from elasticsearch_hbase_river_spark.operators.bulk_sink import (
         write_bulk, write_with_dead_letter,
     )
@@ -203,33 +221,22 @@ def run_once(spark: SparkSession, cells: DataFrame, config: RiverConfig,
         # HBaseRiver.java:223-231 + HBaseParser.java:258-280).
         raise ValueError("custom_mapping must retain doc_ts_ms "
                          "(the incremental watermark column)")
+    if reject_when is not None and dead_letter_path is None:
+        raise ValueError("reject_when requires dead_letter_path")
     wm = sink_max_ts(spark, sink_path)
+    if scope_cells(cells, config).filter(F.col("ts_ms") > F.lit(wm)).isEmpty():
+        return TickResult(rows_indexed=0, watermark_ms=wm, deleted_keys=0)
     out = apply_sink_mapping(river_tick_plan(cells, config, wm), config)
-    if reject_when is not None:
-        if dead_letter_path is None:
-            raise ValueError("reject_when requires dead_letter_path")
+    if reject_when is None:
+        res = write_bulk(out, sink_path, config.batch_size)
+    else:
         res = write_with_dead_letter(out, sink_path, dead_letter_path,
                                      reject_when, reason="bulk item failed",
                                      batch_size=config.batch_size)
-        indexed = res.rows_acked
-    else:
-        # Count the tick's OWN output (cached across write+count), never a
-        # re-scan of the whole sink — the sink is O(history), the tick delta
-        # is O(new rows), and re-reading history per tick is a driver-side
-        # scale-killer at 100 TB. Serialized memory-first with disk spill
-        # (SCALE.md §9a): the bare .persist() default is DESERIALIZED
-        # memory, which pinned the tick-sized delta in heap and OOM'd the
-        # 60M-event campaign on a default 1 GB driver (§3t).
-        from pyspark import StorageLevel
-
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
-        write_bulk(out, sink_path, config.batch_size)
-        indexed = out.count()
-        out.unpersist()
-    deleted = indexed if config.delete_old else 0
-    return TickResult(rows_indexed=indexed,
-                      watermark_ms=sink_max_ts(spark, sink_path),
-                      deleted_keys=deleted)
+    mx = res.max_doc_ts_ms
+    return TickResult(rows_indexed=res.rows_acked,
+                      watermark_ms=wm if mx is None else max(wm, mx + 1),
+                      deleted_keys=res.rows_acked if config.delete_old else 0)
 
 
 def dedup_against_sink(spark: SparkSession, new_docs: DataFrame,

@@ -29,7 +29,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import (
     ArrayType, FloatType, IntegerType, LongType, StringType, StructField,
     StructType,
@@ -40,7 +40,10 @@ from elasticsearch_hbase_river_spark.artifacts import (
     write_json_atomic,
 )
 from elasticsearch_hbase_river_spark.config import RiverConfig
-from elasticsearch_hbase_river_spark.plans.pipeline import assemble_documents
+from elasticsearch_hbase_river_spark.plans.pipeline import (
+    assemble_documents,
+    scope_cells,
+)
 
 #: Epochs-directory layout version. v2 = index_dir/{postings,docs}/epoch=N
 #: (the doc-manifest layout); v1 (pre-round-5) was index_dir/epoch=N with
@@ -144,6 +147,16 @@ def read_cells_stream(spark: SparkSession, source_dir: str,
     )
 
 
+def _start(writer: DataStreamWriter, config: RiverConfig,
+           available_now: bool) -> StreamingQuery:
+    """Drain-and-stop, or trigger every ``config.interval_ms`` like the
+    reference's scheduler (HBaseParser.java:49-73)."""
+    if available_now:
+        return writer.trigger(availableNow=True).start()
+    return writer.trigger(
+        processingTime=f"{config.interval_ms} milliseconds").start()
+
+
 def start_river_stream(
     spark: SparkSession,
     config: RiverConfig,
@@ -161,11 +174,7 @@ def start_river_stream(
     micro-batches land as Elasticsearch bulk-request files (action/source
     line pairs, one file per ≤ batchSize docs), the closest file-sink
     analog of the reference's per-batch bulk RPC (HBaseParser.java:162)."""
-    cells = read_cells_stream(spark, source_dir)
-    if config.family:
-        cells = cells.filter(F.col("family") == config.family)
-    if config.qualifiers:
-        cells = cells.filter(F.col("qualifier").isin(*config.qualifiers))
+    cells = scope_cells(read_cells_stream(spark, source_dir), config)
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
         # foreachBatch = the bulk writer (HBaseParser.java:135-162). Within
@@ -189,11 +198,7 @@ def start_river_stream(
         .foreachBatch(upsert_batch)
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{config.interval_ms} milliseconds")
-    return writer.start()
+    return _start(writer, config, available_now)
 
 
 def start_connector_river(
@@ -215,17 +220,12 @@ def start_connector_river(
     Family/qualifier restrictions from the config apply as stream filters
     (the batch path pushes them into the store; a streaming scan serves
     the delta, which is already the narrow set)."""
-    from elasticsearch_hbase_river_spark.plans.pipeline import assemble_documents
     from elasticsearch_hbase_river_spark.sources import bulksink, cellstore
 
     cellstore.register(spark)
     bulksink.register(spark)
-    cells = (spark.readStream.format("cellstore")
-             .option("path", store_path).load())
-    if config.family:
-        cells = cells.filter(F.col("family") == config.family)
-    if config.qualifiers:
-        cells = cells.filter(F.col("qualifier").isin(*config.qualifiers))
+    cells = scope_cells(spark.readStream.format("cellstore")
+                        .option("path", store_path).load(), config)
 
     def publish(batch_df: DataFrame, batch_id: int) -> None:
         docs = (assemble_documents(batch_df, config)
@@ -240,12 +240,7 @@ def start_connector_river(
 
     writer = (cells.writeStream.foreachBatch(publish)
               .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(
-            processingTime=f"{config.interval_ms} milliseconds")
-    return writer.start()
+    return _start(writer, config, available_now)
 
 
 def streaming_event_rollup(spark: SparkSession, source_dir: str) -> DataFrame:

@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import json
+import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -30,16 +32,46 @@ def test_flagship_documents_are_valid_sorted_json(spark, sf_dir):
         assert r.doc_id == r.row_key
 
 
+def _sink_files(sink: str) -> list[str]:
+    return sorted(f for f in os.listdir(sink) if f.startswith("part-"))
+
+
+def _jobs_run(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` submits from this thread."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count guard")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_tick_is_incremental(spark, sf_dir, cfg, tmp_path):
     cells = cells_from_events(spark, sf_dir)
     sink = str(tmp_path / "sink")
     r1 = run_once(spark, cells, cfg, sink)
     assert r1.rows_indexed == 1000
     assert r1.deleted_keys == 1000  # delete_old: acked rows eligible
+    # the observed watermark equals a fresh read of the sink
+    assert r1.watermark_ms == sink_max_ts(spark, sink)
+    files = _sink_files(sink)
     r2 = run_once(spark, cells, cfg, sink)
     assert r2.rows_indexed == 0  # watermark: nothing new
     assert r2.watermark_ms == r1.watermark_ms
     assert sink_max_ts(spark, sink) == r1.watermark_ms
+    assert _sink_files(sink) == files  # an idle tick writes nothing
+
+
+def test_tick_job_counts(spark, sf_dir, cfg, tmp_path):
+    """The tick is one watermark read, one emptiness probe and one
+    observed write: no recount of the output, no second sink scan."""
+    cells = cells_from_events(spark, sf_dir)
+    sink = str(tmp_path / "sink_jobs")
+    assert _jobs_run(spark, lambda: run_once(spark, cells, cfg, sink)) <= 4
+    assert _jobs_run(spark, lambda: run_once(spark, cells, cfg, sink)) <= 4
 
 
 def test_tick_picks_up_new_cells(spark, sf_dir, cfg, tmp_path):
@@ -170,12 +202,20 @@ def test_run_once_with_failure_channel(spark, sf_dir, tmp_path):
     cells = cells_from_events(spark, sf_dir)
     sink = str(tmp_path / "sink_f")
     dlq = str(tmp_path / "dlq_f")
-    r = run_once(spark, cells, cfg, sink,
-                 reject_when=F.col("doc_id").endswith("3"),
+    # also reject the docs carrying the tick's max doc_ts_ms: the watermark
+    # must come from what landed, not from the tick's whole output
+    docs = river_tick_plan(cells, cfg, 0)
+    top_ts = docs.agg(F.max("doc_ts_ms")).first()[0]
+    reject = (F.col("doc_id").endswith("3")
+              | (F.col("doc_ts_ms") == top_ts))
+    n_rejected = docs.filter(reject).count()
+    r = run_once(spark, cells, cfg, sink, reject_when=reject,
                  dead_letter_path=dlq)
-    assert r.rows_indexed == 900
-    assert r.deleted_keys == 900          # failed keys NOT delete candidates
-    assert spark.read.parquet(dlq).count() == 100
+    assert r.rows_indexed == 1000 - n_rejected
+    assert r.deleted_keys == r.rows_indexed   # failed keys NOT delete candidates
+    assert spark.read.parquet(dlq).count() == n_rejected
+    assert r.watermark_ms == sink_max_ts(spark, sink)
+    assert r.watermark_ms <= top_ts
 
 
 def test_dedup_against_sink(spark, sf_dir, tmp_path):

@@ -16,25 +16,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from bench import SF_DIR, bench_builder
 
 
 def main():
-    from pyspark.sql import SparkSession
-    b = (SparkSession.builder.master(f"local[{CPUS}]")
-         .appName("floor-bench")
-         .config("spark.sql.shuffle.partitions", str(CPUS))
-         .config("spark.sql.adaptive.enabled", "true")
-         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-         .config("spark.driver.memory", "16g")
-         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-         .config("spark.sql.codegen.hugeMethodLimit", "8000")
-        .config("spark.driver.extraJavaOptions",
-                "-XX:ReservedCodeCacheSize=512m")
-        .config("spark.sql.codegen.cache.maxEntries", "1000")
-         .config("spark.ui.enabled", "false"))
+    b = bench_builder()
     for kv in sys.argv[1:]:
         k, v = kv.split("=", 1)
         b = b.config(k, v)

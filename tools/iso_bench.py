@@ -11,8 +11,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from bench import SF_DIR, bench_builder
 
 
 def main():
@@ -32,23 +31,7 @@ def main():
         else:
             names.append(a); i += 1
 
-    from pyspark.sql import SparkSession
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("iso-bench")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.codegen.hugeMethodLimit", "8000")
-        .config("spark.driver.extraJavaOptions",
-                "-XX:ReservedCodeCacheSize=512m")
-        .config("spark.sql.codegen.cache.maxEntries", "1000")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = bench_builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     from elasticsearch_hbase_river_spark.registry import all_queries
     queries = all_queries()

@@ -16,8 +16,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from bench import SF_DIR, bench_builder, prebuild
 
 
 def main():
@@ -25,52 +24,13 @@ def main():
     no_exec = "--no-exec" in args
     names = [a for a in args if not a.startswith("--")]
 
-    from pyspark.sql import SparkSession
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("phase-sweep")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.codegen.hugeMethodLimit", "8000")
-        .config("spark.driver.extraJavaOptions",
-                "-XX:ReservedCodeCacheSize=512m")
-        .config("spark.sql.codegen.cache.maxEntries", "1000")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = bench_builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     from elasticsearch_hbase_river_spark.registry import all_queries
     queries = all_queries()
     spark.read.parquet(f"{SF_DIR}/events.parquet").count()
 
-    from elasticsearch_hbase_river_spark.operators.indexed_search import (
-        ensure_index,
-    )
-    from elasticsearch_hbase_river_spark.operators.vector_index import (
-        ensure_vector_index,
-    )
-    from elasticsearch_hbase_river_spark.operators.liveserve import (
-        ensure_live_epochs,
-    )
-    from elasticsearch_hbase_river_spark.operators.nesteddoc import (
-        ensure_nested_index,
-        ensure_nested_live_epochs,
-    )
-    from elasticsearch_hbase_river_spark.operators.esql_pack import (
-        ensure_esql_stream_state,
-        ensure_esql_stream_ts_state,
-    )
-    ensure_index(spark, SF_DIR)
-    ensure_vector_index(spark, SF_DIR)
-    ensure_nested_index(spark, SF_DIR)
-    ensure_live_epochs(spark, SF_DIR)
-    ensure_nested_live_epochs(spark, SF_DIR)
-    ensure_esql_stream_state(spark, SF_DIR)
-    ensure_esql_stream_ts_state(spark, SF_DIR)
+    prebuild(spark, SF_DIR)
 
     todo = names or sorted(queries)
     import gc
