@@ -64,3 +64,10 @@ class RiverConfig:
         if self.qualifiers and not self.family:
             # setQualifier requires setFamily (HBaseParser.java:94-98 guard)
             raise ValueError("qualifiers filter requires a family filter")
+        if self.custom_mapping and "doc_ts_ms" not in self.custom_mapping:
+            # The incremental watermark is max(doc_ts_ms) over the sink — a
+            # mapping that drops it breaks every later tick (the reference's
+            # equivalent: its facet watermark query needs _timestamp enabled,
+            # HBaseRiver.java:223-231 + HBaseParser.java:258-280).
+            raise ValueError("custom_mapping must retain doc_ts_ms "
+                             "(the incremental watermark column)")

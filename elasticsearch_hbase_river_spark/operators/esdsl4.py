@@ -94,6 +94,7 @@ from elasticsearch_hbase_river_spark.functions.determinism import (
     roundn_col,
     roundn_sql,
 )
+from elasticsearch_hbase_river_spark.operators.curation import _HEX, _bucket
 from elasticsearch_hbase_river_spark.operators.rollup import HOUR_MS
 from elasticsearch_hbase_river_spark.operators.search import (
     _POSTINGS_SQL,
@@ -485,19 +486,8 @@ FROM events GROUP BY event_type"""
 SAMPLER_SHARD_SIZE = 100   # q_sampler_agg sample size
 RS_BUCKETS_KEPT = 64       # q_random_sampler: md5 buckets < 64 of 256 = 1/4
 
-_HEX = "0123456789abcdef"
-
-
-def _md5_bucket_col(col_sql: str):
-    """0..255 from the first two md5 hex digits of the value's string form
-    — the same portable convention as `curation.py`'s train split."""
-    h = f"md5(CAST({col_sql} AS STRING))"
-    return F.expr(
-        f"CAST((instr('{_HEX}', substr({h}, 1, 1)) - 1) * 16"
-        f" + (instr('{_HEX}', substr({h}, 2, 1)) - 1) AS BIGINT)")
-
-
 def _md5_bucket_sql(col_sql: str) -> str:
+    """DuckDB twin of `curation._bucket`."""
     h = f"md5(CAST({col_sql} AS VARCHAR))"
     return (f"(strpos('{_HEX}', substr({h}, 1, 1)) - 1) * 16"
             f" + (strpos('{_HEX}', substr({h}, 2, 1)) - 1)")
@@ -542,7 +532,7 @@ def q_random_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
     The sample predicate is map-side — at 100 TB only the kept quarter
     ever reaches the aggregation shuffle."""
     ev = load_events(spark, sf_dir)
-    kept = ev.filter(_md5_bucket_col("event_id") < RS_BUCKETS_KEPT)
+    kept = ev.filter(_bucket("event_id") < RS_BUCKETS_KEPT)
     dec = F.col("value").cast("decimal(18,2)")
     factor = 256.0 / RS_BUCKETS_KEPT
     return (kept.groupBy("event_type")

@@ -973,6 +973,10 @@ def _drain_esql_stream(spark: SparkSession, sf_dir: str, tag: str,
         index_path_for,
     )
     from elasticsearch_hbase_river_spark.sources.tables import load_table
+    from elasticsearch_hbase_river_spark.streaming.epochs import (
+        epoch_ids,
+        read_feed,
+    )
     from elasticsearch_hbase_river_spark.streaming.esql_stream import (
         start_esql_stream,
     )
@@ -990,15 +994,14 @@ def _drain_esql_stream(spark: SparkSession, sf_dir: str, tag: str,
         # a TS series' bucket spans both micro-batches.
         (load_table(spark, sf_dir, "events").select(*cols)
          .repartition(2).write.parquet(src))
-        sdf = (spark.readStream.schema(spark.read.parquet(src).schema)
-               .option("maxFilesPerTrigger", "1").parquet(src))
+        sdf = read_feed(spark, src, spark.read.parquet(src).schema,
+                        files_per_trigger=1)
         q = start_esql_stream(spark, text, sdf, state,
                               os.path.join(tmp, "ckpt"), ts_specs=ts_specs)
         if not q.awaitTermination(600):
             q.stop()
             raise RuntimeError(f"{tag} fixture did not drain in 600s")
-        epochs = [n for n in os.listdir(os.path.join(state, "partials"))
-                  if n.startswith("epoch=")]
+        epochs = epoch_ids(state, "partials")
         if len(epochs) < 2:
             raise RuntimeError(
                 f"expected >=2 real micro-batches, got {epochs}")

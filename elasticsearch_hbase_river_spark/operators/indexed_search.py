@@ -105,6 +105,9 @@ from elasticsearch_hbase_river_spark.sources.tables import (
     load_table,
     read_immutable,
 )
+from elasticsearch_hbase_river_spark.streaming.epochs import (
+    _check_epochs_layout,
+)
 
 N_BUCKETS = 32
 META = "_index_meta.json"
@@ -846,7 +849,6 @@ def apply_epoch_deltas(spark: SparkSession, base_path: str,
     sidecars (stats is pure integer arithmetic on the cached 1-row
     sidecar)."""
     from elasticsearch_hbase_river_spark.streaming.river_stream import (
-        _check_epochs_layout,
         read_epoch_docs,
         read_inverted_index,
     )

@@ -34,13 +34,10 @@ overhead is not.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from elasticsearch_hbase_river_spark.artifacts import publish_dir
-from elasticsearch_hbase_river_spark.functions.concurrency import run_jobs
 from elasticsearch_hbase_river_spark.functions.determinism import (
     roundn_col,
     roundn_sql,
@@ -59,9 +56,15 @@ from elasticsearch_hbase_river_spark.operators.search import (
     BM25_K1,
     BM25_TERMS,
     BM25_TOP,
-    inverted_postings,
 )
 from elasticsearch_hbase_river_spark.sources.tables import load_table
+from elasticsearch_hbase_river_spark.streaming.epochs import (
+    EPOCHS_META,
+    _check_epochs_layout,
+    epoch_ids,
+    epochs_marker,
+    write_epoch,
+)
 
 #: Compaction cadence: serve base + epochs unmerged until this many epochs
 #: are pending, then fold them with ``apply_epoch_deltas``. Justification
@@ -75,10 +78,7 @@ COMPACT_EVERY_N_EPOCHS = 8
 
 def pending_epochs(epochs_dir: str) -> int:
     """How many stream epochs are waiting to be folded into the base."""
-    p = os.path.join(epochs_dir, "postings")
-    if not os.path.isdir(p):
-        return 0
-    return sum(1 for e in os.listdir(p) if e.startswith("epoch="))
+    return len(epoch_ids(epochs_dir, "postings"))
 
 
 def compaction_due(epochs_dir: str,
@@ -98,9 +98,10 @@ def read_live_postings(spark: SparkSession, base_path: str,
     (latest epoch wins per doc — `read_inverted_index` semantics). The
     union is segment-read composition: no shuffle beyond the anti-join's
     broadcast. Callers that already materialized the epoch arbitration
-    (``read_inverted_index`` / ``read_epoch_docs`` are latest-wins
-    windows over the epoch manifests) pass ``fresh``/``changed`` so the
-    query path pays that work ONCE, not per consumer."""
+    (``read_inverted_index`` joins the epoch postings to each doc's max
+    manifest epoch; ``read_epoch_docs`` is a latest-wins window over the
+    manifests) pass ``fresh``/``changed`` so the query path pays that
+    work ONCE, not per consumer."""
     from elasticsearch_hbase_river_spark.streaming.river_stream import (
         read_epoch_docs,
         read_inverted_index,
@@ -133,7 +134,6 @@ def bm25_live(spark: SparkSession, base_path: str, epochs_dir: str,
       new ones. All three relations broadcast.
     """
     from elasticsearch_hbase_river_spark.streaming.river_stream import (
-        _check_epochs_layout,
         read_epoch_docs,
         read_inverted_index,
     )
@@ -147,7 +147,7 @@ def bm25_live(spark: SparkSession, base_path: str, epochs_dir: str,
     _check_epochs_layout(epochs_dir, mode=index_mode(base_path))
 
     # materialize the two epoch-arbitration views ONCE (delta-sized:
-    # latest-wins windows over the epoch manifests) — bm25_live and
+    # both arbitrate latest-wins over the epoch manifests) — bm25_live and
     # read_live_postings both consume them, and without the checkpoint
     # the query path re-ran the arbitration per consumer
     fresh_docs = read_epoch_docs(spark, epochs_dir) \
@@ -241,15 +241,11 @@ FROM documents"""
 
 
 def ensure_live_epochs(spark: SparkSession, sf_dir: str) -> str:
-    """Idempotent churn-epoch fixture in the stream's epochs layout
-    (postings/ + docs/ per epoch + layout marker), keyed by the corpus
+    """Idempotent churn-epoch fixture: epoch 0 of the index stream's
+    layout, built by the stream's own part builder, keyed by the corpus
     fingerprint so it is never served against a different corpus."""
-    from elasticsearch_hbase_river_spark.functions.analyzer import (
-        analyze_tokens,
-    )
     from elasticsearch_hbase_river_spark.streaming.river_stream import (
-        EPOCHS_META,
-        epochs_marker,
+        index_epoch_parts,
     )
 
     path = index_path_for(sf_dir) + "-live-epochs"
@@ -257,17 +253,7 @@ def ensure_live_epochs(spark: SparkSession, sf_dir: str) -> str:
     def _build(tmp: str) -> None:
         churned = _churned_docs(
             load_table(spark, sf_dir, "documents").select("doc_id", "text"))
-        # two independent writes from the same churned relation, run
-        # concurrently
-        run_jobs(
-            lambda: (inverted_postings(churned)
-                     .write.mode("overwrite")
-                     .parquet(f"{tmp}/postings/epoch=0")),
-            lambda: (churned.select(
-                "doc_id",
-                F.size(analyze_tokens(F.col("text"))).cast("long")
-                .alias("dl"))
-                .write.mode("overwrite").parquet(f"{tmp}/docs/epoch=0")))
+        write_epoch(tmp, 0, index_epoch_parts(churned))
 
     publish_dir(path, EPOCHS_META, epochs_marker(), _build)
     return path

@@ -80,6 +80,12 @@ from elasticsearch_hbase_river_spark.sources.tables import (
     read_immutable,
     ts_ms_col,
 )
+from elasticsearch_hbase_river_spark.streaming.epochs import (
+    NESTED_EPOCHS_LAYOUT_VERSION,
+    NESTED_EPOCHS_META,
+    epoch_ids,
+    write_epoch,
+)
 
 #: multi_match terms over the dynamic fields: "error" hits only
 #: meta.event_type; "87" hits meta.user_id, data.value integer parts and
@@ -637,14 +643,6 @@ def read_nested_epochs(spark: SparkSession, epochs_dir: str):
     return fp, fdl, latest.select("doc_id")
 
 
-def _epoch_ids(root: str, sub: str) -> set[int]:
-    d = os.path.join(root, sub)
-    if not os.path.isdir(d):
-        return set()
-    return {int(name.split("=", 1)[1]) for name in os.listdir(d)
-            if name.startswith("epoch=")}
-
-
 def write_nested_epoch_stats_sidecar(spark: SparkSession, base: str,
                                      epochs_dir: str,
                                      epoch_id: int) -> None:
@@ -665,7 +663,7 @@ def write_nested_epoch_stats_sidecar(spark: SparkSession, base: str,
     changed = (spark.read.parquet(os.path.join(epochs_dir, "docs"))
                .filter(F.col("epoch") == epoch_id).select("doc_id")
                .localCheckpoint(eager=True))
-    earlier = sorted(e for e in _epoch_ids(epochs_dir, "docs")
+    earlier = sorted(e for e in epoch_ids(epochs_dir, "docs")
                      if e < epoch_id)
     z = F.lit(0).cast("long")
     prev_parts = []
@@ -707,8 +705,7 @@ def write_nested_epoch_stats_sidecar(spark: SparkSession, base: str,
                    F.coalesce("s_r", z).alias("s_r"),
                    F.coalesce("n_a", z).alias("n_a"),
                    F.coalesce("s_a", z).alias("s_a")))
-    out.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(epochs_dir, "fstats_delta", f"epoch={epoch_id}"))
+    write_epoch(epochs_dir, epoch_id, {"fstats_delta": out.coalesce(1)})
 
 
 def nested_field_search_live(spark: SparkSession, base: str,
@@ -742,8 +739,8 @@ def nested_field_search_live(spark: SparkSession, base: str,
     fall back to the per-query derivation — same answer, slower."""
     z = F.lit(0).cast("long")
     fp_new, fdl_new, changed = read_nested_epochs(spark, epochs_dir)
-    doc_epochs = _epoch_ids(epochs_dir, "docs")
-    sidecars = _epoch_ids(epochs_dir, "fstats_delta")
+    doc_epochs = epoch_ids(epochs_dir, "docs")
+    sidecars = epoch_ids(epochs_dir, "fstats_delta")
     use_sidecar = bool(doc_epochs) and doc_epochs <= sidecars
 
     if not use_sidecar:
@@ -868,11 +865,12 @@ def _nlive_churn_sel() -> F.Column:
 
 
 def ensure_nested_live_epochs(spark: SparkSession, sf_dir: str) -> str:
-    """Idempotent churn epoch in the nested-epochs layout (fpostings/ +
-    fdl/ + docs/ per epoch + marker), fingerprint-keyed."""
+    """Idempotent churn epoch: epoch 0 of the nested stream's layout,
+    built by the stream's own part builder, fingerprint-keyed. Every
+    churned event keeps both ``meta`` cells in ``sparse_melt``, so the
+    cells' row keys are exactly the churned event ids."""
     from elasticsearch_hbase_river_spark.streaming.river_stream import (
-        NESTED_EPOCHS_LAYOUT_VERSION,
-        NESTED_EPOCHS_META,
+        nested_epoch_parts,
     )
 
     path = nested_index_path_for(sf_dir) + "-live-epochs"
@@ -881,18 +879,7 @@ def ensure_nested_live_epochs(spark: SparkSession, sf_dir: str) -> str:
         churned = (load_table(spark, sf_dir, "events")
                    .filter(_nlive_churn_sel())
                    .withColumn("value", F.col("value") + NLIVE_VALUE_BUMP))
-        fc = fielded_cells_from(sparse_melt(churned))
-        # three independent writes from the same churned relation, run
-        # concurrently
-        run_jobs(
-            lambda: (_fpostings(fc).write.mode("overwrite")
-                     .parquet(f"{tmp}/fpostings/epoch=0")),
-            lambda: (_field_dl(fc).write.mode("overwrite")
-                     .parquet(f"{tmp}/fdl/epoch=0")),
-            lambda: (churned.select(
-                F.col("event_id").cast("string").alias("doc_id"))
-                .distinct().write.mode("overwrite")
-                .parquet(f"{tmp}/docs/epoch=0")))
+        write_epoch(tmp, 0, nested_epoch_parts(sparse_melt(churned)))
         # length-stats sidecar: the serve path reads these tiny sums
         # instead of re-deriving the base removal per query
         write_nested_epoch_stats_sidecar(

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from elasticsearch_hbase_river_spark.functions.determinism import roundn_col, roundn_sql
+from elasticsearch_hbase_river_spark.operators.text import _toks
 from elasticsearch_hbase_river_spark.sources.tables import load_table
 
 PASSAGE_TOKENS = 16      # tokens per passage window (non-overlapping)
@@ -63,10 +64,6 @@ PACK_SEQ_LEN = 256       # tokens per packed training sequence
 PACK_BLOCK = 1_000       # doc_id-range width per prefix-sum block
 SHUFFLE_SHARDS = 8       # training shards for the corpus shuffle
 SHUFFLE_SEED = "shuf-1"  # keyed md5 -> a new seed is a fresh epoch order
-
-
-def _toks():
-    return F.split(F.col("text"), " ")
 
 
 def q_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

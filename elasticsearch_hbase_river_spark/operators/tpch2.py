@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from elasticsearch_hbase_river_spark.functions.determinism import roundn_col, roundn_sql
+from elasticsearch_hbase_river_spark.operators.tpch import _dec
 from elasticsearch_hbase_river_spark.sources.tables import load_table
 
 Q2_SIZE = 15
@@ -49,10 +50,6 @@ Q16_SIZES = (1, 5, 9, 13, 17, 21, 25, 29)
 Q17_BRAND = "Brand#5"
 Q20_NAME_PREFIX = "large"
 Q20_NATION = "NATION_2"
-
-
-def _dec(name: str) -> Column:
-    return F.col(name).cast("decimal(18,2)")
 
 
 def _rev() -> Column:

@@ -214,13 +214,6 @@ def run_once(spark: SparkSession, cells: DataFrame, config: RiverConfig,
         write_bulk, write_with_dead_letter,
     )
 
-    if config.custom_mapping and "doc_ts_ms" not in config.custom_mapping:
-        # The incremental watermark is max(doc_ts_ms) over the sink — a
-        # mapping that drops it breaks every later tick (the reference's
-        # equivalent: its facet watermark query needs _timestamp enabled,
-        # HBaseRiver.java:223-231 + HBaseParser.java:258-280).
-        raise ValueError("custom_mapping must retain doc_ts_ms "
-                         "(the incremental watermark column)")
     if reject_when is not None and dead_letter_path is None:
         raise ValueError("reject_when requires dead_letter_path")
     wm = sink_max_ts(spark, sink_path)

@@ -41,11 +41,9 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import Row, StructType
 
 from elasticsearch_hbase_river_spark.artifacts import read_json, write_json_atomic
+from elasticsearch_hbase_river_spark.operators.bulk_sink import ES_INDEX, ES_TYPE
 
 MANIFEST = "_bulk_manifest.json"
-
-ES_INDEX = "river"
-ES_TYPE = "doc"
 
 
 @dataclass
@@ -132,30 +130,10 @@ def _discard(path: str, messages: List[Optional[WriterCommitMessage]]) -> None:
                 pass
 
 
-class BulkSinkWriter(DataSourceWriter):
-    def __init__(self, options: dict[str, str], overwrite: bool) -> None:
-        self.path = options["path"]
-        self.batch_size = int(options.get("batch_size", "100"))
-        self.index = options.get("index", ES_INDEX)
-        self.doc_type = options.get("doc_type", ES_TYPE)
-        # Optional epoch tag: batch writes driven from foreachBatch pass the
-        # micro-batch id so replays publish exactly once.
-        self.epoch = (int(options["epoch"]) if "epoch" in options else None)
-        self.overwrite = overwrite
-        os.makedirs(self.path, exist_ok=True)
+class _BulkTaskWriter:
+    """Option parsing and the task-side write shared by the batch and the
+    streaming writer; they differ only in how they publish."""
 
-    def write(self, iterator: Iterator[Row]) -> BulkCommit:
-        return _write_bulks(self.path, iterator, self.batch_size,
-                            self.index, self.doc_type)
-
-    def commit(self, messages: List[Optional[WriterCommitMessage]]) -> None:
-        _publish(self.path, messages, self.overwrite, epoch=self.epoch)
-
-    def abort(self, messages: List[Optional[WriterCommitMessage]]) -> None:
-        _discard(self.path, messages)
-
-
-class BulkSinkStreamWriter(DataSourceStreamWriter):
     def __init__(self, options: dict[str, str]) -> None:
         self.path = options["path"]
         self.batch_size = int(options.get("batch_size", "100"))
@@ -167,6 +145,23 @@ class BulkSinkStreamWriter(DataSourceStreamWriter):
         return _write_bulks(self.path, iterator, self.batch_size,
                             self.index, self.doc_type)
 
+
+class BulkSinkWriter(_BulkTaskWriter, DataSourceWriter):
+    def __init__(self, options: dict[str, str], overwrite: bool) -> None:
+        super().__init__(options)
+        # Optional epoch tag: batch writes driven from foreachBatch pass the
+        # micro-batch id so replays publish exactly once.
+        self.epoch = (int(options["epoch"]) if "epoch" in options else None)
+        self.overwrite = overwrite
+
+    def commit(self, messages: List[Optional[WriterCommitMessage]]) -> None:
+        _publish(self.path, messages, self.overwrite, epoch=self.epoch)
+
+    def abort(self, messages: List[Optional[WriterCommitMessage]]) -> None:
+        _discard(self.path, messages)
+
+
+class BulkSinkStreamWriter(_BulkTaskWriter, DataSourceStreamWriter):
     def commit(self, messages: List[Optional[WriterCommitMessage]],
                batchId: int) -> None:  # noqa: N803
         _publish(self.path, messages, overwrite=False, epoch=batchId)

@@ -72,6 +72,10 @@ from elasticsearch_hbase_river_spark.esql import (
     _ts_dec6,
     parse,
 )
+from elasticsearch_hbase_river_spark.streaming.epochs import (
+    start_batches,
+    write_epoch,
+)
 
 #: aggregates with an algebraic partial/combine decomposition
 #: (AVG = sum+count pair; WEIGHTED_AVG = sum(x*w)+sum(w) pair)
@@ -467,14 +471,9 @@ def start_esql_stream(spark: SparkSession, text: str, stream_df: DataFrame,
             out = _partial_agg(bcomp, batch_df, plan)
         else:
             out = batch_df
-        out.write.mode("overwrite").parquet(
-            f"{state_dir}/{sub}/epoch={batch_id}")
+        write_epoch(state_dir, batch_id, {sub: out})
 
-    writer = (df.writeStream.foreachBatch(tick)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(df, tick, checkpoint_dir, available_now)
 
 
 def read_esql_stream_result(spark: SparkSession, text: str,

@@ -25,136 +25,36 @@ canonical cells schema.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     ArrayType, FloatType, IntegerType, LongType, StringType, StructField,
     StructType,
 )
 
-from elasticsearch_hbase_river_spark.artifacts import (
-    read_json,
-    write_json_atomic,
-)
 from elasticsearch_hbase_river_spark.config import RiverConfig
 from elasticsearch_hbase_river_spark.plans.pipeline import (
+    apply_sink_mapping,
     assemble_documents,
     scope_cells,
 )
-
-#: Epochs-directory layout version. v2 = index_dir/{postings,docs}/epoch=N
-#: (the doc-manifest layout); v1 (pre-round-5) was index_dir/epoch=N with
-#: no manifest. The two are silently incompatible: a v2 writer resumed over
-#: a v1 directory writes beside the old epochs and read_inverted_index
-#: drops them without an error — so the directory carries an explicit
-#: marker (same discipline as the band table's _bands_meta.json) and both
-#: writer and readers refuse a mismatch.
-EPOCHS_LAYOUT_VERSION = 2
-EPOCHS_META = "_epochs_meta.json"
-
-
-def epochs_marker(mode: str = "ascii") -> dict:
-    """The epochs-directory marker content for analyzer ``mode``."""
-    return {"layout": EPOCHS_LAYOUT_VERSION, "mode": mode}
-
-
-def _check_epochs_layout(index_dir: str, mode: str | None = None) -> None:
-    """Refuse mixed-layout epoch directories: a populated directory must
-    carry the current layout marker. Fresh/empty directories pass (the
-    writer stamps them on first use). With ``mode`` given, additionally
-    refuse an ANALYZER-MODE mismatch (marker-less/pre-stamp directories
-    read as 'ascii', the only mode that existed): resuming a unicode
-    stream over ascii epochs (or vice versa) would merge two
-    tokenizations into one index with no error anywhere."""
-    m = read_json(os.path.join(index_dir, EPOCHS_META)) or {}
-    found = m.get("layout")
-    found_mode = m.get("mode", "ascii")
-    if found == EPOCHS_LAYOUT_VERSION:
-        if mode is not None and found_mode != mode:
-            raise ValueError(
-                f"index epochs directory {index_dir} was written with "
-                f"analyzer mode {found_mode!r}, stream configured for "
-                f"{mode!r} — mixing tokenizations silently corrupts the "
-                "merged index. Rebuild into a fresh directory (and "
-                "discard the checkpoint) or match the mode.")
-        return
-    if found is None and not os.path.exists(index_dir):
-        return  # nothing written yet; the writer will stamp it
-    if found is None:
-        entries = [e for e in os.listdir(index_dir)
-                   if not e.startswith(".") and e != EPOCHS_META]
-        if not entries:
-            return
-        # A populated but marker-less directory that already HAS the v2
-        # shape (postings/ + docs/ subdirs, no v1 epoch=N at the root) was
-        # written by this engine immediately before the marker existed —
-        # stamp it in place instead of forcing a rebuild; the error below
-        # is reserved for genuine v1 (or foreign) layouts. Matching subdir
-        # NAMES alone is not enough to adopt a directory (a foreign tool's
-        # postings/+docs/ output would be silently claimed as a v2 index):
-        # additionally require the epoch=N partition children under both,
-        # the shape only this writer produces.
-        def _has_epoch_children(sub: str) -> bool:
-            p = os.path.join(index_dir, sub)
-            return os.path.isdir(p) and any(
-                e.startswith("epoch=") for e in os.listdir(p))
-
-        if (all(e in ("postings", "docs") for e in entries)
-                and not any(e.startswith("epoch=") for e in entries)
-                and _has_epoch_children("postings")
-                and _has_epoch_children("docs")):
-            stamp_epochs_layout(index_dir)
-            return
-    raise ValueError(
-        f"index epochs directory {index_dir} has layout={found!r}, engine "
-        f"expects {EPOCHS_LAYOUT_VERSION} — resuming a stream (or merging "
-        "epochs) over a foreign layout silently drops the old epochs. "
-        "Rebuild the index stream into a fresh directory (and discard its "
-        "checkpoint), or migrate the old epochs explicitly.")
-
-
-def stamp_epochs_layout(index_dir: str, mode: str = "ascii") -> None:
-    """Mark ``index_dir`` (created if absent) as a current-layout epochs
-    directory written with analyzer ``mode``."""
-    os.makedirs(index_dir, exist_ok=True)
-    write_json_atomic(os.path.join(index_dir, EPOCHS_META),
-                      epochs_marker(mode))
-
-
-CELLS_SCHEMA = StructType([
-    StructField("row_key", StringType()),
-    StructField("family", StringType()),
-    StructField("qualifier", StringType()),
-    StructField("value", StringType()),
-    StructField("ts_ms", LongType()),
-])
+from elasticsearch_hbase_river_spark.sources.formats import CELLS_SCHEMA
+from elasticsearch_hbase_river_spark.streaming.epochs import (
+    _check_epochs_layout,
+    _check_nested_epochs_layout,
+    _stamp_nested_epochs_layout,
+    read_feed,
+    stamp_epochs_layout,
+    start_batches,
+    write_epoch,
+)
 
 
 def read_cells_stream(spark: SparkSession, source_dir: str,
                       max_files_per_trigger: int = 16) -> DataFrame:
-    """File-source stream of cells. ``maxFilesPerTrigger`` is the streaming
-    analog of the reference's scan batch size (HBaseParser.java:104)."""
-    from elasticsearch_hbase_river_spark.sources.tables import _tune_session
-
-    _tune_session(spark)
-    return (
-        spark.readStream.schema(CELLS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-
-
-def _start(writer: DataStreamWriter, config: RiverConfig,
-           available_now: bool) -> StreamingQuery:
-    """Drain-and-stop, or trigger every ``config.interval_ms`` like the
-    reference's scheduler (HBaseParser.java:49-73)."""
-    if available_now:
-        return writer.trigger(availableNow=True).start()
-    return writer.trigger(
-        processingTime=f"{config.interval_ms} milliseconds").start()
+    """File-source stream of cells."""
+    return read_feed(spark, source_dir, CELLS_SCHEMA, max_files_per_trigger)
 
 
 def start_river_stream(
@@ -190,15 +90,12 @@ def start_river_stream(
                           doc_type=config.type_name,
                           batch_size=config.batch_size)
         else:
-            write_bulk(docs.withColumn("batch_id", F.lit(batch_id)),
+            write_bulk(apply_sink_mapping(docs, config)
+                       .withColumn("batch_id", F.lit(batch_id)),
                        sink_dir, config.batch_size)
 
-    writer = (
-        cells.writeStream
-        .foreachBatch(upsert_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    return _start(writer, config, available_now)
+    return start_batches(cells, upsert_batch, checkpoint_dir, available_now,
+                         config.interval_ms)
 
 
 def start_connector_river(
@@ -238,9 +135,8 @@ def start_connector_river(
          .option("epoch", batch_id)
          .mode("append").save())
 
-    writer = (cells.writeStream.foreachBatch(publish)
-              .option("checkpointLocation", checkpoint_dir))
-    return _start(writer, config, available_now)
+    return start_batches(cells, publish, checkpoint_dir, available_now,
+                         config.interval_ms)
 
 
 def streaming_event_rollup(spark: SparkSession, source_dir: str) -> DataFrame:
@@ -342,13 +238,9 @@ def streaming_near_dedup(spark: SparkSession, docs_source_dir: str,
     from elasticsearch_hbase_river_spark.operators.dedup import (
         N_BANDS, _band_col, _gram_hash_df, minhash_signature,
     )
-    from elasticsearch_hbase_river_spark.sources.tables import _tune_session
 
-    _tune_session(spark)
-    docs = (spark.readStream
-            .schema("doc_id LONG, text STRING")
-            .option("maxFilesPerTrigger", files_per_trigger)
-            .parquet(docs_source_dir))
+    docs = read_feed(spark, docs_source_dir, "doc_id LONG, text STRING",
+                     files_per_trigger)
     # identical map-side gram hashing + signature as the batch
     # q_minhash_signature — the expressions are streaming-safe
     sig = minhash_signature(_gram_hash_df(docs))
@@ -496,24 +388,15 @@ def start_index_stream(spark: SparkSession, docs_source_dir: str,
     (millisecond granularity) — part filenames embed random job UUIDs, so
     path order carries no version information. Producers that can emit
     same-millisecond updates must stamp ``ver``."""
-    from elasticsearch_hbase_river_spark.operators.search import inverted_postings
-    from elasticsearch_hbase_river_spark.sources.tables import _tune_session
-
-    _tune_session(spark)
     # _metadata must be projected on the SOURCE — foreachBatch frames only
     # carry the selected columns, and the file order is the version order.
-    docs = (spark.readStream.schema(DOCS_SCHEMA)
-            .option("maxFilesPerTrigger", 16).parquet(docs_source_dir)
+    docs = (read_feed(spark, docs_source_dir, DOCS_SCHEMA)
             .select("doc_id", "text", "ver",
                     F.col("_metadata.file_modification_time").alias("_mtime"),
                     F.col("_metadata.file_path").alias("_path")))
 
     def build_delta(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window
-
-        from elasticsearch_hbase_river_spark.functions.analyzer import (
-            tokens_for_mode,
-        )
 
         # foreachBatch runs driver-side: refuse a foreign-layout (or
         # mode-mismatched) epochs directory BEFORE writing beside it,
@@ -536,28 +419,35 @@ def start_index_stream(spark: SparkSession, docs_source_dir: str,
             assert_analyzable_corpus,
         )
         assert_analyzable_corpus(latest, mode=mode)
-        (inverted_postings(latest, mode)
-         .write.mode("overwrite")
-         .parquet(f"{index_dir}/postings/epoch={batch_id}"))
-        # Per-epoch DOC MANIFEST: one row per document carried by this
-        # batch, INCLUDING zero-token documents (an update that empties a
-        # doc has no postings rows but must still register as a change,
-        # and the doc still counts toward N / avgdl — ES indexes empty
-        # documents). The manifest is also the latest-epoch arbitration
-        # authority for the merged read.
-        (latest.select(
-            "doc_id",
-            F.size(tokens_for_mode(F.col("text"), mode)).cast("long")
-            .alias("dl"))
-         .write.mode("overwrite")
-         .parquet(f"{index_dir}/docs/epoch={batch_id}"))
+        write_epoch(index_dir, batch_id, index_epoch_parts(latest, mode))
         latest.unpersist()
 
-    writer = (docs.writeStream.foreachBatch(build_delta)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(docs, build_delta, checkpoint_dir, available_now)
+
+
+def index_epoch_parts(latest_docs: DataFrame,
+                      mode: str = "ascii") -> dict[str, DataFrame]:
+    """One index epoch from latest-wins ``(doc_id, text)`` documents:
+    ``postings`` (the batch index build's own aggregate) and the ``docs``
+    manifest — one row per document INCLUDING zero-token ones (an update
+    that empties a doc has no postings rows but must still register as a
+    change, and the doc still counts toward N / avgdl — ES indexes empty
+    documents). The manifest is also the latest-epoch arbitration
+    authority for the merged read."""
+    from elasticsearch_hbase_river_spark.functions.analyzer import (
+        tokens_for_mode,
+    )
+    from elasticsearch_hbase_river_spark.operators.search import (
+        inverted_postings,
+    )
+
+    return {
+        "postings": inverted_postings(latest_docs, mode),
+        "docs": latest_docs.select(
+            "doc_id",
+            F.size(tokens_for_mode(F.col("text"), mode)).cast("long")
+            .alias("dl")),
+    }
 
 
 def read_inverted_index(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -594,32 +484,6 @@ def read_epoch_docs(spark: SparkSession, index_dir: str) -> DataFrame:
 # Fielded (nested-document) index maintenance: the same epoch-delta
 # discipline as start_index_stream, for the dynamic-field search surface.
 
-NESTED_EPOCHS_LAYOUT_VERSION = 1
-NESTED_EPOCHS_META = "_nested_epochs_meta.json"
-
-
-def _check_nested_epochs_layout(index_dir: str) -> None:
-    found = (read_json(os.path.join(index_dir, NESTED_EPOCHS_META))
-             or {}).get("layout")
-    if found == NESTED_EPOCHS_LAYOUT_VERSION:
-        return
-    if found is None and (
-            not os.path.exists(index_dir)
-            or not any(e for e in os.listdir(index_dir)
-                       if not e.startswith("."))):
-        return
-    raise ValueError(
-        f"nested epochs directory {index_dir} has layout={found!r}, engine "
-        f"expects {NESTED_EPOCHS_LAYOUT_VERSION} — refuse to write beside "
-        "a foreign layout.")
-
-
-def _stamp_nested_epochs_layout(index_dir: str) -> None:
-    os.makedirs(index_dir, exist_ok=True)
-    write_json_atomic(os.path.join(index_dir, NESTED_EPOCHS_META),
-                      {"layout": NESTED_EPOCHS_LAYOUT_VERSION})
-
-
 def start_nested_index_stream(spark: SparkSession, cells_source_dir: str,
                               index_dir: str, checkpoint_dir: str,
                               available_now: bool = True,
@@ -652,12 +516,6 @@ def start_nested_index_stream(spark: SparkSession, cells_source_dir: str,
     def build_delta(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window
 
-        from elasticsearch_hbase_river_spark.operators.nesteddoc import (
-            _field_dl,
-            _fpostings,
-            fielded_cells_from,
-        )
-
         _check_nested_epochs_layout(index_dir)
         _stamp_nested_epochs_layout(index_dir)
         w = Window.partitionBy("row_key", "family", "qualifier").orderBy(
@@ -670,14 +528,7 @@ def start_nested_index_stream(spark: SparkSession, cells_source_dir: str,
             assert_ascii_corpus,
         )
         assert_ascii_corpus(latest, col="value")
-        fc = fielded_cells_from(latest)
-        (_fpostings(fc).write.mode("overwrite")
-         .parquet(f"{index_dir}/fpostings/epoch={batch_id}"))
-        (_field_dl(fc).write.mode("overwrite")
-         .parquet(f"{index_dir}/fdl/epoch={batch_id}"))
-        (latest.select(F.col("row_key").alias("doc_id")).distinct()
-         .write.mode("overwrite")
-         .parquet(f"{index_dir}/docs/epoch={batch_id}"))
+        write_epoch(index_dir, batch_id, nested_epoch_parts(latest))
         # length-stats sidecar (nesteddoc.write_nested_epoch_stats_sidecar):
         # per-field (n_r, s_r, n_a, s_a) vs the live view just before this
         # epoch, so serving never re-derives the base removal per query.
@@ -693,11 +544,28 @@ def start_nested_index_stream(spark: SparkSession, cells_source_dir: str,
                 spark, base_index_dir, index_dir, batch_id)
         latest.unpersist()
 
-    writer = (cells.writeStream.foreachBatch(build_delta)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(cells, build_delta, checkpoint_dir, available_now)
+
+
+def nested_epoch_parts(latest_cells: DataFrame) -> dict[str, DataFrame]:
+    """One nested epoch from latest-wins cells: fielded postings
+    (``fpostings``), per doc/field analyzed lengths (``fdl``) and the
+    changed-doc manifest (``docs``, one row per row key — the
+    arbitration authority, covering re-indexes that emptied every
+    analyzable field)."""
+    from elasticsearch_hbase_river_spark.operators.nesteddoc import (
+        _field_dl,
+        _fpostings,
+        fielded_cells_from,
+    )
+
+    fc = fielded_cells_from(latest_cells)
+    return {
+        "fpostings": _fpostings(fc),
+        "fdl": _field_dl(fc),
+        "docs": latest_cells.select(F.col("row_key").alias("doc_id"))
+        .distinct(),
+    }
 
 
 VEC_SCHEMA = StructType([
@@ -728,11 +596,7 @@ def start_vector_stream(spark: SparkSession, vec_source_dir: str,
     ``apply_vector_deltas`` folds the result into a published index via
     the batch ``upsert_vectors`` — stream and batch maintenance share one
     merge semantics."""
-    from elasticsearch_hbase_river_spark.sources.tables import _tune_session
-
-    _tune_session(spark)
-    vecs = (spark.readStream.schema(VEC_SCHEMA)
-            .option("maxFilesPerTrigger", 16).parquet(vec_source_dir)
+    vecs = (read_feed(spark, vec_source_dir, VEC_SCHEMA)
             .select("vec_id", "embedding", "label", "ver",
                     F.col("_metadata.file_modification_time").alias("_mtime"),
                     F.col("_metadata.file_path").alias("_path")))
@@ -746,13 +610,9 @@ def start_vector_stream(spark: SparkSession, vec_source_dir: str,
         latest = (batch_df.withColumn("rn", F.row_number().over(w))
                   .filter(F.col("rn") == 1)
                   .select("vec_id", "embedding", "label"))
-        latest.write.mode("overwrite").parquet(f"{delta_dir}/epoch={batch_id}")
+        write_epoch(delta_dir, batch_id, {"": latest})
 
-    writer = (vecs.writeStream.foreachBatch(land_delta)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(vecs, land_delta, checkpoint_dir, available_now)
 
 
 def read_vector_deltas(spark: SparkSession, delta_dir: str) -> DataFrame:
@@ -800,18 +660,14 @@ def start_percolate_stream(spark: SparkSession, docs_source_dir: str,
     from elasticsearch_hbase_river_spark.functions.analyzer import (
         analyze_tokens,
     )
-    from elasticsearch_hbase_river_spark.sources.tables import _tune_session
 
-    _tune_session(spark)
+    docs = read_feed(spark, docs_source_dir, DOCS_SCHEMA).select(
+        "doc_id", "text")
     n_terms = (stored_queries.groupBy("query_id")
                .agg(F.count_distinct("token").alias("need")))
     rules = (stored_queries.select("query_id", "token").distinct()
              .join(n_terms, "query_id").persist())
     rules.count()  # materialize once; every batch broadcasts this
-
-    docs = (spark.readStream.schema(DOCS_SCHEMA)
-            .option("maxFilesPerTrigger", 16).parquet(docs_source_dir)
-            .select("doc_id", "text"))
 
     def match(batch_df: DataFrame, batch_id: int) -> None:
         doc_tok = (batch_df.select(
@@ -822,13 +678,9 @@ def start_percolate_stream(spark: SparkSession, docs_source_dir: str,
                 .agg(F.count(F.lit(1)).alias("got"))
                 .filter(F.col("got") == F.col("need"))
                 .select("doc_id", "query_id"))
-        hits.write.mode("overwrite").parquet(f"{alerts_dir}/epoch={batch_id}")
+        write_epoch(alerts_dir, batch_id, {"": hits})
 
-    writer = (docs.writeStream.foreachBatch(match)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(docs, match, checkpoint_dir, available_now)
 
 
 # ---------------------------------------------------------------------------
@@ -857,16 +709,11 @@ def streaming_first_appearance(spark: SparkSession, events_source_dir: str,
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from elasticsearch_hbase_river_spark.sources.tables import _tune_session
-
-    _tune_session(spark)
     # Source = the (user_id, ts_ms) projection of the canonical events
     # relation (the test writes it with `load_events`), same convention
     # as streaming_near_dedup's (doc_id, text) source.
-    ev = (spark.readStream
-          .schema("user_id LONG, ts_ms LONG")
-          .option("maxFilesPerTrigger", files_per_trigger)
-          .parquet(events_source_dir))
+    ev = read_feed(spark, events_source_dir, "user_id LONG, ts_ms LONG",
+                   files_per_trigger)
     day_ms = 86_400_000
     keyed = ev.select(
         "user_id", F.expr(f"ts_ms div {day_ms}").alias("day_id"))
@@ -940,14 +787,10 @@ def streaming_eql_sequence(spark: SparkSession, events_source_dir: str,
         EQL_MAXSPAN_MS,
         EQL_STAGES,
     )
-    from elasticsearch_hbase_river_spark.sources.tables import _tune_session
 
-    _tune_session(spark)
-    ev = (spark.readStream
-          .schema("user_id LONG, event_id LONG, ts_ms LONG,"
-                  " event_type STRING")
-          .option("maxFilesPerTrigger", files_per_trigger)
-          .parquet(events_source_dir))
+    ev = read_feed(spark, events_source_dir,
+                   "user_id LONG, event_id LONG, ts_ms LONG,"
+                   " event_type STRING", files_per_trigger)
     keyed = ev.filter(F.col("event_type").isin(*EQL_STAGES))
     v_t, c_t, p_t = EQL_STAGES
     maxspan = EQL_MAXSPAN_MS

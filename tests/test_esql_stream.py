@@ -6,12 +6,14 @@ result. Mergeable mode must equal the batch compiler's answer exactly
 after a multi-batch availableNow drain — across REAL micro-batch
 boundaries (maxFilesPerTrigger=1 over a multi-file source)."""
 
-import os
-
 import pytest
 
 from elasticsearch_hbase_river_spark.esql import ESQLError, esql
 from elasticsearch_hbase_river_spark.sources.tables import load_table
+from elasticsearch_hbase_river_spark.streaming.epochs import (
+    epoch_ids,
+    read_feed,
+)
 from elasticsearch_hbase_river_spark.streaming.esql_stream import (
     plan_esql_stream,
     read_esql_stream_result,
@@ -41,9 +43,8 @@ def _src(spark, sf_dir, tmp_path, n_files=4):
 
 
 def _stream(spark, src):
-    return (spark.readStream
-            .schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", "1").parquet(src))
+    return read_feed(spark, src, spark.read.parquet(src).schema,
+                     files_per_trigger=1)
 
 
 def test_mergeable_stream_equals_batch(spark, sf_dir, tmp_path):
@@ -54,8 +55,7 @@ def test_mergeable_stream_equals_batch(spark, sf_dir, tmp_path):
     assert q.awaitTermination(180), "stream did not drain in 180s"
 
     # the maintenance crossed REAL micro-batch boundaries
-    epochs = [n for n in os.listdir(os.path.join(state, "partials"))
-              if n.startswith("epoch=")]
+    epochs = epoch_ids(state, "partials")
     assert len(epochs) >= 2, epochs
 
     got = read_esql_stream_result(spark, MERGE_TEXT, state)
@@ -173,8 +173,7 @@ def test_streaming_ts_gauge_equals_batch(spark, sf_dir, tmp_path):
     q = start_esql_stream(spark, TS_TEXT, _stream(spark, src), state,
                           str(tmp_path / "ckpt"), ts_specs=spec)
     assert q.awaitTermination(180), "stream did not drain in 180s"
-    epochs = [n for n in os.listdir(os.path.join(state, "partials"))
-              if n.startswith("epoch=")]
+    epochs = epoch_ids(state, "partials")
     assert len(epochs) >= 2, epochs
     got = read_esql_stream_result(spark, TS_TEXT, state)
     expect = esql(spark, TS_TEXT, tables={"ev": spark.read.parquet(src)},
@@ -214,8 +213,7 @@ def test_order_statistics_stream_as_exact_list_partials(
     q = start_esql_stream(spark, text, _stream(spark, src), state,
                           str(tmp_path / "ckpt"))
     assert q.awaitTermination(180), "stream did not drain in 180s"
-    epochs = [n for n in os.listdir(os.path.join(state, "partials"))
-              if n.startswith("epoch=")]
+    epochs = epoch_ids(state, "partials")
     assert len(epochs) >= 2, epochs
     got = read_esql_stream_result(spark, text, state)
     expect = esql(spark, text, tables={"ev": spark.read.parquet(src)})

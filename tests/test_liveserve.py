@@ -17,22 +17,26 @@ from elasticsearch_hbase_river_spark.operators.indexed_search import (
     build_index,
 )
 from elasticsearch_hbase_river_spark.operators.search import inverted_postings
+from elasticsearch_hbase_river_spark.streaming.epochs import (
+    stamp_epochs_layout,
+    write_epoch,
+)
 
 
 def _write_epoch(spark, epochs_dir: str, epoch: int, docs) -> None:
+    """One index epoch built independently of the stream's part builder,
+    so a drift in ``index_epoch_parts`` cannot hide in the expectation."""
     from elasticsearch_hbase_river_spark.functions.analyzer import (
         analyze_tokens,
     )
-    from elasticsearch_hbase_river_spark.streaming.river_stream import (
-        stamp_epochs_layout,
-    )
 
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    (inverted_postings(df).write.mode("overwrite")
-     .parquet(f"{epochs_dir}/postings/epoch={epoch}"))
-    (df.select("doc_id",
-               F.size(analyze_tokens(F.col("text"))).cast("long").alias("dl"))
-     .write.mode("overwrite").parquet(f"{epochs_dir}/docs/epoch={epoch}"))
+    write_epoch(epochs_dir, epoch, {
+        "postings": inverted_postings(df),
+        "docs": df.select(
+            "doc_id",
+            F.size(analyze_tokens(F.col("text"))).cast("long").alias("dl")),
+    })
     stamp_epochs_layout(epochs_dir)
 
 

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from elasticsearch_hbase_river_spark.operators import nesteddoc as nd
+from elasticsearch_hbase_river_spark.streaming.epochs import epoch_ids
 
 
 def _plan(df) -> str:
@@ -33,6 +34,22 @@ def test_sparse_cells_writer_conditioned(spark, sf_dir):
     assert got[("meta", "user_id")] == n
     assert got[("data", "value")] == n_pc
     assert got[("data", "props")] == n - n_sign
+
+
+def test_nested_live_fixture_docs_are_the_churned_events(spark, sf_dir):
+    """The live fixture's epoch takes its doc manifest from the melted
+    cells' row keys, as the nested stream does; ``sparse_melt`` keeps both
+    meta cells of every event, so that manifest is exactly the churned
+    event ids."""
+    from elasticsearch_hbase_river_spark.streaming.river_stream import (
+        nested_epoch_parts,
+    )
+
+    churned = (nd.load_table(spark, sf_dir, "events")
+               .filter(nd._nlive_churn_sel()))
+    docs = nested_epoch_parts(nd.sparse_melt(churned))["docs"]
+    want = {str(r.event_id) for r in churned.select("event_id").collect()}
+    assert {r.doc_id for r in docs.collect()} == want and want
 
 
 def test_fielded_cells_discovers_json_leaves(spark, sf_dir):
@@ -226,10 +243,7 @@ def test_nested_stream_single_drain_multibatch_live_equals_rebuild(
                                   str(tmp_path / "mb_ckpt"),
                                   files_per_trigger=1)
     assert q.awaitTermination(240), "stream did not drain in 240s"
-    import os
-
-    n_epochs = len([d for d in os.listdir(os.path.join(epochs, "docs"))
-                    if d.startswith("epoch=")])
+    n_epochs = len(epoch_ids(epochs, "docs"))
     assert n_epochs == 3, f"expected 3 micro-batch epochs, got {n_epochs}"
 
     final_cells = _mk_cells(spark, (
@@ -294,8 +308,8 @@ def test_nested_stream_sidecar_fast_path_equals_rebuild(spark, tmp_path):
                                   files_per_trigger=1,
                                   base_index_dir=base)
     assert q.awaitTermination(240), "stream did not drain in 240s"
-    assert nd._epoch_ids(epochs, "docs") == {0, 1, 2}
-    assert nd._epoch_ids(epochs, "fstats_delta") == {0, 1, 2}
+    assert epoch_ids(epochs, "docs") == {0, 1, 2}
+    assert epoch_ids(epochs, "fstats_delta") == {0, 1, 2}
 
     final_cells = _mk_cells(spark, (
         _doc_cells("1", "view", "87", 30)

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from elasticsearch_hbase_river_spark.config import RiverConfig
@@ -690,10 +691,10 @@ def test_epochs_layout_marker_refuses_foreign_directory(spark, tmp_path):
     beside the old epochs and silently drop them at read time."""
     import os
 
-    import pytest
-
-    from elasticsearch_hbase_river_spark.streaming.river_stream import (
+    from elasticsearch_hbase_river_spark.streaming.epochs import (
         EPOCHS_LAYOUT_VERSION,
+    )
+    from elasticsearch_hbase_river_spark.streaming.river_stream import (
         read_epoch_docs,
         read_inverted_index,
         start_index_stream,
@@ -830,3 +831,151 @@ def test_streaming_eql_sequence_equals_batch_matches(spark, sf_dir,
     assert n_want > 0
     assert got.count() == n_want
     assert got.join(want, cols + ["c"], "full_outer").count() == n_want
+
+
+def test_stream_sink_applies_custom_mapping(spark, sf_dir, tmp_path):
+    """The streaming river's parquet sink lands the same mapped schema as
+    the batch tick's sink (plus the micro-batch id)."""
+    from elasticsearch_hbase_river_spark.plans.pipeline import run_once
+
+    cfg = RiverConfig(
+        table="events", index="river", type_name="doc", column_separator="::",
+        interval_ms=1000,
+        custom_mapping="doc_id STRING, doc_ts_ms LONG, doc_json STRING, "
+                       "ingest_tag STRING")
+    src, sink = str(tmp_path / "src_map"), str(tmp_path / "sink_map")
+    _write_cells(spark, sf_dir, src)
+    q = start_river_stream(spark, cfg, src, sink, str(tmp_path / "ckpt"),
+                           available_now=True)
+    assert q.awaitTermination(120), "stream did not drain in 120s"
+    tick_sink = str(tmp_path / "tick_sink")
+    run_once(spark, cells_from_events(spark, sf_dir), cfg, tick_sink)
+
+    def shape(path):
+        return [(f.name, f.dataType.simpleString())
+                for f in spark.read.parquet(path).schema.fields]
+
+    assert shape(sink) == [
+        ("doc_id", "string"), ("doc_ts_ms", "bigint"),
+        ("doc_json", "string"), ("ingest_tag", "string"),
+        ("batch_id", "int")]
+    assert shape(sink)[:-1] == shape(tick_sink)
+    assert spark.read.parquet(sink).count() == 1000
+
+
+def _replay_index(spark, sf_dir, tmp_path):
+    from elasticsearch_hbase_river_spark.streaming.river_stream import (
+        read_inverted_index, start_index_stream,
+    )
+
+    src, root = str(tmp_path / "src"), str(tmp_path / "index")
+    spark.createDataFrame(
+        [(i, f"spark join w{i % 5}", None) for i in range(40)],
+        "doc_id long, text string, ver long") \
+        .repartition(2).write.parquet(src)
+    return (lambda ckpt: start_index_stream(spark, src, root, ckpt),
+            root, "postings",
+            lambda: [read_inverted_index(spark, root)])
+
+
+def _replay_nested(spark, sf_dir, tmp_path):
+    from elasticsearch_hbase_river_spark.operators.nesteddoc import (
+        read_nested_epochs, sparse_cells,
+    )
+    from elasticsearch_hbase_river_spark.streaming.river_stream import (
+        start_nested_index_stream,
+    )
+
+    src, root = str(tmp_path / "src"), str(tmp_path / "nested")
+    sparse_cells(spark, sf_dir).repartition(2, "row_key").write.parquet(src)
+    return (lambda ckpt: start_nested_index_stream(
+                spark, src, root, ckpt, files_per_trigger=1),
+            root, "docs",
+            lambda: list(read_nested_epochs(spark, root)))
+
+
+def _replay_vector(spark, sf_dir, tmp_path):
+    from elasticsearch_hbase_river_spark.streaming.river_stream import (
+        read_vector_deltas, start_vector_stream,
+    )
+
+    src, root = str(tmp_path / "src"), str(tmp_path / "vdelta")
+    spark.createDataFrame(
+        [(i, [float(i), 1.0], i % 3, None) for i in range(40)],
+        "vec_id long, embedding array<float>, label int, ver long") \
+        .repartition(2).write.parquet(src)
+    return (lambda ckpt: start_vector_stream(spark, src, root, ckpt),
+            root, "", lambda: [read_vector_deltas(spark, root)])
+
+
+def _replay_percolate(spark, sf_dir, tmp_path):
+    from elasticsearch_hbase_river_spark.streaming.river_stream import (
+        start_percolate_stream,
+    )
+
+    src, root = str(tmp_path / "src"), str(tmp_path / "alerts")
+    spark.createDataFrame(
+        [(i, f"spark join w{i % 5}") for i in range(40)],
+        "doc_id long, text string").repartition(2).write.parquet(src)
+    stored = spark.createDataFrame(
+        [(0, "spark"), (0, "join"), (1, "w3")], "query_id long, token string")
+    return (lambda ckpt: start_percolate_stream(spark, src, stored, root,
+                                                ckpt),
+            root, "", lambda: [spark.read.parquet(root)])
+
+
+def _replay_esql(spark, sf_dir, tmp_path):
+    from elasticsearch_hbase_river_spark.sources.tables import load_table
+    from elasticsearch_hbase_river_spark.streaming.epochs import read_feed
+    from elasticsearch_hbase_river_spark.streaming.esql_stream import (
+        read_esql_stream_result, start_esql_stream,
+    )
+
+    text = ("FROM ev | STATS n = COUNT(*), total = ROUND(SUM(value), 4) "
+            "BY event_type | SORT event_type")
+    src, root = str(tmp_path / "src"), str(tmp_path / "state")
+    (load_table(spark, sf_dir, "events")
+     .select("event_id", "event_type", "value")
+     .repartition(2).write.parquet(src))
+    schema = spark.read.parquet(src).schema
+    return (lambda ckpt: start_esql_stream(
+                spark, text, read_feed(spark, src, schema,
+                                       files_per_trigger=1), root, ckpt),
+            root, "partials",
+            lambda: [read_esql_stream_result(spark, text, root)])
+
+
+@pytest.mark.parametrize("setup", [
+    _replay_index, _replay_nested, _replay_vector, _replay_percolate,
+    _replay_esql], ids=["index", "nested", "vector", "percolate", "esql"])
+def test_replayed_batch_rewrites_its_own_epoch(spark, sf_dir, tmp_path,
+                                               setup):
+    """A crash between the epoch write and the checkpoint commit makes
+    Spark re-run the batch under the same id; the epoch overwrite must
+    leave the epoch set and the merged read exactly as they were."""
+    import os
+
+    from elasticsearch_hbase_river_spark.streaming.epochs import epoch_ids
+
+    start, root, sub, reads = setup(spark, sf_dir, tmp_path)
+    ckpt = str(tmp_path / "ckpt")
+
+    def drain():
+        q = start(ckpt)
+        assert q.awaitTermination(240), "stream did not drain in 240s"
+        return (epoch_ids(root, sub),
+                [sorted(map(repr, df.collect())) for df in reads()])
+
+    before = drain()
+    last = max(before[0])
+    last_dir = os.path.join(root, sub, f"epoch={last}")
+    files = set(os.listdir(last_dir))
+    commits = os.path.join(ckpt, "commits")
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+
+    assert drain() == before
+    # the batch really ran again: its epoch holds freshly written files
+    assert set(os.listdir(last_dir)) != files
+    assert os.path.exists(os.path.join(commits, str(last)))

@@ -42,20 +42,18 @@ def main() -> None:
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 
-    from elasticsearch_hbase_river_spark.functions.analyzer import (
-        analyze_tokens,
-    )
     from elasticsearch_hbase_river_spark.operators import (
         indexed_search as ix,
     )
     from elasticsearch_hbase_river_spark.operators import liveserve as lv
-    from elasticsearch_hbase_river_spark.operators.search import (
-        BM25_TERMS,
-        inverted_postings,
-    )
+    from elasticsearch_hbase_river_spark.operators.search import BM25_TERMS
     from elasticsearch_hbase_river_spark.sources.tables import load_table
-    from elasticsearch_hbase_river_spark.streaming.river_stream import (
+    from elasticsearch_hbase_river_spark.streaming.epochs import (
         stamp_epochs_layout,
+        write_epoch,
+    )
+    from elasticsearch_hbase_river_spark.streaming.river_stream import (
+        index_epoch_parts,
     )
 
     def gc() -> None:
@@ -106,12 +104,7 @@ def main() -> None:
                                  .alias("text")))
             delta = churned.unionByName(fresh_new)
             t0 = time.time()
-            (inverted_postings(delta).write.mode("overwrite")
-             .parquet(f"{epochs}/postings/epoch={e}"))
-            (delta.select("doc_id",
-                          F.size(analyze_tokens(F.col("text")))
-                          .cast("long").alias("dl"))
-             .write.mode("overwrite").parquet(f"{epochs}/docs/epoch={e}"))
+            write_epoch(epochs, e, index_epoch_parts(delta))
             stamp_epochs_layout(epochs)
             append_sec = round(time.time() - t0, 2)
             serve, rows = timed(
