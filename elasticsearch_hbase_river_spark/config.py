@@ -9,7 +9,39 @@ Mirrors the reference's config surface and validation:
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
+
+_DDL_FIELD = re.compile(r"\s*(`(?:[^`]|``)*`|[^\s:`]+)\s*:?\s*(\w+)")
+
+
+def _ddl_fields(ddl: str) -> list[tuple[str, str]]:
+    """(name, type keyword) of each top-level field of a Spark DDL schema
+    string such as ``"a BIGINT, s STRUCT<x: INT>, d DECIMAL(10,2)"``: the
+    string splits at commas outside ``<>``/``()`` nesting and backquotes,
+    and a backquoted name is unquoted. Parsed here, not by Spark, so a
+    config validates without a session."""
+    parts, depth, quoted, start = [], 0, False, 0
+    for i, ch in enumerate(ddl):
+        if ch == "`":
+            quoted = not quoted
+        elif not quoted and ch in "<(":
+            depth += 1
+        elif not quoted and ch in ">)":
+            depth -= 1
+        elif not quoted and ch == "," and depth == 0:
+            parts.append(ddl[start:i])
+            start = i + 1
+    parts.append(ddl[start:])
+    out = []
+    for part in parts:
+        m = _DDL_FIELD.match(part)
+        if m:
+            name = m.group(1)
+            if name.startswith("`"):
+                name = name[1:-1].replace("``", "`")
+            out.append((name, m.group(2)))
+    return out
 
 
 @dataclass(frozen=True)
@@ -64,10 +96,14 @@ class RiverConfig:
         if self.qualifiers and not self.family:
             # setQualifier requires setFamily (HBaseParser.java:94-98 guard)
             raise ValueError("qualifiers filter requires a family filter")
-        if self.custom_mapping and "doc_ts_ms" not in self.custom_mapping:
+        if self.custom_mapping and not any(
+                name == "doc_ts_ms" and typ.upper() in ("BIGINT", "LONG")
+                for name, typ in _ddl_fields(self.custom_mapping)):
             # The incremental watermark is max(doc_ts_ms) over the sink — a
-            # mapping that drops it breaks every later tick (the reference's
-            # equivalent: its facet watermark query needs _timestamp enabled,
-            # HBaseRiver.java:223-231 + HBaseParser.java:258-280).
-            raise ValueError("custom_mapping must retain doc_ts_ms "
-                             "(the incremental watermark column)")
+            # mapping that drops, renames or retypes it breaks every later
+            # tick (the reference's equivalent: its facet watermark query
+            # needs _timestamp enabled, HBaseRiver.java:223-231 +
+            # HBaseParser.java:258-280).
+            raise ValueError("custom_mapping must declare a top-level "
+                             "doc_ts_ms BIGINT column (the incremental "
+                             "watermark column)")

@@ -44,9 +44,9 @@ def write_bulk(docs: DataFrame, path: str, batch_size: int = 100,
     second pass over ``docs`` or the sink.
 
     ``partition_by_day`` lays the sink out as ``dt=YYYY-MM-DD/`` directories
-    derived from ``doc_ts_ms`` — at scale this is what makes the watermark
-    lookup (max doc_ts) and any time-ranged read partition-pruned instead
-    of a full-table scan."""
+    derived from ``doc_ts_ms``, so a time-ranged read is partition-pruned
+    instead of a full-table scan. The watermark lookup is not a read: it
+    takes max ``doc_ts_ms`` from every file's footer, partitioned or not."""
     obs = Observation()
     w = docs.observe(obs, F.count(F.lit(1)).alias("n"),
                      F.max("doc_ts_ms").alias("mx"))

