@@ -21,6 +21,7 @@ from __future__ import annotations
 import os
 import shutil
 from dataclasses import dataclass
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -200,25 +201,31 @@ def data_files(path: str) -> list[str]:
     return out
 
 
-def _file_max_ts(path: str) -> int | None:
-    """Max ``doc_ts_ms`` of one parquet file from its footer's row-group
-    statistics (None when the file holds no non-null value). A row group
-    with values but no min/max stats (a foreign writer's
+def _footer_max(path: str, column: str) -> int | None:
+    """Max of the integer ``column`` of one parquet file, from its footer's
+    row-group statistics (None when the file holds no non-null value). A
+    row group with values but no min/max stats (a foreign writer's
     ``write_statistics=False``) is answered by reading this file's
-    ``doc_ts_ms`` column, so the result stays exact."""
+    ``column``, so the result stays exact. Raises ValueError unless the
+    file has exactly one top-level column named ``column`` under Spark's
+    case-insensitive resolution, spelled exactly so, of signed integer
+    type."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     md = pq.read_metadata(path)
-    col = next((j for j in range(md.num_columns)
-                if md.schema.column(j).path == "doc_ts_ms"), None)
-    if col is None:
-        raise ValueError(f"sink file {path} has no doc_ts_ms column")
+    paths = [md.schema.column(j).path for j in range(md.num_columns)]
+    hits = [j for j, p in enumerate(paths)
+            if p.split(".")[0].lower() == column.lower()]
+    if len(hits) != 1 or paths[hits[0]] != column:
+        raise ValueError(f"{path} has no unambiguous {column} column")
+    col = hits[0]
     c = md.schema.column(col)
     if (c.physical_type not in ("INT32", "INT64")
-            or c.logical_type.type not in ("NONE", "INT")):
-        raise ValueError(f"sink file {path}: doc_ts_ms must be an integer "
-                         f"column, found {c.physical_type} {c.logical_type}")
+            or c.logical_type.type not in ("NONE", "INT")
+            or c.converted_type.startswith("UINT")):
+        raise ValueError(f"{path}: {column} must be an integer column, "
+                         f"found {c.physical_type} {c.logical_type}")
     mx = None
     for g in range(md.num_row_groups):
         rg = md.row_group(g)
@@ -227,7 +234,7 @@ def _file_max_ts(path: str) -> int | None:
                                 and st.null_count == rg.num_rows):
             continue
         if st is None or not st.has_min_max:
-            return pc.max(pq.ParquetFile(path).read(columns=["doc_ts_ms"])
+            return pc.max(pq.ParquetFile(path).read(columns=[column])
                           .column(0)).as_py()
         mx = st.max if mx is None else max(mx, st.max)
     return mx
@@ -248,8 +255,78 @@ def sink_max_ts(spark: SparkSession, sink_path: str) -> int:
     reference's ``batchSize ⇒ maxRecordsPerFile`` mapping stays: file
     count no longer dominates the idle tick."""
     maxes = [m for f in data_files(sink_path)
-             if (m := _file_max_ts(f)) is not None]
+             if (m := _footer_max(f, "doc_ts_ms")) is not None]
     return max(maxes) + 1 if maxes else 0
+
+
+_LOGICAL_RELATION = "org.apache.spark.sql.execution.datasources.LogicalRelation"
+_FS_RELATION = "org.apache.spark.sql.execution.datasources.HadoopFsRelation"
+_PARQUET = ("org.apache.spark.sql.execution.datasources.parquet."
+            "ParquetFileFormat")
+
+
+def _scan_files(cells: DataFrame) -> list[str] | None:
+    """The ``inputFiles()`` URIs of ``cells`` when it is a plain file scan:
+    its analyzed plan is exactly a ``LogicalRelation`` over a parquet
+    ``HadoopFsRelation`` with no partition columns, on the local
+    filesystem, with a BIGINT ``ts_ms`` and no ``_metadata`` data column.
+    The list is the listing Spark made when the DataFrame was built. None
+    for every other input (a melt, ``createDataFrame``, csv/json/orc, any
+    filter or projection)."""
+    if (dict(cells.dtypes).get("ts_ms") != "bigint"
+            or any(c.lower() == "_metadata" for c in cells.columns)):
+        return None
+    plan = cells._jdf.queryExecution().analyzed()
+    if plan.getClass().getName() != _LOGICAL_RELATION:
+        return None
+    rel = plan.relation()
+    if (rel.getClass().getName() != _FS_RELATION
+            or rel.fileFormat().getClass().getName() != _PARQUET
+            or rel.partitionSchema().nonEmpty()):
+        return None
+    uris = cells.inputFiles()
+    if any(urlparse(u).scheme != "file" or urlparse(u).netloc for u in uris):
+        return None
+    return uris
+
+
+def _prune_to_watermark(cells: DataFrame,
+                        seen: int) -> tuple[DataFrame | None, bool]:
+    """File-level min-timestamp skipping, the twin of the reference's
+    ``scanner.setMinTimestamp`` (HBaseParser.java:100), for a plain
+    parquet scan (:func:`_scan_files`): a file whose footer proves every
+    ``ts_ms`` is ≤ ``seen`` or null holds no cell the tick can take, so it
+    is dropped from the scan before any job runs.
+
+    Returns ``(cells, proven)``. ``cells`` keeps the caller's DataFrame,
+    its reader options and imposed schema, restricted to the kept files by
+    a ``_metadata.file_path`` filter that Spark applies while listing; it
+    is None when no file is kept. ``proven`` is True when some kept
+    file's footer shows a value above ``seen``. A file whose footer cannot
+    answer (unreadable, no exact ``ts_ms`` column, ``ts_ms`` not a signed
+    integer) is kept, and Spark reads it exactly as before. Any other
+    input comes back unchanged with ``proven`` False."""
+    uris = _scan_files(cells)
+    if uris is None:
+        return cells, False
+    kept, proven = [], False
+    for uri in uris:
+        try:
+            mx = _footer_max(unquote(urlparse(uri).path), "ts_ms")
+        except (OSError, ValueError):
+            kept.append(uri)
+            continue
+        if mx is not None and mx > seen:
+            kept.append(uri)
+            proven = True
+    if not kept:
+        return None, False
+    if len(kept) < len(uris):
+        # file_path is the URI without the empty authority: file:/a%20b
+        # where inputFiles() gives file:///a%20b
+        cells = cells.filter(F.col("_metadata.file_path").isin(
+            ["file:" + urlparse(u).path for u in kept]))
+    return cells, proven
 
 
 def run_once(spark: SparkSession, cells: DataFrame, config: RiverConfig,
@@ -259,17 +336,39 @@ def run_once(spark: SparkSession, cells: DataFrame, config: RiverConfig,
     the sink watermark, transform, upsert-append to the sink.
 
     Watermark rule: the sink is read once, ``wm = sink_max_ts`` before the
-    write. An idle tick (no in-scope cell above ``wm``) writes nothing and
-    keeps ``wm``. Otherwise the write job itself reports the count and max
-    ``doc_ts_ms`` of the rows it appended, and the new watermark is
-    ``max(wm, max + 1)``: what a post-write ``sink_max_ts`` would return,
-    since the new sink is the old one plus exactly those rows. That holds
-    for a single writer per sink, as in the reference (one river thread
-    per index).
+    write, and the tick takes the in-scope cells with ``ts_ms >= wm``. An
+    idle tick (no such cell) writes nothing and keeps ``wm``. Otherwise the
+    write job itself reports the count and max ``doc_ts_ms`` of the rows it
+    appended, and the new watermark is ``max(wm, max + 1)``: what a
+    post-write ``sink_max_ts`` would return, since the new sink is the old
+    one plus exactly those rows. That holds for a single writer per sink,
+    as in the reference (one river thread per index).
 
-    Spark jobs per tick: the watermark read runs none, the emptiness probe
-    one, the observed write two. So a no-op tick runs 1 job, and a cold
-    or delta tick 3.
+    Source pruning applies when ``cells`` is a plain parquet file scan, as
+    ``read_cells(spark, path)`` returns (:func:`_scan_files` has the exact
+    rule). The tick then reads every source file's footer on the driver
+    and never scans a file whose ``ts_ms`` max is below ``wm``
+    (:func:`_prune_to_watermark`). The emptiness probe is skipped when the
+    config has no family/qualifiers scope and a kept file's footer already
+    shows a cell at or above ``wm``. Any other ``cells`` (a melt such as
+    ``cells_from_events``, ``createDataFrame``, csv/json/orc, a filtered
+    or projected DataFrame) is scanned whole, with the probe.
+
+    Spark jobs per tick: the watermark read and the footer reads run none,
+    the emptiness probe one, the observed write two. On a pruned source a
+    no-op tick runs 0 jobs (1 if a file holds only out-of-scope cells at or
+    above ``wm``), an unscoped cold or delta tick 2 and a scoped one 3. On
+    any other input a no-op tick runs 1 job and a cold or delta tick 3.
+
+    Scale, on a 4-cpu host over 2,000-row deltas landed one parquet file
+    each (median of 4 ticks; before this pruning → with it). At 16, 106
+    and 406 source files the no-op tick took 0.19 → 0.066 s, 0.43 →
+    0.27 s and 1.24 → 1.09 s, and ran 1 → 0 jobs. The delta tick took
+    1.20 → 1.05 s, 1.14 → 0.93 s and 2.30 → 2.03 s, and its scans read 1
+    file instead of every source file twice (probe and write). What the
+    no-op tick still spends grows with history: the sink footer read
+    (:func:`sink_max_ts`) was 0.03, 0.16 and 0.82 s of it, at 400, 2,200
+    and 8,200 sink files, and one source footer read per landed file.
 
     With a ``reject_when`` predicate (the engine analog of bulk-response
     failures), failed rows are diverted to ``dead_letter_path`` and —
@@ -283,9 +382,16 @@ def run_once(spark: SparkSession, cells: DataFrame, config: RiverConfig,
     if reject_when is not None and dead_letter_path is None:
         raise ValueError("reject_when requires dead_letter_path")
     wm = sink_max_ts(spark, sink_path)
-    if scope_cells(cells, config).filter(F.col("ts_ms") > F.lit(wm)).isEmpty():
+    # wm is max + 1, and the scan starts AT it, as the reference's
+    # setMinTimestamp(max + 1) is inclusive (HBaseParser.java:271-272)
+    seen = wm - 1
+    cells, proven = _prune_to_watermark(cells, seen)
+    # a footer value above seen proves an unscoped tick non-empty
+    probe = not proven or bool(config.family or config.qualifiers)
+    if cells is None or (probe and scope_cells(cells, config)
+                         .filter(F.col("ts_ms") > F.lit(seen)).isEmpty()):
         return TickResult(rows_indexed=0, watermark_ms=wm, deleted_keys=0)
-    out = apply_sink_mapping(river_tick_plan(cells, config, wm), config)
+    out = apply_sink_mapping(river_tick_plan(cells, config, seen), config)
     if reject_when is None:
         res = write_bulk(out, sink_path, config.batch_size)
     else:
@@ -480,12 +586,14 @@ def near_dedup_against_sink(spark: SparkSession, new_docs: DataFrame,
         NEAR_DUP_MIN_SHARED, doc_bands, near_dup_decisions,
     )
 
-    # refuse a mid-swap compaction crash BEFORE the exists() check below
+    # refuse a mid-swap compaction crash BEFORE the data-file check below
     # could misread a stranded history as a fresh sink
     _assert_no_interrupted_compaction(bands_path)
     threshold = NEAR_DUP_MIN_SHARED if min_shared is None else min_shared
     nb = doc_bands(new_docs.select("doc_id", "text")).persist()
-    if os.path.exists(bands_path):
+    # a table with no data file yet (absent, or a crashed first append
+    # that left only _temporary) has no history to check against
+    if data_files(bands_path):
         _check_bands_format(bands_path)
         dec = near_dup_decisions(nb, spark.read.parquet(bands_path))
         dups = (dec.filter(F.col("n_shared_max") >= threshold)

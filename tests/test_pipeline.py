@@ -36,8 +36,8 @@ def _sink_files(sink: str) -> list[str]:
     return sorted(f for f in os.listdir(sink) if f.startswith("part-"))
 
 
-def _jobs_run(spark, fn) -> int:
-    """Number of Spark jobs ``fn()`` submits from this thread."""
+def _job_ids(spark, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn()`` submits from this thread."""
     sc = spark.sparkContext
     group = f"job-count-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "job-count guard")
@@ -46,7 +46,12 @@ def _jobs_run(spark, fn) -> int:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _jobs_run(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` submits from this thread."""
+    return len(_job_ids(spark, fn))
 
 
 def test_tick_is_incremental(spark, sf_dir, cfg, tmp_path):
@@ -82,6 +87,76 @@ def test_tick_job_counts(spark, sf_dir, cfg, tmp_path):
     assert tick(cells) <= 3                    # delta on an existing sink
     assert tick(cells) <= 1                    # no-op
     assert [t.rows_indexed > 0 for t in ticks] == [True, True, False]
+
+
+def _files_read(spark, job_ids) -> set[int]:
+    """The ``number of files read`` of every file scan in the SQL
+    executions that ran those jobs."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    out, it = set(), store.executionsList().iterator()
+    while it.hasNext():
+        e = it.next()
+        if not any(e.jobs().contains(j) for j in job_ids):
+            continue
+        values = store.executionMetrics(e.executionId())
+        metrics = e.metrics().iterator()
+        while metrics.hasNext():
+            m = metrics.next()
+            if m.name() == "number of files read":
+                out.add(int(values.get(m.accumulatorId()).get()))
+    return out
+
+
+def test_tick_takes_a_cell_one_ms_past_the_sink_max(spark, cfg, tmp_path):
+    """The watermark is max + 1 and the scan includes it, like the
+    reference's inclusive ``setMinTimestamp(max + 1)``: a cell landing
+    exactly one millisecond after the sink's newest is indexed."""
+    cells = spark.createDataFrame(
+        [("a", "f", "q", "1", 5), ("b", "f", "q", "2", 6)],
+        "row_key string, family string, qualifier string, value string, "
+        "ts_ms long")
+    sink = str(tmp_path / "sink_edge")
+    first = run_once(spark, cells.filter(F.col("ts_ms") <= 5), cfg, sink)
+    assert (first.rows_indexed, first.watermark_ms) == (1, 6)
+    second = run_once(spark, cells, cfg, sink)
+    assert (second.rows_indexed, second.watermark_ms) == (1, 7)
+
+
+def test_file_source_tick_job_counts(spark, sf_dir, cfg, tmp_path):
+    """Over landed parquet files, the footers decide what a tick reads: a
+    no-op tick runs no job, an unscoped tick skips the emptiness probe,
+    and a delta tick scans only the file landed since the last tick."""
+    from elasticsearch_hbase_river_spark.sources.formats import (
+        read_cells, write_cells,
+    )
+
+    cells = cells_from_events(spark, sf_dir)
+    lo, hi = cells.agg(F.min("ts_ms"), F.max("ts_ms")).first()
+    cut1, cut2 = lo + (hi - lo) // 3, lo + 2 * (hi - lo) // 3
+    slices = [cells.filter(F.col("ts_ms") <= cut1),
+              cells.filter(F.col("ts_ms").between(cut1 + 1, cut2)),
+              cells.filter(F.col("ts_ms") > cut2)]
+    family = RiverConfig(table="events", index="river", type_name="doc",
+                         column_separator="::", family="meta")
+    for name, config, cold_max, delta_max in (("unscoped", cfg, 2, 2),
+                                              ("family", family, 3, 3)):
+        src, sink = str(tmp_path / f"src_{name}"), str(tmp_path / name)
+        ticks = []
+
+        def tick():
+            return _job_ids(spark, lambda: ticks.append(
+                run_once(spark, read_cells(spark, src), config, sink)))
+
+        for s in slices[:2]:
+            write_cells(s.coalesce(1), src, mode="append")
+        assert len(tick()) <= cold_max, name               # cold
+        write_cells(slices[2].coalesce(1), src, mode="append")
+        delta = tick()
+        assert len(delta) <= delta_max, name
+        assert _files_read(spark, delta) == {1}, name      # the new file
+        assert len(tick()) == 0, name                      # no-op
+        assert [t.rows_indexed > 0 for t in ticks] == [True, True, False]
+        assert ticks[2].watermark_ms == ticks[1].watermark_ms
 
 
 def _multi_file_sink(spark, sf_dir, tmp_path):
@@ -716,6 +791,24 @@ def test_band_sink_refuses_incompatible_format(spark, sf_dir, tmp_path):
     spark.createDataFrame([(1,)], "doc_id long").write.parquet(unstamped)
     with pytest.raises(ValueError, match="format_version"):
         near_dedup_against_sink(spark, docs, unstamped)
+
+
+def test_band_table_after_crashed_first_append(spark, sf_dir, tmp_path):
+    """A band table whose first append died before its job commit holds
+    only ``_temporary`` and no marker. It has no history, so the next
+    tick starts it afresh instead of refusing it as a foreign format."""
+    from elasticsearch_hbase_river_spark.plans.pipeline import (
+        _BANDS_META, BANDS_FORMAT_VERSION, near_dedup_against_sink,
+    )
+
+    bands = _crashed_first_write(tmp_path)
+    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
+            .select("doc_id", "text").filter(F.col("doc_id") < 20))
+    assert near_dedup_against_sink(spark, docs, bands).count() == 20
+    with open(os.path.join(bands, _BANDS_META)) as f:
+        assert json.load(f)["format_version"] == BANDS_FORMAT_VERSION
+    # the restarted table now holds history: a copy is a duplicate
+    assert near_dedup_against_sink(spark, docs, bands).count() == 0
 
 
 def test_vector_upsert_into_occupied_out_path_raises(spark, sf_dir, tmp_path):

@@ -13,6 +13,7 @@ from __future__ import annotations
 import re
 import string
 
+import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
@@ -277,6 +278,20 @@ def _river_history(draw):
     return cells, cuts
 
 
+def _latest(spark, sink: str) -> dict:
+    """doc_id -> (doc_ts_ms, doc_json) of the newest row per id in a sink;
+    empty for a sink with no data file."""
+    from elasticsearch_hbase_river_spark.plans.pipeline import data_files
+
+    best = {}
+    if not data_files(sink):
+        return best
+    for r in spark.read.parquet(sink).collect():
+        if r.doc_id not in best or r.doc_ts_ms > best[r.doc_id][0]:
+            best[r.doc_id] = (r.doc_ts_ms, r.doc_json)
+    return best
+
+
 @settings(max_examples=5, deadline=None)
 @given(_river_history())
 def test_incremental_ticks_match_one_tick(spark, history):
@@ -296,17 +311,107 @@ def test_incremental_ticks_match_one_tick(spark, history):
     cfg = RiverConfig(table="t", index="i", type_name="d",
                       column_separator="::")
 
-    def latest(sink):
-        best = {}
-        for r in spark.read.parquet(sink).collect():
-            if r.doc_id not in best or r.doc_ts_ms > best[r.doc_id][0]:
-                best[r.doc_id] = (r.doc_ts_ms, r.doc_json)
-        return best
-
     with tempfile.TemporaryDirectory() as d:
         ticked, single = f"{d}/ticked", f"{d}/single"
         for cut in cuts:
             run_once(spark, df.filter(F.col("ts_ms") <= cut), cfg, ticked)
         run_once(spark, df, cfg, ticked)
         run_once(spark, df, cfg, single)
-        assert latest(ticked) == latest(single)
+        assert _latest(spark, ticked) == _latest(spark, single)
+
+
+#: How a landed slice's parquet file is written: pyarrow's defaults, no
+#: min/max statistics (the footer cannot answer; the column is read), or
+#: one row group per cell.
+_LAND_STYLES = ("plain", "no_stats", "row_groups")
+
+_SCOPES = {"unscoped": {}, "family": {"family": "f1"},
+           "id_field": {"id_field": "f1::q"}}
+
+
+def _land(src: str, rows: list, style: str) -> None:
+    """Write ``rows`` of cells as the next parquet file under ``src``."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = pa.schema([("row_key", pa.string()), ("family", pa.string()),
+                        ("qualifier", pa.string()), ("value", pa.string()),
+                        ("ts_ms", pa.int64())])
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema)
+    path = os.path.join(src, f"part-{len(os.listdir(src)):05d}.parquet")
+    pq.write_table(table, path, write_statistics=style != "no_stats",
+                   row_group_size=1 if style == "row_groups" else None)
+
+
+#: Four slices, so every landing style occurs, with a row version at
+#: exactly one millisecond past the first cut.
+_FOUR_SLICES = ([("a", "f1", "q", "x", 5), ("a", "f2", "z", "y", 5),
+                 ("b", "f1", "q", "y", 6), ("b", "f1", "x::y", "z", 6),
+                 ("a", "f1", "q", "z", 9), ("a", "f2", "z", "x", 9),
+                 ("c", "f2", "q", "x", 12)], [5, 6, 9])
+
+
+@pytest.mark.parametrize("scope", sorted(_SCOPES))
+@settings(max_examples=3, deadline=None)
+@given(history=_river_history(), order=st.permutations(_LAND_STYLES),
+       at=st.tuples(st.integers(0, 4), st.integers(0, 4)))
+@example(history=_FOUR_SLICES, order=_LAND_STYLES[::-1], at=(1, 3))
+def test_landed_file_ticks_match_probe_path_and_one_tick(spark, scope,
+                                                         history, order, at):
+    """Each cut of the history lands as its own parquet file, among them a
+    file without statistics, one of several row groups, one whose
+    ``ts_ms`` is all null and an empty one. A tick after every landing,
+    over ``read_cells`` (the footer-pruned scan), returns the same
+    ``TickResult`` as the same tick over a projected view of those cells
+    (the emptiness-probe path), and leaves the latest-wins view of one
+    tick over all the cells.
+
+    Under ``id_field`` the id cell's value is a function of the row, with
+    two rows sharing each id: a row whose id changed between versions
+    would keep its old document in an append-only sink, so incremental
+    and one-tick views could not agree."""
+    import os
+    import tempfile
+
+    from elasticsearch_hbase_river_spark.config import RiverConfig
+    from elasticsearch_hbase_river_spark.plans.pipeline import run_once
+    from elasticsearch_hbase_river_spark.sources.formats import read_cells
+
+    cells, cuts = history
+    if scope == "id_field":
+        cells = [(r, f, q, "AB"[r > "c"] if (f, q) == ("f1", "q") else v, ts)
+                 for r, f, q, v, ts in cells]
+    cfg = RiverConfig(table="t", index="i", type_name="d",
+                      column_separator="::", **_SCOPES[scope])
+    bounds = [0, *cuts, max(ts for *_, ts in cells)]
+    landings = [(style, [c for c in cells if lo < c[4] <= hi])
+                for style, lo, hi in zip(
+                    (order * 2)[:len(bounds) - 1], bounds, bounds[1:])]
+    landings.insert(min(at[0], len(landings)), (
+        "plain", [(r, f, q, v, None) for r, f, q, v, _ in cells[:3]]))
+    landings.insert(min(at[1], len(landings)), ("plain", []))
+
+    with tempfile.TemporaryDirectory() as d:
+        src = os.path.join(d, "landed %25 cells")
+        os.makedirs(src)
+        pruned, probed, single = (os.path.join(d, s) for s in
+                                  ("pruned", "probed", "single"))
+
+        def tick():
+            scan = read_cells(spark, src)
+            got = run_once(spark, scan, cfg, pruned)
+            assert got == run_once(spark, scan.select(*scan.columns), cfg,
+                                   probed)
+            return got
+
+        for style, rows in landings:
+            _land(src, rows, style)
+            tick()
+        assert tick().rows_indexed == 0
+        run_once(spark, spark.createDataFrame(
+            cells, "row_key string, family string, qualifier string, "
+                   "value string, ts_ms long"), cfg, single)
+        assert _latest(spark, pruned) == _latest(spark, single)
