@@ -3,9 +3,12 @@
 
 Reference mapping:
 
-- ``batchSize`` ops/bulk (HBaseRiver.java:59-62,150)  -> ``maxRecordsPerFile``
-  on the writer: each output file is one "bulk request"; executors write
-  their partitions in parallel instead of the reference's sequential RPCs.
+- ``batchSize`` ops/bulk (HBaseRiver.java:59-62,150)  -> rows per parquet
+  row group (``parquet.block.row.count.limit``): each row group is one
+  "bulk request", with its own footer stats, and each write task writes
+  one file; executors write their partitions in parallel instead of the
+  reference's sequential RPCs. ``write_es_bulk`` keeps one file per bulk
+  (``maxRecordsPerFile``), because there a file is the request body.
 - failed-key exclusion (HBaseParser.java:164-175)     -> ``left_anti`` ack
   join; Catalyst broadcasts the (small) failed set automatically.
 - dead-letter channel (HBaseCallbackLogger)           -> failed rows land in
@@ -13,9 +16,11 @@ Reference mapping:
 - delete-after-read (HBaseParser.java:176-180)        -> the acked key set,
   returned for the caller to apply to the source.
 
-Scale: no global sort or repartition is imposed here — ``maxRecordsPerFile``
-splits within each task, so writing stays embarrassingly parallel at any
-executor count.
+Scale: no global sort or repartition is imposed here — the row-group limit
+(and ``maxRecordsPerFile`` for ES bulk files) splits within each task, so
+writing stays embarrassingly parallel at any executor count. One file per
+task, not per bulk, matters on a local Hadoop filesystem without native IO:
+it forks a ``chmod`` for every file and directory it creates.
 """
 
 from __future__ import annotations
@@ -36,8 +41,10 @@ class BulkWriteResult:
 def write_bulk(docs: DataFrame, path: str, batch_size: int = 100,
                mode: str = "append",
                partition_by_day: bool = False) -> BulkWriteResult:
-    """Append documents as parquet with at most ``batch_size`` rows per file
-    (the bulk-request analog, HBaseParser.java:137-162).
+    """Append documents as parquet, one file per write task, with at most
+    ``batch_size`` rows per row group (the bulk-request analog,
+    HBaseParser.java:137-162): every row group but a file's last holds
+    exactly ``batch_size`` rows, and the footer keeps each one's stats.
 
     The row count and max ``doc_ts_ms`` of what landed come from the write
     job itself (``DataFrame.observe``), the bulk-response analog — no
@@ -54,7 +61,8 @@ def write_bulk(docs: DataFrame, path: str, batch_size: int = 100,
         w = w.withColumn(
             "dt", F.date_format(F.timestamp_millis(F.col("doc_ts_ms")),
                                 "yyyy-MM-dd"))
-    writer = w.write.option("maxRecordsPerFile", batch_size).mode(mode)
+    writer = (w.write.option("parquet.block.row.count.limit", batch_size)
+              .mode(mode))
     if partition_by_day:
         writer = writer.partitionBy("dt")
     writer.parquet(path)

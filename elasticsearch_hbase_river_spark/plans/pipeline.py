@@ -139,11 +139,21 @@ def scope_cells(cells: DataFrame, config: RiverConfig) -> DataFrame:
     return cells
 
 
+def _tick_scan(cells: DataFrame, config: RiverConfig,
+               watermark_ms: int | None) -> DataFrame:
+    """The in-scope cells with ``ts_ms > watermark_ms`` (every in-scope
+    cell for None)."""
+    cells = scope_cells(cells, config)
+    if watermark_ms is None:
+        return cells
+    return cells.filter(F.col("ts_ms") > F.lit(watermark_ms))
+
+
 def river_tick_plan(cells: DataFrame, config: RiverConfig,
-                    watermark_ms: int) -> DataFrame:
-    """The full §3.2 tick as one lazy plan: filter -> assemble -> upsert."""
-    scan = scope_cells(cells, config).filter(F.col("ts_ms") > F.lit(watermark_ms))
-    docs = assemble_documents(scan, config)
+                    watermark_ms: int | None) -> DataFrame:
+    """The full §3.2 tick as one lazy plan: filter -> assemble -> upsert.
+    ``watermark_ms=None`` takes every in-scope cell (no ``ts_ms`` filter)."""
+    docs = assemble_documents(_tick_scan(cells, config, watermark_ms), config)
     # upsert-by-id: latest doc_ts wins (HBaseParser.java:145-159 + watermark)
     w = Window.partitionBy("doc_id").orderBy(F.col("doc_ts_ms").desc(),
                                              F.col("row_key").desc())
@@ -201,15 +211,17 @@ def data_files(path: str) -> list[str]:
     return out
 
 
-def _footer_max(path: str, column: str) -> int | None:
-    """Max of the integer ``column`` of one parquet file, from its footer's
-    row-group statistics (None when the file holds no non-null value). A
-    row group with values but no min/max stats (a foreign writer's
-    ``write_statistics=False``) is answered by reading this file's
-    ``column``, so the result stays exact. Raises ValueError unless the
-    file has exactly one top-level column named ``column`` under Spark's
-    case-insensitive resolution, spelled exactly so, of signed integer
-    type."""
+def _footer_range(path: str,
+                  column: str) -> tuple[int | None, int | None, int]:
+    """``(min, max, nulls)`` of the integer ``column`` of one parquet file,
+    from its footer's row-group statistics (min and max are None when the
+    file holds no non-null value). A row group whose stats lack the null
+    count, or lack min/max next to values (a foreign writer's
+    ``write_statistics=False``), is answered by reading this file's
+    ``column``, so the result stays exact.
+    Raises ValueError unless the file has exactly one top-level column
+    named ``column`` under Spark's case-insensitive resolution, spelled
+    exactly so, of signed integer type."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -226,18 +238,23 @@ def _footer_max(path: str, column: str) -> int | None:
             or c.converted_type.startswith("UINT")):
         raise ValueError(f"{path}: {column} must be an integer column, "
                          f"found {c.physical_type} {c.logical_type}")
-    mx = None
+    lo = hi = None
+    nulls = 0
     for g in range(md.num_row_groups):
         rg = md.row_group(g)
         st = rg.column(col).statistics
-        if rg.num_rows == 0 or (st is not None and st.has_null_count
-                                and st.null_count == rg.num_rows):
+        if rg.num_rows == 0:
             continue
-        if st is None or not st.has_min_max:
-            return pc.max(pq.ParquetFile(path).read(columns=[column])
-                          .column(0)).as_py()
-        mx = st.max if mx is None else max(mx, st.max)
-    return mx
+        if (st is None or not st.has_null_count
+                or (st.null_count < rg.num_rows and not st.has_min_max)):
+            values = pq.ParquetFile(path).read(columns=[column]).column(0)
+            mm = pc.min_max(values).as_py()
+            return mm["min"], mm["max"], values.null_count
+        nulls += st.null_count
+        if st.null_count < rg.num_rows:
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+    return lo, hi, nulls
 
 
 def sink_max_ts(spark: SparkSession, sink_path: str) -> int:
@@ -251,11 +268,11 @@ def sink_max_ts(spark: SparkSession, sink_path: str) -> int:
     4-cpu host, sinks of 10-row engine-written files, this footer read vs
     the Spark aggregate it replaced (3 jobs: schema inference + a
     two-stage scan of every file): 240 files 0.022 s vs 0.44 s, 2,400
-    files 0.16 s vs 1.65 s, 24,000 files 1.9 s vs 10.7 s. So the
-    reference's ``batchSize ⇒ maxRecordsPerFile`` mapping stays: file
-    count no longer dominates the idle tick."""
+    files 0.16 s vs 1.65 s, 24,000 files 1.9 s vs 10.7 s. ``write_bulk``
+    maps ``batchSize`` to rows per row group and writes one file per task,
+    so a tick adds a file per write task, not per ``batchSize`` docs."""
     maxes = [m for f in data_files(sink_path)
-             if (m := _footer_max(f, "doc_ts_ms")) is not None]
+             if (m := _footer_range(f, "doc_ts_ms")[1]) is not None]
     return max(maxes) + 1 if maxes else 0
 
 
@@ -291,42 +308,47 @@ def _scan_files(cells: DataFrame) -> list[str] | None:
 
 
 def _prune_to_watermark(cells: DataFrame,
-                        seen: int) -> tuple[DataFrame | None, bool]:
+                        seen: int) -> tuple[DataFrame | None, bool, bool]:
     """File-level min-timestamp skipping, the twin of the reference's
     ``scanner.setMinTimestamp`` (HBaseParser.java:100), for a plain
     parquet scan (:func:`_scan_files`): a file whose footer proves every
     ``ts_ms`` is ≤ ``seen`` or null holds no cell the tick can take, so it
     is dropped from the scan before any job runs.
 
-    Returns ``(cells, proven)``. ``cells`` keeps the caller's DataFrame,
-    its reader options and imposed schema, restricted to the kept files by
-    a ``_metadata.file_path`` filter that Spark applies while listing; it
-    is None when no file is kept. ``proven`` is True when some kept
-    file's footer shows a value above ``seen``. A file whose footer cannot
-    answer (unreadable, no exact ``ts_ms`` column, ``ts_ms`` not a signed
-    integer) is kept, and Spark reads it exactly as before. Any other
-    input comes back unchanged with ``proven`` False."""
+    Returns ``(cells, proven, covered)``. ``cells`` keeps the caller's
+    DataFrame, its reader options and imposed schema, restricted to the
+    kept files by a ``_metadata.file_path`` filter that Spark applies while
+    listing; it is None when no file is kept. ``proven`` is True when some
+    kept file's footer shows a value above ``seen``; ``covered`` when every
+    kept file's footer shows all its ``ts_ms`` non-null and above ``seen``,
+    so a ``ts_ms > seen`` filter would drop nothing. A file whose footer
+    cannot answer (unreadable, no exact ``ts_ms`` column, ``ts_ms`` not a
+    signed integer) is kept, and Spark reads it exactly as before. Any
+    other input comes back unchanged with ``proven`` and ``covered``
+    False."""
     uris = _scan_files(cells)
     if uris is None:
-        return cells, False
-    kept, proven = [], False
+        return cells, False, False
+    kept, proven, covered = [], False, True
     for uri in uris:
         try:
-            mx = _footer_max(unquote(urlparse(uri).path), "ts_ms")
+            lo, hi, nulls = _footer_range(unquote(urlparse(uri).path), "ts_ms")
         except (OSError, ValueError):
             kept.append(uri)
+            covered = False
             continue
-        if mx is not None and mx > seen:
+        if hi is not None and hi > seen:
             kept.append(uri)
             proven = True
+            covered = covered and nulls == 0 and lo > seen
     if not kept:
-        return None, False
+        return None, False, False
     if len(kept) < len(uris):
         # file_path is the URI without the empty authority: file:/a%20b
         # where inputFiles() gives file:///a%20b
         cells = cells.filter(F.col("_metadata.file_path").isin(
             ["file:" + urlparse(u).path for u in kept]))
-    return cells, proven
+    return cells, proven, covered
 
 
 def run_once(spark: SparkSession, cells: DataFrame, config: RiverConfig,
@@ -354,11 +376,24 @@ def run_once(spark: SparkSession, cells: DataFrame, config: RiverConfig,
     ``cells_from_events``, ``createDataFrame``, csv/json/orc, a filtered
     or projected DataFrame) is scanned whole, with the probe.
 
+    When the kept files' footers prove every ``ts_ms`` non-null and at or
+    above ``wm`` (deltas landed in ts order), the ``ts_ms >= wm`` filter
+    could drop nothing, so neither the tick's plan nor the probe carries
+    it. The plan then holds no per-tick literal, and a steady-state delta
+    tick reuses the code generated for the last one. A kept file that
+    straddles ``wm``, holds a null ``ts_ms`` or has a footer that cannot
+    answer, and every non-scan input, keep the filter; its watermark is
+    inlined in the generated code as a literal.
+
     Spark jobs per tick: the watermark read and the footer reads run none,
     the emptiness probe one, the observed write two. On a pruned source a
     no-op tick runs 0 jobs (1 if a file holds only out-of-scope cells at or
     above ``wm``), an unscoped cold or delta tick 2 and a scoped one 3. On
     any other input a no-op tick runs 1 job and a cold or delta tick 3.
+    Classes compiled per tick (``CodegenMetrics``), once the session has
+    run a tick of the same shape: 0 for a no-op tick, 0 for a delta tick
+    without the filter, and 2 for a delta tick with one (a new watermark
+    is new code).
 
     Scale, on a 4-cpu host over 2,000-row deltas landed one parquet file
     each (median of 4 ticks; before this pruning → with it). At 16, 106
@@ -366,9 +401,11 @@ def run_once(spark: SparkSession, cells: DataFrame, config: RiverConfig,
     0.27 s and 1.24 → 1.09 s, and ran 1 → 0 jobs. The delta tick took
     1.20 → 1.05 s, 1.14 → 0.93 s and 2.30 → 2.03 s, and its scans read 1
     file instead of every source file twice (probe and write). What the
-    no-op tick still spends grows with history: the sink footer read
-    (:func:`sink_max_ts`) was 0.03, 0.16 and 0.82 s of it, at 400, 2,200
-    and 8,200 sink files, and one source footer read per landed file.
+    no-op tick still spends grows with history: one source footer read per
+    landed file, and the sink footer read (:func:`sink_max_ts`). With one
+    sink file per tick that read took 0.015, 0.077 and 0.14 s at 16, 106
+    and 406 sink files; with one file per ``batchSize`` bulk it took
+    0.048, 0.27 and 0.94 s at 400, 2,200 and 8,200.
 
     With a ``reject_when`` predicate (the engine analog of bulk-response
     failures), failed rows are diverted to ``dead_letter_path`` and —
@@ -385,13 +422,15 @@ def run_once(spark: SparkSession, cells: DataFrame, config: RiverConfig,
     # wm is max + 1, and the scan starts AT it, as the reference's
     # setMinTimestamp(max + 1) is inclusive (HBaseParser.java:271-272)
     seen = wm - 1
-    cells, proven = _prune_to_watermark(cells, seen)
+    cells, proven, covered = _prune_to_watermark(cells, seen)
+    # footers proving every kept ts_ms above seen make the filter a no-op;
+    # without its literal the plan's generated code is the last tick's
+    bound = None if covered else seen
     # a footer value above seen proves an unscoped tick non-empty
     probe = not proven or bool(config.family or config.qualifiers)
-    if cells is None or (probe and scope_cells(cells, config)
-                         .filter(F.col("ts_ms") > F.lit(seen)).isEmpty()):
+    if cells is None or (probe and _tick_scan(cells, config, bound).isEmpty()):
         return TickResult(rows_indexed=0, watermark_ms=wm, deleted_keys=0)
-    out = apply_sink_mapping(river_tick_plan(cells, config, seen), config)
+    out = apply_sink_mapping(river_tick_plan(cells, config, bound), config)
     if reject_when is None:
         res = write_bulk(out, sink_path, config.batch_size)
     else:

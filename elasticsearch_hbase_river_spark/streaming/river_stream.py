@@ -73,7 +73,9 @@ def start_river_stream(
     ``sink_format``: ``"parquet"`` (columnar sink) or ``"es_bulk"`` —
     micro-batches land as Elasticsearch bulk-request files (action/source
     line pairs, one file per ≤ batchSize docs), the closest file-sink
-    analog of the reference's per-batch bulk RPC (HBaseParser.java:162)."""
+    analog of the reference's per-batch bulk RPC (HBaseParser.java:162).
+    The parquet sink has the tick sink's schema (``run_once``), one row
+    group per ≤ batchSize docs."""
     cells = scope_cells(read_cells_stream(spark, source_dir), config)
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -90,9 +92,10 @@ def start_river_stream(
                           doc_type=config.type_name,
                           batch_size=config.batch_size)
         else:
-            write_bulk(apply_sink_mapping(docs, config)
-                       .withColumn("batch_id", F.lit(batch_id)),
-                       sink_dir, config.batch_size)
+            # the tick sink's schema; the checkpoint's commit log records
+            # each micro-batch
+            write_bulk(apply_sink_mapping(docs, config), sink_dir,
+                       config.batch_size)
 
     return start_batches(cells, upsert_batch, checkpoint_dir, available_now,
                          config.interval_ms)

@@ -159,12 +159,82 @@ def test_file_source_tick_job_counts(spark, sf_dir, cfg, tmp_path):
         assert ticks[2].watermark_ms == ticks[1].watermark_ms
 
 
+def _row_groups(path: str) -> list[int]:
+    """Rows of each row group of one parquet file, in file order."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    return [md.row_group(g).num_rows for g in range(md.num_row_groups)]
+
+
+def _compiles(spark) -> int:
+    """Whole-stage and expression classes Janino has compiled in this JVM."""
+    return (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME().getCount())
+
+
+def test_steady_state_river_ops_compile_nothing(spark, sf_dir, cfg,
+                                                tmp_path):
+    """Neither the tick nor the stream puts a per-op literal (the
+    watermark, the micro-batch id) in its plan, so once a delta tick and a
+    drain have run, the next ones reuse their generated code. The delta
+    tick writes one file per write task however many bulks it holds."""
+    from elasticsearch_hbase_river_spark.sources.formats import (
+        read_cells, write_cells,
+    )
+    from elasticsearch_hbase_river_spark.streaming.river_stream import (
+        start_river_stream,
+    )
+
+    cells = cells_from_events(spark, sf_dir)
+    lo, hi = cells.agg(F.min("ts_ms"), F.max("ts_ms")).first()
+    cuts = [lo - 1] + [lo + i * (hi - lo) // 4 for i in (1, 2, 3)] + [hi]
+    src, sink = str(tmp_path / "src_steady"), str(tmp_path / "sink_steady")
+
+    def land(i):
+        write_cells(cells.filter(F.col("ts_ms").between(cuts[i] + 1,
+                                                        cuts[i + 1]))
+                    .coalesce(1), src, mode="append")
+
+    def tick():
+        return run_once(spark, read_cells(spark, src), cfg, sink)
+
+    def drain():
+        q = start_river_stream(spark, cfg, src, str(tmp_path / "stream"),
+                               str(tmp_path / "ckpt"), available_now=True)
+        assert q.awaitTermination(120), "stream did not drain in 120s"
+        assert q.exception() is None
+
+    for i in (0, 1):                   # a cold tick, then a delta tick
+        land(i)
+        tick()
+        drain()
+    land(2)
+    before = set(_sink_files(sink))
+    c0 = _compiles(spark)
+    res = tick()
+    c1 = _compiles(spark)
+    drain()
+    assert (c1 - c0, _compiles(spark) - c1) == (0, 0)
+    new = sorted(set(_sink_files(sink)) - before)
+    assert res.rows_indexed > cfg.batch_size
+    # part-<task>-<job>-c<n>: a task that split its output would write c001
+    assert new and all(f.split(".")[0].endswith("-c000") for f in new)
+    assert sum(sum(_row_groups(os.path.join(sink, f))) for f in new) \
+        == res.rows_indexed
+
+
 def _multi_file_sink(spark, sf_dir, tmp_path):
+    from elasticsearch_hbase_river_spark.operators.bulk_sink import write_bulk
+
     sink = str(tmp_path / "sink_multi")
-    small = RiverConfig(table="events", index="river", type_name="doc",
-                        column_separator="::", batch_size=100)
-    run_once(spark, cells_from_events(spark, sf_dir), small, sink)
-    assert len(_sink_files(sink)) >= 10
+    cfg = RiverConfig(table="events", index="river", type_name="doc",
+                      column_separator="::")
+    write_bulk(river_tick_plan(cells_from_events(spark, sf_dir), cfg, 0)
+               .repartition(10), sink, batch_size=40)
+    files = _sink_files(sink)
+    assert len(files) >= 10
+    assert any(len(_row_groups(os.path.join(sink, f))) >= 2 for f in files)
     return sink, None
 
 
@@ -352,20 +422,21 @@ def test_id_field_missing_path_drops_rows(spark, sf_dir):
 
 
 def test_bulk_write_respects_batch_size(spark, sf_dir, cfg, tmp_path):
-    """batchSize parity: each sink file holds at most batch_size rows (the
-    bulk-request analog, HBaseRiver.java:59-62)."""
-    import glob
-
+    """batchSize parity: each row group holds at most batch_size rows and
+    every row group but a file's last exactly batch_size (the bulk-request
+    analog, HBaseRiver.java:59-62), and the row groups hold every indexed
+    row."""
     cells = cells_from_events(spark, sf_dir)
     sink = str(tmp_path / "sink_bulk")
     small = RiverConfig(table="events", index="river", type_name="doc",
                         column_separator="::", batch_size=100)
-    run_once(spark, cells, small, sink)
-    files = glob.glob(sink + "/*.parquet")
-    assert files
-    for f in files:
-        n = spark.read.parquet(f).count()
-        assert n <= 100
+    res = run_once(spark, cells, small, sink)
+    groups = [_row_groups(os.path.join(sink, f)) for f in _sink_files(sink)]
+    assert groups
+    for g in groups:
+        assert all(n <= 100 for n in g)
+        assert all(n == 100 for n in g[:-1])
+    assert sum(map(sum, groups)) == res.rows_indexed
 
 
 def test_bulk_write_day_partitioned_sink(spark, sf_dir, cfg, tmp_path):

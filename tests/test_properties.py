@@ -321,9 +321,10 @@ def test_incremental_ticks_match_one_tick(spark, history):
 
 
 #: How a landed slice's parquet file is written: pyarrow's defaults, no
-#: min/max statistics (the footer cannot answer; the column is read), or
-#: one row group per cell.
-_LAND_STYLES = ("plain", "no_stats", "row_groups")
+#: min/max statistics (the footer cannot answer; the column is read), one
+#: row group per cell, or next to a row whose one cell has a null
+#: ``ts_ms`` (the footer's min then cannot vouch for every cell).
+_LAND_STYLES = ("plain", "no_stats", "row_groups", "nulls")
 
 _SCOPES = {"unscoped": {}, "family": {"family": "f1"},
            "id_field": {"id_field": "f1::q"}}
@@ -339,6 +340,8 @@ def _land(src: str, rows: list, style: str) -> None:
     schema = pa.schema([("row_key", pa.string()), ("family", pa.string()),
                         ("qualifier", pa.string()), ("value", pa.string()),
                         ("ts_ms", pa.int64())])
+    if style == "nulls" and rows:
+        rows = rows + [("n", "f1", "q", "n", None)]
     table = pa.Table.from_pylist(
         [dict(zip(schema.names, r)) for r in rows], schema)
     path = os.path.join(src, f"part-{len(os.listdir(src)):05d}.parquet")
@@ -359,15 +362,20 @@ _FOUR_SLICES = ([("a", "f1", "q", "x", 5), ("a", "f2", "z", "y", 5),
 @given(history=_river_history(), order=st.permutations(_LAND_STYLES),
        at=st.tuples(st.integers(0, 4), st.integers(0, 4)))
 @example(history=_FOUR_SLICES, order=_LAND_STYLES[::-1], at=(1, 3))
+# cuts out of order: (6, 12] lands after (5, 9] and re-lands the cells at
+# 9, a replay whose file straddles the watermark 10
+@example(history=(_FOUR_SLICES[0], [5, 9, 6]),
+         order=("nulls", "no_stats", "row_groups", "plain"), at=(4, 4))
 def test_landed_file_ticks_match_probe_path_and_one_tick(spark, scope,
                                                          history, order, at):
     """Each cut of the history lands as its own parquet file, among them a
-    file without statistics, one of several row groups, one whose
-    ``ts_ms`` is all null and an empty one. A tick after every landing,
-    over ``read_cells`` (the footer-pruned scan), returns the same
-    ``TickResult`` as the same tick over a projected view of those cells
-    (the emptiness-probe path), and leaves the latest-wins view of one
-    tick over all the cells.
+    file without statistics, one of several row groups, one with null
+    ``ts_ms`` next to new values, one whose ``ts_ms`` is all null and an
+    empty one; an explicit example lands a file straddling the watermark.
+    A tick after every landing, over ``read_cells`` (the footer-pruned
+    scan), returns the same ``TickResult`` as the same tick over a
+    projected view of those cells (the emptiness-probe path), and leaves
+    the latest-wins view of one tick over all the cells.
 
     Under ``id_field`` the id cell's value is a function of the row, with
     two rows sharing each id: a row whose id changed between versions

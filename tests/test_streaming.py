@@ -834,8 +834,8 @@ def test_streaming_eql_sequence_equals_batch_matches(spark, sf_dir,
 
 
 def test_stream_sink_applies_custom_mapping(spark, sf_dir, tmp_path):
-    """The streaming river's parquet sink lands the same mapped schema as
-    the batch tick's sink (plus the micro-batch id)."""
+    """The streaming river's parquet sink lands exactly the mapped schema
+    of the batch tick's sink."""
     from elasticsearch_hbase_river_spark.plans.pipeline import run_once
 
     cfg = RiverConfig(
@@ -857,9 +857,8 @@ def test_stream_sink_applies_custom_mapping(spark, sf_dir, tmp_path):
 
     assert shape(sink) == [
         ("doc_id", "string"), ("doc_ts_ms", "bigint"),
-        ("doc_json", "string"), ("ingest_tag", "string"),
-        ("batch_id", "int")]
-    assert shape(sink)[:-1] == shape(tick_sink)
+        ("doc_json", "string"), ("ingest_tag", "string")]
+    assert shape(sink) == shape(tick_sink)
     assert spark.read.parquet(sink).count() == 1000
 
 
