@@ -43,10 +43,9 @@ N_HASHES = 8           # MinHash permutations
 N_BANDS = 4            # LSH bands (2 rows per band)
 #: Per-bucket pair-expansion cap for the batch LSH self-joins (MinHash and
 #: SimHash): each doc compares against the bucket's first CAP members by
-#: doc_id — the batch twin of the streaming MAX_BUCKET_OCCUPANCY and the
-#: winnowing WINNOW_MAX_DF. Uncapped, a dup-rich corpus emits
-#: O(occupancy^2) pairs per bucket (measured executor OOM at the
-#: 100-replica fixture); capped, the expansion is O(cap * bands).
+#: doc_id, the same bound as the winnowing WINNOW_MAX_DF. Uncapped, a
+#: dup-rich corpus emits O(occupancy^2) pairs per bucket (measured executor
+#: OOM at the 100-replica fixture); capped, the expansion is O(cap * bands).
 LSH_BUCKET_CAP = 64
 
 
@@ -359,8 +358,7 @@ def q_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     use (r12, ADVICE: the inlined twin risked batch/incremental drift)."""
     aug = _augmented_docs(spark, sf_dir, exact=False)
     bands = doc_bands(aug)
-    # Bucket-occupancy cap, batch twin of the streaming operator's
-    # MAX_BUCKET_OCCUPANCY and the winnowing df-cap: the bucket self-join
+    # Bucket-occupancy cap, like the winnowing df-cap: the bucket self-join
     # emits O(occupancy²) pairs per bucket, and a dup-rich corpus (the
     # 100-replica scale fixture; at 100 TB any templated text) grows
     # buckets without bound — measured executor OOM at sf10. Buckets at or
@@ -435,11 +433,10 @@ def near_dup_decisions(incoming_bands: DataFrame,
     (band_idx, band_hash) equi-join — output-bounded by bucket occupancy,
     never |incoming| x |history| — and each candidate pair verifies from
     the signatures already ON the band rows (zero extra joins). The
-    history side is capped at the bucket's first {LSH_BUCKET_CAP} members
-    (the batch twin of the streaming operator's MAX_BUCKET_OCCUPANCY —
-    this query IS its batch form): a dup-rich corpus grows history
-    buckets without bound and the uncapped join OOMed the 100-replica
-    fixture; incoming docs still verify against the capped member set."""
+    history side is capped at the bucket's first {LSH_BUCKET_CAP} members:
+    a dup-rich corpus grows history buckets without bound and the uncapped
+    join OOMed the 100-replica fixture; incoming docs still verify against
+    the capped member set."""
     wb = Window.partitionBy("band_idx", "band_hash").orderBy("doc_id")
     history_bands = (history_bands.withColumn("r", F.row_number().over(wb))
                      .filter(F.col("r") <= LSH_BUCKET_CAP)

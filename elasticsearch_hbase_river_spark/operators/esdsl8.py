@@ -676,9 +676,7 @@ EQL_TOP = 20
 
 def eql_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The un-aggregated EQL sequence match relation
-    ``(user_id, vts, cts, pts)`` — shared by ``q_eql_sequence`` and the
-    streaming CEP twin's lifecycle test
-    (`streaming/river_stream.py:streaming_eql_sequence`)."""
+    ``(user_id, vts, cts, pts)`` that ``q_eql_sequence`` aggregates."""
     ev = (load_events(spark, sf_dir)
           .filter(F.col("event_type").isin(*EQL_STAGES))
           .select("user_id", "event_id", "ts_ms", "event_type"))

@@ -11,9 +11,11 @@ Reference trace (HBaseParser.java):
 
 Spark-first: the whole tick is a single DataFrame plan — scan filters push
 into the source, document assembly is one groupBy(row_key) shuffle, the
-upsert is a per-id window rank, and the sink write batches per partition
-(never a global sort). ``run_once`` materializes a tick against a parquet
-"sink table" the way the reference's bulk-upsert materializes into ES.
+upsert under ``idField`` is a per-id window rank, and the sink write
+batches per partition (never a global sort). ``run_once`` materializes a
+tick against a parquet "sink table" the way the reference's bulk-upsert
+materializes into ES; the streaming rivers run the same plan per
+micro-batch.
 """
 
 from __future__ import annotations
@@ -129,32 +131,33 @@ def _doc_id_col(config: RiverConfig) -> F.Column:
     return F.get_json_object("doc_json", f"$['{family}']['{leaf}']")
 
 
-def scope_cells(cells: DataFrame, config: RiverConfig) -> DataFrame:
-    """The configured family/qualifiers restriction of the scan
-    (HBaseParser.java:89-100), shared by the batch tick and both streams."""
+def _tick_scan(cells: DataFrame, config: RiverConfig,
+               watermark_ms: int | None) -> DataFrame:
+    """The cells in the configured family/qualifiers scope
+    (HBaseParser.java:89-100) with ``ts_ms > watermark_ms``, or with any
+    non-null ``ts_ms`` for None: a cell without a timestamp is never taken
+    (no watermark can account for it)."""
     if config.family:
         cells = cells.filter(F.col("family") == config.family)
     if config.qualifiers:
         cells = cells.filter(F.col("qualifier").isin(*config.qualifiers))
-    return cells
-
-
-def _tick_scan(cells: DataFrame, config: RiverConfig,
-               watermark_ms: int | None) -> DataFrame:
-    """The in-scope cells with ``ts_ms > watermark_ms`` (every in-scope
-    cell for None)."""
-    cells = scope_cells(cells, config)
-    if watermark_ms is None:
-        return cells
-    return cells.filter(F.col("ts_ms") > F.lit(watermark_ms))
+    ts = F.col("ts_ms")
+    return cells.filter(
+        ts.isNotNull() if watermark_ms is None else ts > F.lit(watermark_ms))
 
 
 def river_tick_plan(cells: DataFrame, config: RiverConfig,
                     watermark_ms: int | None) -> DataFrame:
-    """The full §3.2 tick as one lazy plan: filter -> assemble -> upsert.
-    ``watermark_ms=None`` takes every in-scope cell (no ``ts_ms`` filter)."""
+    """The river's one document plan, run by the tick and by both streams:
+    scope -> assemble -> upsert as one lazy plan. ``watermark_ms=None``
+    takes every in-scope cell with a non-null ``ts_ms``.
+
+    The upsert-by-id ranks only under ``id_field``: without it ``doc_id``
+    is the row key, already unique after assembly's ``groupBy(row_key)``."""
     docs = assemble_documents(_tick_scan(cells, config, watermark_ms), config)
-    # upsert-by-id: latest doc_ts wins (HBaseParser.java:145-159 + watermark)
+    if not config.id_field:
+        return docs
+    # latest doc_ts wins, row_key breaks ties (HBaseParser.java:145-159)
     w = Window.partitionBy("doc_id").orderBy(F.col("doc_ts_ms").desc(),
                                              F.col("row_key").desc())
     return (docs.withColumn("rn", F.row_number().over(w))
@@ -358,13 +361,16 @@ def run_once(spark: SparkSession, cells: DataFrame, config: RiverConfig,
     the sink watermark, transform, upsert-append to the sink.
 
     Watermark rule: the sink is read once, ``wm = sink_max_ts`` before the
-    write, and the tick takes the in-scope cells with ``ts_ms >= wm``. An
-    idle tick (no such cell) writes nothing and keeps ``wm``. Otherwise the
-    write job itself reports the count and max ``doc_ts_ms`` of the rows it
-    appended, and the new watermark is ``max(wm, max + 1)``: what a
-    post-write ``sink_max_ts`` would return, since the new sink is the old
-    one plus exactly those rows. That holds for a single writer per sink,
-    as in the reference (one river thread per index).
+    write, and the tick takes the in-scope cells with ``ts_ms >= wm`` (a
+    cell whose ``ts_ms`` is null is never taken). Documents come from
+    :func:`river_tick_plan`, which ranks latest-wins per ``doc_id`` only
+    under ``id_field``. An idle tick (no such cell) writes nothing and
+    keeps ``wm``. Otherwise the write job itself reports the count and max
+    ``doc_ts_ms`` of the rows it appended, and the new watermark is
+    ``max(wm, max + 1)``: what a post-write ``sink_max_ts`` would return,
+    since the new sink is the old one plus exactly those rows. That holds
+    for a single writer per sink, as in the reference (one river thread
+    per index).
 
     Source pruning applies when ``cells`` is a plain parquet file scan, as
     ``read_cells(spark, path)`` returns (:func:`_scan_files` has the exact
@@ -379,11 +385,12 @@ def run_once(spark: SparkSession, cells: DataFrame, config: RiverConfig,
     When the kept files' footers prove every ``ts_ms`` non-null and at or
     above ``wm`` (deltas landed in ts order), the ``ts_ms >= wm`` filter
     could drop nothing, so neither the tick's plan nor the probe carries
-    it. The plan then holds no per-tick literal, and a steady-state delta
-    tick reuses the code generated for the last one. A kept file that
-    straddles ``wm``, holds a null ``ts_ms`` or has a footer that cannot
-    answer, and every non-scan input, keep the filter; its watermark is
-    inlined in the generated code as a literal.
+    it; both keep only a literal-free ``ts_ms IS NOT NULL``. The plan then
+    holds no per-tick literal, and a steady-state delta tick reuses the
+    code generated for the last one. A kept file that straddles ``wm``,
+    holds a null ``ts_ms`` or has a footer that cannot answer, and every
+    non-scan input, keep the filter; its watermark is inlined in the
+    generated code as a literal.
 
     Spark jobs per tick: the watermark read and the footer reads run none,
     the emptiness probe one, the observed write two. On a pruned source a
@@ -473,9 +480,7 @@ _BANDS_META = "_bands_meta.json"
 def _check_bands_format(bands_path: str) -> None:
     """Refuse to mix band-table formats: a pre-existing sink must carry a
     marker with the current version, else the caller has to rebuild (or
-    discard) the history explicitly. Old ``streaming_near_dedup``
-    checkpoints have the same incompatibility (STRING grouping key) and
-    must be discarded alongside."""
+    discard) the history explicitly."""
     found = (read_json(os.path.join(bands_path, _BANDS_META))
              or {}).get("format_version")
     if found != BANDS_FORMAT_VERSION:
@@ -484,8 +489,7 @@ def _check_bands_format(bands_path: str) -> None:
             f"{found!r}, engine expects {BANDS_FORMAT_VERSION} — appending "
             "would create a mixed-schema directory with silent join misses. "
             "Rebuild the band history (re-run doc_bands over the sink "
-            "corpus) or point bands_path at a fresh directory; discard any "
-            "streaming_near_dedup checkpoints from the old format too.")
+            "corpus) or point bands_path at a fresh directory.")
 
 
 def _stamp_bands_format(bands_path: str, ticks_since_compact: int = 0) -> None:

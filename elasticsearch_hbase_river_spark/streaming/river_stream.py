@@ -15,8 +15,11 @@ Reference mapping (SURVEY.md §2.1 rows 15, 11, 4; §3.3):
                                          SURVEY.md §7 "hard parts")
 - ``stopThread`` clean shutdown (HBaseParser.java:249-251, :53-70)
                                       -> ``StreamingQuery.stop()``
-- late data: the reference re-reads everything above the sink max-ts; the
-  streaming twin instead bounds state with an event-time watermark.
+
+Every micro-batch runs the tick's own document plan
+(``plans/pipeline.py:river_tick_plan`` with no watermark): the same scope,
+null-``ts_ms`` rule, assembly and latest-wins-per-id rank as ``run_once``,
+whatever the trigger.
 
 The source is a file stream of cells (parquet); in production this is
 Kafka/CDC — the transform chain is source-agnostic because it only sees the
@@ -36,8 +39,7 @@ from pyspark.sql.types import (
 from elasticsearch_hbase_river_spark.config import RiverConfig
 from elasticsearch_hbase_river_spark.plans.pipeline import (
     apply_sink_mapping,
-    assemble_documents,
-    scope_cells,
+    river_tick_plan,
 )
 from elasticsearch_hbase_river_spark.sources.formats import CELLS_SCHEMA
 from elasticsearch_hbase_river_spark.streaming.epochs import (
@@ -76,17 +78,17 @@ def start_river_stream(
     analog of the reference's per-batch bulk RPC (HBaseParser.java:162).
     The parquet sink has the tick sink's schema (``run_once``), one row
     group per ≤ batchSize docs."""
-    cells = scope_cells(read_cells_stream(spark, source_dir), config)
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
         # foreachBatch = the bulk writer (HBaseParser.java:135-162). Within
-        # a micro-batch, latest-wins per doc id; across batches, append +
-        # read-time latest-wins (a real system MERGEs into Delta/Iceberg).
+        # a micro-batch the tick's plan keeps one document per id; across
+        # batches, append + read-time latest-wins (a real system MERGEs
+        # into Delta/Iceberg).
         from elasticsearch_hbase_river_spark.operators.bulk_sink import (
             write_bulk, write_es_bulk,
         )
 
-        docs = assemble_documents(batch_df, config)
+        docs = river_tick_plan(batch_df, config, None)
         if sink_format == "es_bulk":
             write_es_bulk(docs, sink_dir, index=config.index,
                           doc_type=config.type_name,
@@ -97,8 +99,8 @@ def start_river_stream(
             write_bulk(apply_sink_mapping(docs, config), sink_dir,
                        config.batch_size)
 
-    return start_batches(cells, upsert_batch, checkpoint_dir, available_now,
-                         config.interval_ms)
+    return start_batches(read_cells_stream(spark, source_dir), upsert_batch,
+                         checkpoint_dir, available_now, config.interval_ms)
 
 
 def start_connector_river(
@@ -112,23 +114,23 @@ def start_connector_river(
     """The river with real connectors on BOTH ends: the ``cellstore``
     streaming source serves each micro-batch as the delta above its
     checkpointed ts offset (the incremental scanner,
-    HBaseParser.java:258-280), documents assemble per batch, and the
-    ``bulksink`` writer publishes them behind its manifest with the
-    micro-batch id as the idempotence epoch — a replayed batch (crash
+    HBaseParser.java:258-280), the tick's document plan runs per batch,
+    and the ``bulksink`` writer publishes them behind its manifest with
+    the micro-batch id as the idempotence epoch — a replayed batch (crash
     between sink write and checkpoint commit) publishes exactly once.
 
-    Family/qualifier restrictions from the config apply as stream filters
+    Family/qualifier restrictions from the config apply inside that plan
     (the batch path pushes them into the store; a streaming scan serves
     the delta, which is already the narrow set)."""
     from elasticsearch_hbase_river_spark.sources import bulksink, cellstore
 
     cellstore.register(spark)
     bulksink.register(spark)
-    cells = scope_cells(spark.readStream.format("cellstore")
-                        .option("path", store_path).load(), config)
+    cells = (spark.readStream.format("cellstore")
+             .option("path", store_path).load())
 
     def publish(batch_df: DataFrame, batch_id: int) -> None:
-        docs = (assemble_documents(batch_df, config)
+        docs = (river_tick_plan(batch_df, config, None)
                 .select("doc_id", "doc_ts_ms", "doc_json"))
         (docs.write.format("bulksink")
          .option("path", bulk_dir)
@@ -140,212 +142,6 @@ def start_connector_river(
 
     return start_batches(cells, publish, checkpoint_dir, available_now,
                          config.interval_ms)
-
-
-def streaming_event_rollup(spark: SparkSession, source_dir: str) -> DataFrame:
-    """Streaming twin of q_event_rollup: watermarked hourly windowed counts
-    — late cells beyond 2h are dropped instead of re-scanned (the reference
-    re-reads everything newer than sink-max each tick; a watermark bounds
-    state at scale)."""
-    cells = read_cells_stream(spark, source_dir)
-    return (
-        cells.withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
-        .withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour"), "family")
-        .agg(F.count(F.lit(1)).alias("n_cells"))
-        .select(F.col("window.start").alias("hour_start"), "family", "n_cells")
-    )
-
-
-def streaming_enrich(spark: SparkSession, source_dir: str,
-                     dim: DataFrame, on: str = "row_key") -> DataFrame:
-    """Stream-static enrichment: the cells stream joined to a STATIC
-    dimension during import — the lookup-join every real river grows
-    (the reference's fixed dataflow cannot attach reference data,
-    SURVEY.md §2.2 'no joins'). Spark broadcasts the static side into
-    every micro-batch; no stream state, no watermark needed — the
-    canonical scale shape for dimension enrichment on a stream."""
-    cells = read_cells_stream(spark, source_dir)
-    return cells.join(F.broadcast(dim), on, "left")
-
-
-def streaming_sessionize(spark: SparkSession, source_dir: str,
-                         gap: str = "30 minutes") -> DataFrame:
-    """Streaming twin of q_sessionize: gap-based sessions per row key via
-    ``session_window`` — state is one open window per key, closed and
-    emitted when the watermark passes the gap. The batch twin computes the
-    same sessions with lag()+running-sum; at 100 TB the streaming form
-    never re-scans history."""
-    cells = read_cells_stream(spark, source_dir)
-    return (
-        cells.withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
-        .withWatermark("ts", "2 hours")
-        .groupBy(F.session_window("ts", gap).alias("session"), "row_key")
-        .agg(F.count(F.lit(1)).alias("n_cells"),
-             F.min("ts").alias("first_ts"), F.max("ts").alias("last_ts"))
-        .select("row_key", F.col("session.start").alias("session_start"),
-                F.col("session.end").alias("session_end"),
-                "n_cells", "first_ts", "last_ts")
-    )
-
-
-def streaming_exact_dedup(spark: SparkSession, source_dir: str) -> DataFrame:
-    """Stateful streaming exact dedup: first occurrence of each
-    (row_key, qualifier, value-hash) wins; duplicates arriving within the
-    watermark horizon are dropped. ``dropDuplicatesWithinWatermark`` bounds
-    the dedup state (a plain dropDuplicates on a stream retains ALL keys
-    forever — unusable at 100 TB)."""
-    cells = read_cells_stream(spark, source_dir)
-    return (
-        cells.withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
-        .withColumn("content_hash", F.md5(F.concat_ws("\x00", "row_key",
-                                                      "family", "qualifier",
-                                                      "value")))
-        .withWatermark("ts", "2 hours")
-        .dropDuplicatesWithinWatermark(["content_hash"])
-    )
-
-
-_BAND_STATE_SCHEMA = "members ARRAY<LONG>"
-_BAND_OUT_SCHEMA = "doc_a LONG, doc_b LONG, band_idx INT, band_val LONG"
-
-#: Hard cap on per-bucket membership. An LSH bucket that keeps attracting
-#: members is either a degenerate band (near-constant text) or an actual
-#: mega-cluster; in both cases every further arrival would emit
-#: O(occupancy) pairs and grow state forever. Beyond the cap new docs still
-#: compare against the capped member set (pairs keep flowing) but are not
-#: remembered.
-MAX_BUCKET_OCCUPANCY = 64
-
-
-def streaming_near_dedup(spark: SparkSession, docs_source_dir: str,
-                         files_per_trigger: int = 16,
-                         state_ttl_ms: int | None = None) -> DataFrame:
-    """Streaming MinHash-LSH near-dup detection: per-document signatures
-    and band keys are computed map-side on the stream (same expressions as
-    the batch ``q_minhash_signature``); candidate pairs come from an
-    ``applyInPandasWithState`` operator keyed on (band_idx, band_val) whose
-    state is the set of doc_ids already seen in that bucket.
-
-    This is the 100 TB streaming shape: state is per-band-bucket — a typed
-    LONG array capped at ``MAX_BUCKET_OCCUPANCY`` members (so per-arrival
-    work and state size are both O(cap), not O(stream length)) with an
-    optional processing-time TTL (``state_ttl_ms``) that drops idle
-    buckets. New documents only compare against their own buckets and
-    emission happens incrementally — no re-scan of the corpus per batch.
-    Pairs may repeat across bands; downstream consumers dedupe
-    (doc_a, doc_b) idempotently.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from elasticsearch_hbase_river_spark.operators.dedup import (
-        N_BANDS, _band_col, _gram_hash_df, minhash_signature,
-    )
-
-    docs = read_feed(spark, docs_source_dir, "doc_id LONG, text STRING",
-                     files_per_trigger)
-    # identical map-side gram hashing + signature as the batch
-    # q_minhash_signature — the expressions are streaming-safe
-    sig = minhash_signature(_gram_hash_df(docs))
-    bands = sig.select(
-        "doc_id",
-        F.posexplode(F.array(*[
-            _band_col(b) for b in range(N_BANDS)])).alias("band_idx", "band_val"),
-    )
-
-    ttl_ms = state_ttl_ms
-
-    def match(key, pdfs, state):
-        import pandas as pd  # runs on Python workers
-
-        band_idx, band_val = key
-        empty = {"doc_a": [], "doc_b": [], "band_idx": [], "band_val": []}
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(empty)
-            return
-        members = list(state.get[0]) if state.exists else []
-        seen = set(members)
-        out = dict(empty)
-        for pdf in pdfs:
-            for doc in pdf["doc_id"]:
-                d = int(doc)
-                if d in seen:
-                    continue
-                for other in members:
-                    a, b = sorted((d, other))
-                    out["doc_a"].append(a)
-                    out["doc_b"].append(b)
-                    out["band_idx"].append(band_idx)
-                    out["band_val"].append(band_val)
-                if len(members) < MAX_BUCKET_OCCUPANCY:
-                    members.append(d)
-                    seen.add(d)
-        state.update((members,))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-        yield pd.DataFrame(out)
-
-    timeout = (GroupStateTimeout.ProcessingTimeTimeout if ttl_ms is not None
-               else GroupStateTimeout.NoTimeout)
-    return bands.groupBy("band_idx", "band_val").applyInPandasWithState(
-        match,
-        outputStructType=_BAND_OUT_SCHEMA,
-        stateStructType=_BAND_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=timeout,
-    )
-
-
-_LATEST_STATE_SCHEMA = "row_key STRING, ts_ms LONG, n_versions LONG"
-_LATEST_OUT_SCHEMA = ("row_key STRING, latest_ts_ms LONG, n_versions LONG, "
-                      "batch_rows LONG")
-
-
-def streaming_latest_version(spark: SparkSession, source_dir: str,
-                             files_per_trigger: int = 16) -> DataFrame:
-    """The upsert/latest-version-wins operator as TRUE streaming state via
-    ``applyInPandasWithState``: per row key, keep (latest ts, version count)
-    across micro-batches and emit the running latest on every update.
-
-    This is the custom-stateful-operator pattern (SURVEY.md §2.1 row 14 in
-    streaming form): state lives in the state store, partitioned by key —
-    the 100 TB shape is exactly this, one state row per live key.
-
-    State update is a closure so cloudpickle ships it by value (workers
-    don't have the package importable when loaded from a file path).
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def update(key, pdfs, state):
-        import pandas as pd  # local import: runs on Python workers
-
-        (row_key,) = key
-        if state.exists:
-            _, latest, versions = state.get
-        else:
-            latest, versions = None, 0
-        rows = 0
-        for pdf in pdfs:
-            rows += len(pdf)
-            batch_max = int(pdf["ts_ms"].max())
-            versions += len(pdf)
-            latest = batch_max if latest is None else max(latest, batch_max)
-        state.update((row_key, int(latest), int(versions)))
-        yield pd.DataFrame({"row_key": [row_key], "latest_ts_ms": [int(latest)],
-                            "n_versions": [int(versions)], "batch_rows": [rows]})
-
-    cells = read_cells_stream(spark, source_dir, files_per_trigger)
-    return (
-        cells.groupBy("row_key")
-        .applyInPandasWithState(
-            update,
-            outputStructType=_LATEST_OUT_SCHEMA,
-            stateStructType=_LATEST_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -684,165 +480,3 @@ def start_percolate_stream(spark: SparkSession, docs_source_dir: str,
         write_epoch(alerts_dir, batch_id, {"": hits})
 
     return start_batches(docs, match, checkpoint_dir, available_now)
-
-
-# ---------------------------------------------------------------------------
-# Streaming cumulative cardinality — per-user first appearance.
-
-_FIRST_OUT_SCHEMA = "user_id LONG, day_id LONG"
-_FIRST_STATE_SCHEMA = "first_day LONG"
-
-
-def streaming_first_appearance(spark: SparkSession, events_source_dir: str,
-                               files_per_trigger: int = 16) -> DataFrame:
-    """Streaming twin of the batch ``q_cumulative_cardinality`` firsts
-    relation (`operators/esdsl5.py`): emit ``(user_id, day_id)`` the
-    FIRST time each user is seen on the stream; later arrivals emit
-    nothing, and an earlier-day arrival in a later batch corrects state
-    downward and re-emits (out-of-order input converges to the batch
-    min, so the union of emissions per user minimized over day equals
-    the batch firsts relation — the lifecycle test pins exactly that).
-
-    100 TB shape: state is ONE long per user, keyed by user — Spark
-    shards the state store by key, per-arrival work is O(1), and the
-    cumulative-count aggregation downstream runs over the day relation,
-    never the corpus. ES computes this agg from an HLL sketch per
-    bucket; this twin is exact, the same trade `q_cumulative_cardinality`
-    documents.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    # Source = the (user_id, ts_ms) projection of the canonical events
-    # relation (the test writes it with `load_events`), same convention
-    # as streaming_near_dedup's (doc_id, text) source.
-    ev = read_feed(spark, events_source_dir, "user_id LONG, ts_ms LONG",
-                   files_per_trigger)
-    day_ms = 86_400_000
-    keyed = ev.select(
-        "user_id", F.expr(f"ts_ms div {day_ms}").alias("day_id"))
-
-    def first_seen(key, pdfs, state):
-        import pandas as pd  # runs on Python workers
-
-        (user_id,) = key
-        out = {"user_id": [], "day_id": []}
-        best = state.get[0] if state.exists else None
-        for pdf in pdfs:
-            if len(pdf):
-                m = int(pdf["day_id"].min())
-                if best is None or m < best:
-                    best = m
-                    out["user_id"].append(int(user_id))
-                    out["day_id"].append(m)
-        if best is not None:
-            state.update((best,))
-        yield pd.DataFrame(out)
-
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        first_seen,
-        outputStructType=_FIRST_OUT_SCHEMA,
-        stateStructType=_FIRST_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-_EQL_OUT_SCHEMA = "user_id LONG, vts LONG, cts LONG, pts LONG, span_ms LONG"
-_EQL_STATE_SCHEMA = ("pv ARRAY<LONG>, ppv ARRAY<LONG>, ppc ARRAY<LONG>")
-
-
-def streaming_eql_sequence(spark: SparkSession, events_source_dir: str,
-                           files_per_trigger: int = 1) -> DataFrame:
-    """Streaming CEP twin of the batch EQL ``sequence by user_id with
-    maxspan [view] [click] [purchase]`` (`operators/esdsl8.py:
-    eql_matches`): per-user keyed state carries the PENDING partial
-    matches — views awaiting their first click, (view, click) pairs
-    awaiting their first purchase — and each arriving event advances or
-    expires them, emitting completed matches immediately. This is the
-    ES/EQL executor's own model (pending sequence state per join key,
-    expired by maxspan) re-expressed on Structured Streaming keyed
-    state.
-
-    Transition rules, applied in (ts, event_id) stream order:
-
-    - ``view``      → enters the pending-view set.
-    - ``click``     → ALL pending views pair with it (the click is each
-      one's first-following click) and move to the pending-pair set;
-      the pending-view set empties.
-    - ``purchase``  → every pending pair resolves: emit a match if
-      ``pts - vts <= maxspan`` else drop (this purchase was the pair's
-      first-following purchase either way); the pending-pair set
-      empties.
-    - every arrival first EVICTS state older than maxspan (a view or
-      pair whose ``vts`` is more than maxspan behind the current event
-      can never complete) — state per user is BOUNDED by one maxspan
-      window of its own events, the CEP state-size story at 100 TB.
-
-    Ordering contract: per-user events must arrive in (ts, event_id)
-    order ACROSS batches (within a batch they are sorted here). That is
-    the standard CEP ingestion contract (Flink's event-time order after
-    watermarking); the lifecycle test feeds time-ordered files and pins
-    emission-equality with the batch relation.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from elasticsearch_hbase_river_spark.operators.esdsl8 import (
-        EQL_MAXSPAN_MS,
-        EQL_STAGES,
-    )
-
-    ev = read_feed(spark, events_source_dir,
-                   "user_id LONG, event_id LONG, ts_ms LONG,"
-                   " event_type STRING", files_per_trigger)
-    keyed = ev.filter(F.col("event_type").isin(*EQL_STAGES))
-    v_t, c_t, p_t = EQL_STAGES
-    maxspan = EQL_MAXSPAN_MS
-
-    def advance(key, pdfs, state):
-        import pandas as pd  # runs on Python workers
-
-        (user_id,) = key
-        pv, ppv, ppc = ((list(state.get[0]), list(state.get[1]),
-                         list(state.get[2]))
-                        if state.exists else ([], [], []))
-        out = {"user_id": [], "vts": [], "cts": [], "pts": [],
-               "span_ms": []}
-        chunks = list(pdfs)
-        batch = (pd.concat(chunks, ignore_index=True) if chunks
-                 else pd.DataFrame(columns=["ts_ms", "event_id",
-                                            "event_type"]))
-        if len(batch):
-            batch = batch.sort_values(["ts_ms", "event_id"])
-            for ts, typ in zip(batch["ts_ms"], batch["event_type"]):
-                ts = int(ts)
-                # evict state that can no longer complete within maxspan
-                pv = [t for t in pv if ts - t <= maxspan]
-                keep = [i for i, t in enumerate(ppv)
-                        if ts - t <= maxspan]
-                ppv = [ppv[i] for i in keep]
-                ppc = [ppc[i] for i in keep]
-                if typ == v_t:
-                    pv.append(ts)
-                elif typ == c_t:
-                    ppv.extend(pv)
-                    ppc.extend([ts] * len(pv))
-                    pv = []
-                elif typ == p_t:
-                    for vts, cts in zip(ppv, ppc):
-                        if ts - vts <= maxspan:
-                            out["user_id"].append(int(user_id))
-                            out["vts"].append(vts)
-                            out["cts"].append(cts)
-                            out["pts"].append(ts)
-                            out["span_ms"].append(ts - vts)
-                    ppv, ppc = [], []
-        state.update((pv, ppv, ppc))
-        yield pd.DataFrame(out)
-
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        advance,
-        outputStructType=_EQL_OUT_SCHEMA,
-        stateStructType=_EQL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

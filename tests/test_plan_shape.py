@@ -139,13 +139,26 @@ def test_cooccurrence_broadcasts_vocab(spark, sf_dir):
 
 def test_flagship_pipeline_single_shuffle(spark, sf_dir):
     """The whole river tick (melt -> assemble -> upsert) must shuffle the
-    corpus exactly ONCE: document assembly groups by row_key, and the
-    upsert window reuses that partitioning through the doc_id alias. A
-    second Exchange here would double the dominant cost at 100 TB."""
-    from elasticsearch_hbase_river_spark.plans.pipeline import flagship
+    corpus exactly ONCE: document assembly groups by row_key. Without
+    ``id_field`` the doc id is that row key, already unique, so the plan
+    holds no upsert window at all; with ``id_field`` the window ranks per
+    id. A second Exchange here would double the dominant cost at 100 TB."""
+    from elasticsearch_hbase_river_spark.config import RiverConfig
+    from elasticsearch_hbase_river_spark.plans.pipeline import (
+        flagship, river_tick_plan,
+    )
+    from elasticsearch_hbase_river_spark.sources.cells import (
+        cells_from_events,
+    )
 
     plan = _plan(flagship(spark, sf_dir))
     assert plan.count("Exchange") == 1
+    assert "Window" not in plan
+
+    cfg = RiverConfig(table="events", index="river", type_name="doc",
+                      column_separator="::", id_field="meta::user_id")
+    ranked = _plan(river_tick_plan(cells_from_events(spark, sf_dir), cfg, 0))
+    assert "Window" in ranked
 
 
 def test_topk_queries_avoid_corpus_sized_global_windows(spark, sf_dir):

@@ -360,14 +360,18 @@ _FOUR_SLICES = ([("a", "f1", "q", "x", 5), ("a", "f2", "z", "y", 5),
 @pytest.mark.parametrize("scope", sorted(_SCOPES))
 @settings(max_examples=3, deadline=None)
 @given(history=_river_history(), order=st.permutations(_LAND_STYLES),
-       at=st.tuples(st.integers(0, 4), st.integers(0, 4)))
-@example(history=_FOUR_SLICES, order=_LAND_STYLES[::-1], at=(1, 3))
+       at=st.tuples(st.integers(0, 4), st.integers(0, 4)),
+       drains=st.lists(st.booleans(), min_size=6, max_size=6))
+@example(history=_FOUR_SLICES, order=_LAND_STYLES[::-1], at=(1, 3),
+         drains=[True] * 6)
 # cuts out of order: (6, 12] lands after (5, 9] and re-lands the cells at
 # 9, a replay whose file straddles the watermark 10
 @example(history=(_FOUR_SLICES[0], [5, 9, 6]),
-         order=("nulls", "no_stats", "row_groups", "plain"), at=(4, 4))
+         order=("nulls", "no_stats", "row_groups", "plain"), at=(4, 4),
+         drains=[False] * 6)
 def test_landed_file_ticks_match_probe_path_and_one_tick(spark, scope,
-                                                         history, order, at):
+                                                         history, order, at,
+                                                         drains):
     """Each cut of the history lands as its own parquet file, among them a
     file without statistics, one of several row groups, one with null
     ``ts_ms`` next to new values, one whose ``ts_ms`` is all null and an
@@ -375,7 +379,10 @@ def test_landed_file_ticks_match_probe_path_and_one_tick(spark, scope,
     A tick after every landing, over ``read_cells`` (the footer-pruned
     scan), returns the same ``TickResult`` as the same tick over a
     projected view of those cells (the emptiness-probe path), and leaves
-    the latest-wins view of one tick over all the cells.
+    the latest-wins view of one tick over all the cells. So does the
+    streaming river, drained after a drawn subset of the landings (always
+    the last), each micro-batch holding the files landed since the last
+    drain.
 
     Under ``id_field`` the id cell's value is a function of the row, with
     two rows sharing each id: a row whose id changed between versions
@@ -387,6 +394,9 @@ def test_landed_file_ticks_match_probe_path_and_one_tick(spark, scope,
     from elasticsearch_hbase_river_spark.config import RiverConfig
     from elasticsearch_hbase_river_spark.plans.pipeline import run_once
     from elasticsearch_hbase_river_spark.sources.formats import read_cells
+    from elasticsearch_hbase_river_spark.streaming.river_stream import (
+        start_river_stream,
+    )
 
     cells, cuts = history
     if scope == "id_field":
@@ -405,8 +415,9 @@ def test_landed_file_ticks_match_probe_path_and_one_tick(spark, scope,
     with tempfile.TemporaryDirectory() as d:
         src = os.path.join(d, "landed %25 cells")
         os.makedirs(src)
-        pruned, probed, single = (os.path.join(d, s) for s in
-                                  ("pruned", "probed", "single"))
+        pruned, probed, single, stream, ckpt = (
+            os.path.join(d, s)
+            for s in ("pruned", "probed", "single", "stream", "ckpt"))
 
         def tick():
             scan = read_cells(spark, src)
@@ -415,11 +426,16 @@ def test_landed_file_ticks_match_probe_path_and_one_tick(spark, scope,
                                    probed)
             return got
 
-        for style, rows in landings:
+        for i, (style, rows) in enumerate(landings):
             _land(src, rows, style)
             tick()
+            if drains[i] or i == len(landings) - 1:
+                q = start_river_stream(spark, cfg, src, stream, ckpt,
+                                       available_now=True)
+                assert q.awaitTermination(120), "stream did not drain"
         assert tick().rows_indexed == 0
         run_once(spark, spark.createDataFrame(
             cells, "row_key string, family string, qualifier string, "
                    "value string, ts_ms long"), cfg, single)
         assert _latest(spark, pruned) == _latest(spark, single)
+        assert _latest(spark, stream) == _latest(spark, single)

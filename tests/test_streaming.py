@@ -10,8 +10,7 @@ from pyspark.sql import functions as F
 from elasticsearch_hbase_river_spark.config import RiverConfig
 from elasticsearch_hbase_river_spark.sources.cells import cells_from_events
 from elasticsearch_hbase_river_spark.streaming.river_stream import (
-    start_river_stream, streaming_event_rollup, streaming_exact_dedup,
-    streaming_latest_version, streaming_near_dedup, streaming_sessionize,
+    start_river_stream,
 )
 
 
@@ -85,150 +84,6 @@ def test_stream_to_es_bulk_files(spark, sf_dir, tmp_path):
     actions = [json.loads(ln)["index"] for ln in lines[0::2]]
     assert {a["_index"] for a in actions} == {"river"}
     assert len({a["_id"] for a in actions}) == 1000
-
-
-def test_streaming_enrich_joins_static_dimension(spark, sf_dir, tmp_path):
-    from elasticsearch_hbase_river_spark.streaming.river_stream import (
-        streaming_enrich,
-    )
-
-    src = str(tmp_path / "src_enrich")
-    _write_cells(spark, sf_dir, src)
-    # static dimension: per-row-key user attribution from the events table
-    from elasticsearch_hbase_river_spark.sources.tables import load_events
-
-    dim = load_events(spark, sf_dir).select(
-        F.col("event_id").cast("string").alias("row_key"),
-        F.col("user_id").alias("dim_user"))
-    df = streaming_enrich(spark, src, dim)
-    assert df.isStreaming
-    q = (df.writeStream.format("memory").queryName("enrich_t")
-         .outputMode("append").trigger(availableNow=True).start())
-    assert q.awaitTermination(120), "stream did not drain in 120s"
-    out = spark.table("enrich_t")
-    assert out.count() == 4000  # 4 cells per event
-    assert out.filter(F.col("dim_user").isNull()).count() == 0
-
-
-def test_streaming_sessionize(spark, sf_dir, tmp_path):
-    src = str(tmp_path / "src_sess")
-    _write_cells(spark, sf_dir, src)
-    df = streaming_sessionize(spark, src)
-    assert df.isStreaming
-    q = (df.writeStream.format("memory").queryName("sess_t")
-         .outputMode("append").trigger(availableNow=True).start())
-    assert q.awaitTermination(120), "stream did not drain in 120s"
-    assert spark.table("sess_t").columns == [
-        "row_key", "session_start", "session_end",
-        "n_cells", "first_ts", "last_ts"]
-
-
-def test_streaming_exact_dedup_drops_duplicate_cells(spark, sf_dir, tmp_path):
-    src = str(tmp_path / "src_dd")
-    cells = cells_from_events(spark, sf_dir)
-    # duplicate the whole relation: every cell appears twice in the stream
-    cells.unionByName(cells).repartition(4).write.mode("overwrite").parquet(src)
-    out = streaming_exact_dedup(spark, src)
-    q = (out.writeStream.format("memory").queryName("dedup_t")
-         .outputMode("append").trigger(availableNow=True).start())
-    assert q.awaitTermination(120), "stream did not drain in 120s"
-    got = spark.table("dedup_t")
-    n_unique = cells.select("row_key", "family", "qualifier", "value") \
-                    .distinct().count()
-    assert got.count() == n_unique
-    assert got.select("content_hash").distinct().count() == n_unique
-
-
-def test_streaming_latest_version_state(spark, sf_dir, tmp_path):
-    src = str(tmp_path / "src_state")
-    # 4 source files, 1 per trigger: 4 micro-batches, so per-key state is
-    # genuinely read back and updated across batches
-    _write_cells(spark, sf_dir, src)
-    out = streaming_latest_version(spark, src, files_per_trigger=1)
-    q = (out.writeStream.format("memory").queryName("state_t")
-         .outputMode("update").trigger(availableNow=True).start())
-    assert q.awaitTermination(120), "stream did not drain in 120s"
-    got = spark.table("state_t")
-    cells = cells_from_events(spark, sf_dir)
-    per_key = got.groupBy("row_key").agg(
-        F.max("latest_ts_ms").alias("latest_ts_ms"),
-        F.max("n_versions").alias("n_versions"))
-    expect = cells.groupBy("row_key").agg(
-        F.max("ts_ms").alias("e_ts"), F.count(F.lit(1)).alias("e_n"))
-    joined = per_key.join(expect, "row_key")
-    assert joined.count() == 1000
-    assert joined.filter((F.col("latest_ts_ms") != F.col("e_ts"))
-                         | (F.col("n_versions") != F.col("e_n"))).count() == 0
-
-
-def test_streaming_near_dedup_finds_planted_duplicates(spark, sf_dir, tmp_path):
-    """LSH band-bucket state: exact copies arriving on the stream are
-    reported as candidate pairs against the originals."""
-    from elasticsearch_hbase_river_spark.sources.tables import load_table
-
-    src = str(tmp_path / "docs_src")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    copies = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
-    docs.write.mode("overwrite").parquet(src)
-    copies.write.mode("append").parquet(src)
-
-    out = streaming_near_dedup(spark, src)
-    q = (out.writeStream.format("memory").queryName("near_t")
-         .outputMode("update").trigger(availableNow=True).start())
-    assert q.awaitTermination(180), "stream did not drain in 180s"
-    pairs = (spark.table("near_t")
-             .select("doc_a", "doc_b").distinct())
-    planted = {(r.doc_id, r.doc_id + 1_000_000) for r in copies
-               .select((F.col("doc_id") - 1_000_000).alias("doc_id")).collect()}
-    got = {(r.doc_a, r.doc_b) for r in pairs.collect()}
-    # every planted exact copy shares all bands with its original
-    assert planted <= got
-
-
-def test_streaming_near_dedup_bucket_occupancy_cap(spark, tmp_path):
-    """A degenerate bucket (many identical texts) never holds more than
-    MAX_BUCKET_OCCUPANCY members: arrival n pairs against min(n-1, cap)
-    remembered members, so total pairs per band is bounded linearly by
-    cap·n instead of n²."""
-    from elasticsearch_hbase_river_spark.streaming.river_stream import (
-        MAX_BUCKET_OCCUPANCY, streaming_near_dedup,
-    )
-
-    n_docs = MAX_BUCKET_OCCUPANCY + 20
-    src = str(tmp_path / "docs_degenerate")
-    rows = [(i, "same text repeated for every doc in this bucket")
-            for i in range(n_docs)]
-    spark.createDataFrame(rows, "doc_id LONG, text STRING") \
-         .coalesce(1).write.mode("overwrite").parquet(src)
-
-    out = streaming_near_dedup(spark, src)
-    q = (out.writeStream.format("memory").queryName("near_cap_t")
-         .outputMode("update").trigger(availableNow=True).start())
-    assert q.awaitTermination(180), "stream did not drain in 180s"
-    per_band = (spark.table("near_cap_t")
-                .groupBy("band_idx", "doc_b").count())
-    # doc_b arrives after doc_a, so doc_b's pair count per band == number of
-    # members it compared against — never more than the cap
-    assert per_band.agg(F.max("count")).collect()[0][0] <= MAX_BUCKET_OCCUPANCY
-    expected_pairs_per_band = sum(
-        min(i, MAX_BUCKET_OCCUPANCY) for i in range(n_docs))
-    total = spark.table("near_cap_t").groupBy("band_idx").count()
-    assert all(r["count"] == expected_pairs_per_band for r in total.collect())
-
-
-def test_streaming_rollup_plan_is_streaming(spark, sf_dir, tmp_path):
-    src = str(tmp_path / "src2")
-    _write_cells(spark, sf_dir, src)
-    df = streaming_event_rollup(spark, src)
-    assert df.isStreaming
-    q = (df.writeStream.format("memory").queryName("rollup_t")
-         .outputMode("append").trigger(availableNow=True).start())
-    assert q.awaitTermination(120), "stream did not drain in 120s"
-    # watermarked append-mode windows close only when the watermark passes;
-    # with a bounded backlog the final window stays open, so just assert the
-    # query ran and the in-flight state machinery works
-    assert spark.table("rollup_t").columns == ["hour_start", "family", "n_cells"]
 
 
 def test_streaming_index_maintenance(spark, sf_dir, tmp_path):
@@ -748,91 +603,6 @@ def test_epochs_layout_marker_refuses_foreign_directory(spark, tmp_path):
     assert not os.path.exists(str(foreign / "_epochs_meta.json"))
 
 
-def test_streaming_first_appearance_equals_batch_firsts(spark, sf_dir,
-                                                        tmp_path):
-    """Streaming twin of q_cumulative_cardinality's firsts relation:
-    union of emissions minimized per user over day == the batch
-    per-user min-day, even when files arrive out of day order."""
-    from elasticsearch_hbase_river_spark.streaming.river_stream import (
-        streaming_first_appearance,
-    )
-    from elasticsearch_hbase_river_spark.sources.tables import load_events
-
-    src = str(tmp_path / "ev_firsts_src")
-    day_ms = 86_400_000
-    ev = load_events(spark, sf_dir).select(
-        "user_id", F.col("ts_ms").cast("long").alias("ts_ms"))
-    # Write LATER days first so a later batch must correct state downward.
-    late = ev.filter((F.col("ts_ms") / day_ms) >= 2)
-    early = ev.filter((F.col("ts_ms") / day_ms) < 2)
-    late.coalesce(1).write.mode("overwrite").parquet(src)
-    early.coalesce(1).write.mode("append").parquet(src)
-
-    out = streaming_first_appearance(spark, src, files_per_trigger=1)
-    q = (out.writeStream.format("memory").queryName("firsts_t")
-         .outputMode("update").trigger(availableNow=True).start())
-    assert q.awaitTermination(180), "stream did not drain in 180s"
-    got = (spark.table("firsts_t")
-           .groupBy("user_id")
-           .agg(F.min("day_id").alias("day_id")))
-    want = ev.groupBy("user_id").agg(
-        F.expr(f"min(ts_ms div {day_ms})").alias("day_id"))
-    diff = got.join(want, ["user_id", "day_id"], "full_outer") \
-              .count()
-    assert got.count() == want.count()
-    assert diff == want.count()  # full outer join collapses iff identical
-
-
-def test_streaming_eql_sequence_equals_batch_matches(spark, sf_dir,
-                                                     tmp_path):
-    """Streaming CEP twin of the EQL sequence: feeding the event stream
-    in time order (three time-sliced files, one per trigger, so pending
-    state must survive batch boundaries) emits EXACTLY the batch match
-    relation (`operators/esdsl8.py:eql_matches`)."""
-    from elasticsearch_hbase_river_spark.operators.esdsl8 import (
-        EQL_STAGES,
-        eql_matches,
-    )
-    from elasticsearch_hbase_river_spark.sources.tables import load_events
-    from elasticsearch_hbase_river_spark.streaming.river_stream import (
-        streaming_eql_sequence,
-    )
-
-    src = str(tmp_path / "ev_eql_src")
-    ev = (load_events(spark, sf_dir)
-          .filter(F.col("event_type").isin(*EQL_STAGES))
-          .select("user_id", "event_id",
-                  F.col("ts_ms").cast("long").alias("ts_ms"),
-                  "event_type"))
-    lo, hi = ev.agg(F.min("ts_ms"), F.max("ts_ms")).first()
-    cut1, cut2 = lo + (hi - lo) // 3, lo + 2 * (hi - lo) // 3
-    # time-ordered file layout: one file per time slice, oldest first
-    (ev.filter(F.col("ts_ms") < cut1)
-       .coalesce(1).write.mode("overwrite").parquet(src))
-    (ev.filter((F.col("ts_ms") >= cut1) & (F.col("ts_ms") < cut2))
-       .coalesce(1).write.mode("append").parquet(src))
-    (ev.filter(F.col("ts_ms") >= cut2)
-       .coalesce(1).write.mode("append").parquet(src))
-
-    out = streaming_eql_sequence(spark, src, files_per_trigger=1)
-    q = (out.writeStream.format("memory").queryName("eql_t")
-         .outputMode("append").trigger(availableNow=True).start())
-    assert q.awaitTermination(240), "stream did not drain in 240s"
-    # multiplicity-safe compare: identical rows CAN legitimately repeat
-    # (two same-ts views sharing one click+purchase), so compare
-    # per-row-group counts with a full-outer join, as the
-    # first-appearance test above does
-    cols = ["user_id", "vts", "cts", "pts"]
-    got = (spark.table("eql_t").groupBy(cols)
-           .agg(F.count(F.lit(1)).alias("c")))
-    want = (eql_matches(spark, sf_dir).groupBy(cols)
-            .agg(F.count(F.lit(1)).alias("c")))
-    n_want = want.count()
-    assert n_want > 0
-    assert got.count() == n_want
-    assert got.join(want, cols + ["c"], "full_outer").count() == n_want
-
-
 def test_stream_sink_applies_custom_mapping(spark, sf_dir, tmp_path):
     """The streaming river's parquet sink lands exactly the mapped schema
     of the batch tick's sink."""
@@ -860,6 +630,60 @@ def test_stream_sink_applies_custom_mapping(spark, sf_dir, tmp_path):
         ("doc_json", "string"), ("ingest_tag", "string")]
     assert shape(sink) == shape(tick_sink)
     assert spark.read.parquet(sink).count() == 1000
+
+
+def test_every_river_entry_point_writes_one_document_per_id(spark, tmp_path):
+    """Rows r1 and r2 resolve to one id at one timestamp and r3's cell has
+    no timestamp. The tick, both stream sinks and the connector river all
+    run the tick's plan: one document for the id, r2's (the ``row_key``
+    tiebreak), and nothing for r3."""
+    from elasticsearch_hbase_river_spark.plans.pipeline import run_once
+    from elasticsearch_hbase_river_spark.sources import bulksink, cellstore
+    from elasticsearch_hbase_river_spark.streaming.river_stream import (
+        start_connector_river,
+    )
+
+    cells = spark.createDataFrame(
+        [("r1", "f", "id", "X", 100), ("r1", "f", "v", "one", 100),
+         ("r2", "f", "id", "X", 100), ("r2", "f", "v", "two", 100),
+         ("r3", "f", "id", "Z", None)],
+        "row_key string, family string, qualifier string, value string, "
+        "ts_ms long")
+    cfg = RiverConfig(table="t", index="i", type_name="d",
+                      column_separator="::", id_field="f::id")
+    src, store = str(tmp_path / "src"), str(tmp_path / "store")
+    cells.coalesce(1).write.parquet(src)
+    cellstore.write_cellstore(cells, store, n_regions=1)
+
+    def drained(q):
+        assert q.awaitTermination(120), "stream did not drain in 120s"
+
+    def parquet_docs(path):
+        return sorted((r.doc_id, r.doc_ts_ms, r.doc_json)
+                      for r in spark.read.parquet(path).collect())
+
+    def bulk_docs(lines):
+        return sorted((json.loads(a)["index"]["_id"],
+                       json.loads(a)["index"]["_timestamp"], doc)
+                      for a, doc in zip(lines[0::2], lines[1::2]))
+
+    run_once(spark, cells, cfg, str(tmp_path / "tick"))
+    drained(start_river_stream(spark, cfg, src, str(tmp_path / "stream"),
+                               str(tmp_path / "ckpt_p"), available_now=True))
+    es = tmp_path / "es"
+    drained(start_river_stream(spark, cfg, src, str(es),
+                               str(tmp_path / "ckpt_e"), available_now=True,
+                               sink_format="es_bulk"))
+    drained(start_connector_river(spark, cfg, store, str(tmp_path / "bulk"),
+                                  str(tmp_path / "ckpt_c"),
+                                  available_now=True))
+
+    want = [("X", 100, '{"f":{"id":"X","v":"two"}}')]
+    assert parquet_docs(str(tmp_path / "tick")) == want
+    assert parquet_docs(str(tmp_path / "stream")) == want
+    assert bulk_docs([ln for p in es.iterdir() if p.name.startswith("part-")
+                      for ln in p.read_text().splitlines()]) == want
+    assert bulk_docs(bulksink.committed_lines(str(tmp_path / "bulk"))) == want
 
 
 def _replay_index(spark, sf_dir, tmp_path):
