@@ -6,12 +6,15 @@
         --table events --index river --type doc \
         --batch-size 1000 --interval-ms 60000 \
         [--family meta] [--qualifiers a,b] [--id-field fam::qual]
-        [--separator '::'] [--delete-old] [--streaming --checkpoint DIR]
+        [--separator '::'] [--delete-old]
+        [--streaming --checkpoint DIR [--sink-format es_bulk]]
 
 Batch mode runs one tick (run_once) per invocation — the reference's
 scheduler becomes cron/Airflow/whatever owns the cadence. ``--streaming``
 starts a Structured Streaming query triggered every ``--interval-ms``
-(the reference's polling loop) and blocks until interrupted.
+(the reference's polling loop) and blocks until interrupted; its
+``--source`` is a parquet cells directory or a cellstore. A flag the
+chosen mode would ignore exits 2 with one line on stderr.
 
 The ``esql`` subcommand runs an ES|QL query against a fixture/table
 directory and prints the result — the interactive face of the engine's
@@ -44,17 +47,17 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--id-field")
     p.add_argument("--separator")
     p.add_argument("--no-normalize", action="store_true")
-    p.add_argument("--charset", default="UTF-8")
     p.add_argument("--delete-old", action="store_true")
     p.add_argument("--streaming", action="store_true")
     p.add_argument("--checkpoint", help="checkpoint dir (streaming mode)")
     p.add_argument("--source-format", default="parquet",
                    choices=["parquet", "orc", "csv", "json"],
-                   help="landed format of the cells relation (batch mode)")
+                   help="landed format of the cells relation (batch mode; "
+                        "a stream reads parquet or a cellstore)")
     p.add_argument("--sink-format", default="parquet",
                    choices=["parquet", "es_bulk"],
                    help="es_bulk writes Elasticsearch bulk-request files "
-                        "(streaming mode)")
+                        "(streaming mode only)")
     p.add_argument("--master", default="local[*]")
     return p
 
@@ -106,6 +109,20 @@ def esql_main(argv: list[str]) -> int:
             spark.stop()
 
 
+def _usage_error(args: argparse.Namespace) -> str | None:
+    """The one-line complaint about a flag the chosen mode would ignore,
+    or None."""
+    if args.streaming:
+        if not args.checkpoint:
+            return "--streaming requires --checkpoint"
+        if args.source_format != "parquet":
+            return ("--streaming reads parquet or a cellstore; "
+                    f"--source-format {args.source_format} is batch-only")
+    elif args.sink_format != "parquet":
+        return f"--sink-format {args.sink_format} requires --streaming"
+    return None
+
+
 def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
@@ -115,6 +132,10 @@ def main(argv: list[str] | None = None) -> int:
     if argv and argv[0] == "esql":
         return esql_main(argv[1:])
     args = build_parser().parse_args(argv)
+    usage_error = _usage_error(args)
+    if usage_error:
+        print(usage_error, file=sys.stderr)
+        return 2
     # reuse an ambient session (tests, notebooks); only stop what we create
     owns_session = SparkSession.getActiveSession() is None
     config = RiverConfig(
@@ -123,16 +144,13 @@ def main(argv: list[str] | None = None) -> int:
         qualifiers=tuple(q for q in args.qualifiers.split(",") if q),
         batch_size=args.batch_size, interval_ms=args.interval_ms,
         id_field=args.id_field, column_separator=args.separator,
-        normalize_fields=not args.no_normalize, charset=args.charset,
+        normalize_fields=not args.no_normalize,
         delete_old=args.delete_old,
     )
     spark = (SparkSession.builder.master(args.master)
              .appName(f"river-{config.index}").getOrCreate())
     try:
         if args.streaming:
-            if not args.checkpoint:
-                print("--streaming requires --checkpoint", file=sys.stderr)
-                return 2
             from elasticsearch_hbase_river_spark.streaming.river_stream import (
                 start_river_stream,
             )

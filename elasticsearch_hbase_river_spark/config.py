@@ -49,14 +49,11 @@ class RiverConfig:
     """Typed river configuration with the reference's defaults.
 
     Required (HBaseRiver.java:176-183): ``table``, ``index``, ``type_name``.
-    ``hosts`` is required by the reference (it names the HBase quorum); here a
-    source *path* plays that role and is equally required.
     """
 
     table: str
     index: str
     type_name: str
-    hosts: str = "local"
 
     # Scan restriction (HBaseRiver.java:76-85,154-156).
     family: str | None = None
@@ -70,7 +67,6 @@ class RiverConfig:
     id_field: str | None = None
     column_separator: str | None = None
     normalize_fields: bool = True
-    charset: str = "UTF-8"
 
     # Source truncation (HBaseRiver.java:124-127,152).
     delete_old: bool = False

@@ -24,7 +24,7 @@ emitted for DuckDB as a SQL ``CASE`` from the same list, so there is no
 hand-translation to drift.
 
 Execution design (r11 optimization round): the Spark side is ONE
-algorithm — the ``_parse_pipe`` / ``_render_pipe`` stage lists — bound
+algorithm — the ``_parse_pipe`` / ``_canonical_pipe`` stage lists — bound
 two ways:
 
 - **staged** (the ES|QL compiler's EVAL/WHERE path,
@@ -204,7 +204,7 @@ def _best_run(b: Column) -> Column:
         F.struct(F.lit(0).alias("s"), F.lit(0).alias("l")))
 
 
-def _render_pipe(hname: str) -> list[tuple[str, Callable[[_Ref], Column]]]:
+def _canonical_pipe(hname: str) -> list[tuple[str, Callable[[_Ref], Column]]]:
     """Canonical-rendering stages over a hex32 stage ``hname``: the
     stripped hextet array, the zero-group bitmap (read directly off the
     padded nibbles — group i is zero iff its 4 nibbles are '0000'), and
@@ -221,7 +221,7 @@ def _render_pipe(hname: str) -> list[tuple[str, Callable[[_Ref], Column]]]:
     ]
 
 
-def _render_out(r: _Ref, hname: str) -> Column:
+def _canonical_out(r: _Ref, hname: str) -> Column:
     """RFC 5952 canonical text of the hex32 stage ``hname`` (mapped
     values render as the dotted quad — the Java InetAddress / ES rule)."""
     h, harr, bs = r(hname), r("harr"), r("bs")
@@ -245,7 +245,7 @@ def _render_out(r: _Ref, hname: str) -> Column:
 def _to_ip_final(r: _Ref) -> Column:
     """Canonical IP string (or null): strict dotted quads pass through,
     valid IPv6 renders canonically, everything else folds to null."""
-    return F.when(r("is4"), r("lc")).when(r("ok6"), _render_out(r, "h"))
+    return F.when(r("is4"), r("lc")).when(r("ok6"), _canonical_out(r, "h"))
 
 
 # ---------------------------------------------------------------------------
@@ -278,7 +278,7 @@ def _run_let(pipe: list, final: Callable[[_Ref], Column],
 
 def to_ip_col(c: Column) -> Column:
     """Canonical IP string (or null) from an arbitrary string column."""
-    return _run_let(_parse_pipe() + _render_pipe("h"), _to_ip_final, c)
+    return _run_let(_parse_pipe() + _canonical_pipe("h"), _to_ip_final, c)
 
 
 def ip_hex32_col(c: Column) -> Column:
@@ -311,9 +311,9 @@ def ip_prefix_col(c: Column, v4len: int, v6len: int) -> Column:
     nibbles (valid by construction — no re-parse). Unparseable input
     folds to null."""
     mh, fn = _mask_pick_stage(v4len, v6len)
-    pipe = _parse_pipe() + [(mh, fn)] + _render_pipe(mh)
+    pipe = _parse_pipe() + [(mh, fn)] + _canonical_pipe(mh)
     return _run_let(pipe, lambda r: F.when(r("h").isNotNull(),
-                                           _render_out(r, mh)), c)
+                                           _canonical_out(r, mh)), c)
 
 
 # ---------------------------------------------------------------------------
@@ -381,7 +381,7 @@ def stage_to_ip(df: DataFrame, env: dict[str, str],
     """Canonical-rendering stages over an already-staged parse; returns
     the TO_IP output Column (not yet projected)."""
     cols = _cached_stage_cols(("toip", prefix),
-                              lambda: _render_pipe("h"), prefix)
+                              lambda: _canonical_pipe("h"), prefix)
     df, added = _apply_staged(df, cols, env)
     key = ("toip_out", prefix)
     out = _STAGE_COL_CACHE.get(key)
@@ -405,13 +405,13 @@ def stage_ip_prefix(df: DataFrame, env: dict[str, str], v4len: int,
     # projection level below it), but the env must keep them separate.
     env2 = dict(env)
     cols = _cached_stage_cols(("prefix", prefix, v4len, v6len),
-                              lambda: [(mh, fn)] + _render_pipe(mh), prefix)
+                              lambda: [(mh, fn)] + _canonical_pipe(mh), prefix)
     df, added = _apply_staged(df, cols, env2)
     key = ("prefix_out", prefix, v4len, v6len)
     out = _STAGE_COL_CACHE.get(key)
     if out is None:
         r = _fixed_ref(prefix)
-        out = F.when(r("h").isNotNull(), _render_out(r, mh))
+        out = F.when(r("h").isNotNull(), _canonical_out(r, mh))
         _STAGE_COL_CACHE[key] = out
     return df, out, added
 

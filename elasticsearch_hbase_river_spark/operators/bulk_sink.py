@@ -7,8 +7,9 @@ Reference mapping:
   row group (``parquet.block.row.count.limit``): each row group is one
   "bulk request", with its own footer stats, and each write task writes
   one file; executors write their partitions in parallel instead of the
-  reference's sequential RPCs. ``write_es_bulk`` keeps one file per bulk
-  (``maxRecordsPerFile``), because there a file is the request body.
+  reference's sequential RPCs. Elasticsearch bulk files, where a file is
+  the request body, are ``es_bulk_lines`` published through the
+  ``bulksink`` connector (``sources/bulksink.py``), one file per bulk.
 - failed-key exclusion (HBaseParser.java:164-175)     -> ``left_anti`` ack
   join; Catalyst broadcasts the (small) failed set automatically.
 - dead-letter channel (HBaseCallbackLogger)           -> failed rows land in
@@ -17,10 +18,10 @@ Reference mapping:
   returned for the caller to apply to the source.
 
 Scale: no global sort or repartition is imposed here — the row-group limit
-(and ``maxRecordsPerFile`` for ES bulk files) splits within each task, so
-writing stays embarrassingly parallel at any executor count. One file per
-task, not per bulk, matters on a local Hadoop filesystem without native IO:
-it forks a ``chmod`` for every file and directory it creates.
+splits within each task, so writing stays embarrassingly parallel at any
+executor count. One file per task, not per bulk, matters on a local Hadoop
+filesystem without native IO: it forks a ``chmod`` for every file and
+directory it creates.
 """
 
 from __future__ import annotations
@@ -90,18 +91,6 @@ def es_bulk_lines(docs: DataFrame, index: str = ES_INDEX,
         F.lit("}}"))
     return docs.select(
         "doc_id", F.concat(action, F.lit("\n"), F.col("doc_json")).alias("bulk"))
-
-
-def write_es_bulk(docs: DataFrame, path: str, index: str = ES_INDEX,
-                  doc_type: str = ES_TYPE, batch_size: int = 100,
-                  mode: str = "append") -> None:
-    """Write documents as Elasticsearch bulk files: newline-delimited
-    action/source pairs, at most ``batch_size`` documents per file — each
-    output file IS one bulk request body (``curl --data-binary @file
-    .../_bulk``), the file-sink twin of the reference's one-RPC-per-batch
-    loop (HBaseParser.java:137-162). Executors write files in parallel."""
-    (es_bulk_lines(docs, index, doc_type).select("bulk")
-     .write.option("maxRecordsPerFile", batch_size).mode(mode).text(path))
 
 
 def split_failed(docs: DataFrame, reject_when: Column) -> tuple[DataFrame, DataFrame]:

@@ -21,12 +21,24 @@ Every micro-batch runs the tick's own document plan
 null-``ts_ms`` rule, assembly and latest-wins-per-id rank as ``run_once``,
 whatever the trigger.
 
-The source is a file stream of cells (parquet); in production this is
-Kafka/CDC — the transform chain is source-agnostic because it only sees the
-canonical cells schema.
+The source is a stream of cells in the canonical cells schema, chosen by
+what the source directory holds when the stream starts: a ``cellstore``
+(its ``_cellstore_manifest.json`` is present) streams through the
+connector's incremental scanner, each micro-batch the delta above the
+checkpointed ts offset (HBaseParser.java:258-280); anything else is a
+parquet file stream. In production this is Kafka/CDC — the transform chain
+is source-agnostic because it only sees the canonical cells schema.
+
+Limitation: the stream keeps no watermark of what it already indexed, so a
+late cell (ts at or below an indexed document's) becomes a new document in
+a later micro-batch, where the tick would drop it. The parquet sink's
+read-time latest-wins hides this; the ``es_bulk`` files replay in arrival
+order, so the older document is indexed last.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,10 +49,15 @@ from pyspark.sql.types import (
 )
 
 from elasticsearch_hbase_river_spark.config import RiverConfig
+from elasticsearch_hbase_river_spark.operators.bulk_sink import (
+    es_bulk_lines,
+    write_bulk,
+)
 from elasticsearch_hbase_river_spark.plans.pipeline import (
     apply_sink_mapping,
     river_tick_plan,
 )
+from elasticsearch_hbase_river_spark.sources import bulksink, cellstore
 from elasticsearch_hbase_river_spark.sources.formats import CELLS_SCHEMA
 from elasticsearch_hbase_river_spark.streaming.epochs import (
     _check_epochs_layout,
@@ -72,75 +89,52 @@ def start_river_stream(
     and stops (the testable mode); otherwise triggers every
     ``config.interval_ms`` like the reference's scheduler.
 
+    ``source_dir`` is a ``cellstore`` if it holds the store's manifest when
+    the stream starts, else a directory of parquet cell files. Family and
+    qualifier restrictions apply inside the tick's plan either way.
+
     ``sink_format``: ``"parquet"`` (columnar sink) or ``"es_bulk"`` —
     micro-batches land as Elasticsearch bulk-request files (action/source
     line pairs, one file per ≤ batchSize docs), the closest file-sink
     analog of the reference's per-batch bulk RPC (HBaseParser.java:162).
-    The parquet sink has the tick sink's schema (``run_once``), one row
-    group per ≤ batchSize docs."""
+    The bulk files publish through the ``bulksink`` manifest with the
+    micro-batch id as the epoch, so a replayed batch (crash between sink
+    write and checkpoint commit) publishes exactly once; read them with
+    ``bulksink.committed_lines``. The parquet sink has the tick sink's
+    schema (``run_once``), one row group per ≤ batchSize docs. Any other
+    ``sink_format`` raises ``ValueError`` before the query starts."""
+    if sink_format not in ("parquet", "es_bulk"):
+        raise ValueError(f"sink_format must be 'parquet' or 'es_bulk', "
+                         f"got {sink_format!r}")
+    if os.path.exists(os.path.join(source_dir, cellstore.MANIFEST)):
+        cellstore.register(spark)
+        cells = (spark.readStream.format("cellstore")
+                 .option("path", source_dir).load())
+    else:
+        cells = read_cells_stream(spark, source_dir)
+    if sink_format == "es_bulk":
+        bulksink.register(spark)
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
         # foreachBatch = the bulk writer (HBaseParser.java:135-162). Within
         # a micro-batch the tick's plan keeps one document per id; across
         # batches, append + read-time latest-wins (a real system MERGEs
         # into Delta/Iceberg).
-        from elasticsearch_hbase_river_spark.operators.bulk_sink import (
-            write_bulk, write_es_bulk,
-        )
-
         docs = river_tick_plan(batch_df, config, None)
         if sink_format == "es_bulk":
-            write_es_bulk(docs, sink_dir, index=config.index,
-                          doc_type=config.type_name,
-                          batch_size=config.batch_size)
+            (es_bulk_lines(docs, config.index, config.type_name)
+             .select("bulk").write.format("bulksink")
+             .option("path", sink_dir)
+             .option("batch_size", config.batch_size)
+             .option("epoch", batch_id)
+             .mode("append").save())
         else:
             # the tick sink's schema; the checkpoint's commit log records
             # each micro-batch
             write_bulk(apply_sink_mapping(docs, config), sink_dir,
                        config.batch_size)
 
-    return start_batches(read_cells_stream(spark, source_dir), upsert_batch,
-                         checkpoint_dir, available_now, config.interval_ms)
-
-
-def start_connector_river(
-    spark: SparkSession,
-    config: RiverConfig,
-    store_path: str,
-    bulk_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """The river with real connectors on BOTH ends: the ``cellstore``
-    streaming source serves each micro-batch as the delta above its
-    checkpointed ts offset (the incremental scanner,
-    HBaseParser.java:258-280), the tick's document plan runs per batch,
-    and the ``bulksink`` writer publishes them behind its manifest with
-    the micro-batch id as the idempotence epoch — a replayed batch (crash
-    between sink write and checkpoint commit) publishes exactly once.
-
-    Family/qualifier restrictions from the config apply inside that plan
-    (the batch path pushes them into the store; a streaming scan serves
-    the delta, which is already the narrow set)."""
-    from elasticsearch_hbase_river_spark.sources import bulksink, cellstore
-
-    cellstore.register(spark)
-    bulksink.register(spark)
-    cells = (spark.readStream.format("cellstore")
-             .option("path", store_path).load())
-
-    def publish(batch_df: DataFrame, batch_id: int) -> None:
-        docs = (river_tick_plan(batch_df, config, None)
-                .select("doc_id", "doc_ts_ms", "doc_json"))
-        (docs.write.format("bulksink")
-         .option("path", bulk_dir)
-         .option("batch_size", config.batch_size)
-         .option("index", config.index)
-         .option("doc_type", config.type_name)
-         .option("epoch", batch_id)
-         .mode("append").save())
-
-    return start_batches(cells, publish, checkpoint_dir, available_now,
+    return start_batches(cells, upsert_batch, checkpoint_dir, available_now,
                          config.interval_ms)
 
 

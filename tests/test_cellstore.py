@@ -125,6 +125,7 @@ def test_full_river_lifecycle_over_connectors(spark, sf_dir, tmp_path):
     pushFilters into the store), and the assembled documents publish
     through the bulksink connector's atomic manifest."""
     from elasticsearch_hbase_river_spark.config import RiverConfig
+    from elasticsearch_hbase_river_spark.operators.bulk_sink import es_bulk_lines
     from elasticsearch_hbase_river_spark.plans.pipeline import (
         assemble_documents, run_once,
     )
@@ -157,8 +158,8 @@ def test_full_river_lifecycle_over_connectors(spark, sf_dir, tmp_path):
     # publish the same documents through the bulk sink connector
     bulksink.register(spark)
     bulk_dir = str(tmp_path / "bulk")
-    docs = (assemble_documents(_read(spark, store_dir), config)
-            .select("doc_id", "doc_ts_ms", "doc_json"))
+    docs = es_bulk_lines(assemble_documents(_read(spark, store_dir), config),
+                         config.index, config.type_name).select("bulk")
     (docs.write.format("bulksink").option("path", bulk_dir)
      .mode("append").save())
     assert (bulksink.read_manifest(bulk_dir)["n_docs"]

@@ -1,13 +1,10 @@
-"""Round-trip tests for multi-format cells ingest and the ES bulk-file sink."""
+"""Round-trip tests for multi-format cells ingest and the ES bulk-line renderer."""
 
 from __future__ import annotations
-
-import json
 
 import pytest
 from pyspark.sql import functions as F
 
-from elasticsearch_hbase_river_spark.operators.bulk_sink import write_es_bulk
 from elasticsearch_hbase_river_spark.sources.cells import cells_from_events
 from elasticsearch_hbase_river_spark.sources.formats import (
     CELLS_SCHEMA, FORMATS, read_cells, write_cells,
@@ -26,36 +23,6 @@ def test_cells_round_trip(spark, sf_dir, tmp_path, fmt):
     orig = {tuple(r) for r in cells.collect()}
     rt = {tuple(r) for r in back.collect()}
     assert rt == orig
-
-
-def test_es_bulk_files_pair_lines_and_respect_batch_size(spark, sf_dir, tmp_path):
-    from elasticsearch_hbase_river_spark.config import RiverConfig
-    from elasticsearch_hbase_river_spark.plans.pipeline import assemble_documents
-
-    docs = assemble_documents(cells_from_events(spark, sf_dir),
-                              RiverConfig(index="river", type_name="doc",
-                                          table="events"))
-    n_docs = docs.count()
-    path = str(tmp_path / "bulk")
-    write_es_bulk(docs, path, batch_size=50, mode="overwrite")
-
-    files = [p for p in (tmp_path / "bulk").iterdir()
-             if p.name.startswith("part-")]
-    assert files
-    total_docs = 0
-    for f in files:
-        lines = f.read_text().rstrip("\n").split("\n")
-        assert len(lines) % 2 == 0
-        pairs = list(zip(lines[0::2], lines[1::2]))
-        assert len(pairs) <= 50  # one file == one bulk of <= batchSize ops
-        for action_line, source_line in pairs:
-            action = json.loads(action_line)["index"]
-            assert action["_index"] == "river"
-            assert action["_type"] == "doc"
-            source = json.loads(source_line)
-            assert isinstance(source, dict) and source
-        total_docs += len(pairs)
-    assert total_docs == n_docs
 
 
 def test_es_bulk_ids_match_documents(spark, sf_dir, tmp_path):

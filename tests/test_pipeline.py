@@ -585,6 +585,27 @@ def test_cli_batch_tick(spark, sf_dir, tmp_path):
     assert spark.read.parquet(sink).count() == 1000
 
 
+@pytest.mark.parametrize("flags, complaint", [
+    (["--sink-format", "es_bulk"], "--sink-format es_bulk requires --streaming"),
+    (["--streaming", "--checkpoint", "CKPT", "--source-format", "csv"],
+     "--source-format csv is batch-only"),
+])
+def test_cli_refuses_flags_its_mode_would_ignore(tmp_path, capsys, flags,
+                                                 complaint):
+    """Batch mode always writes parquet and a stream always reads parquet
+    or a cellstore: a flag saying otherwise exits 2 with one stderr line,
+    before any Spark work."""
+    from elasticsearch_hbase_river_spark.__main__ import main
+
+    argv = ["--source", str(tmp_path / "src"), "--sink", str(tmp_path / "sink"),
+            "--table", "events", "--index", "river", "--type", "doc"]
+    argv += [str(tmp_path / "ckpt") if f == "CKPT" else f for f in flags]
+    assert main(argv) == 2
+    err = capsys.readouterr().err.strip().splitlines()
+    assert len(err) == 1 and complaint in err[0]
+    assert not list(tmp_path.iterdir())
+
+
 def test_cli_batch_tick_from_csv_source(spark, sf_dir, tmp_path):
     """The river ingests a CSV landing of the cells relation end-to-end."""
     from elasticsearch_hbase_river_spark.__main__ import main

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from elasticsearch_hbase_river_spark.config import RiverConfig
+from elasticsearch_hbase_river_spark.sources import bulksink
 from elasticsearch_hbase_river_spark.sources.cells import cells_from_events
 from elasticsearch_hbase_river_spark.streaming.river_stream import (
     start_river_stream,
@@ -70,20 +71,65 @@ def test_stream_restart_picks_up_only_new_files(spark, sf_dir, tmp_path):
 
 def test_stream_to_es_bulk_files(spark, sf_dir, tmp_path):
     src = str(tmp_path / "src_bulk")
-    sink = tmp_path / "sink_bulk"
+    sink = str(tmp_path / "sink_bulk")
     ckpt = str(tmp_path / "ckpt_bulk")
     _write_cells(spark, sf_dir, src)
     cfg = RiverConfig(table="events", index="river", type_name="doc",
                       interval_ms=1000, batch_size=200)
-    q = start_river_stream(spark, cfg, src, str(sink), ckpt,
+    q = start_river_stream(spark, cfg, src, sink, ckpt,
                            available_now=True, sink_format="es_bulk")
     assert q.awaitTermination(120), "stream did not drain in 120s"
-    lines = [ln for p in sink.iterdir() if p.name.startswith("part-")
-             for ln in p.read_text().rstrip("\n").split("\n")]
+    lines = bulksink.committed_lines(sink)
     assert len(lines) == 2 * 1000  # action+source per doc
     actions = [json.loads(ln)["index"] for ln in lines[0::2]]
     assert {a["_index"] for a in actions} == {"river"}
     assert len({a["_id"] for a in actions}) == 1000
+
+
+def test_replayed_es_bulk_batch_publishes_once(spark, tmp_path):
+    """A crash between the sink write and the checkpoint commit replays the
+    micro-batch. The bulk files must hold each document once after the
+    replay, both through the manifest and on disk."""
+    n_docs = 50
+    src, sink = str(tmp_path / "src"), tmp_path / "sink"
+    ckpt = tmp_path / "ckpt"
+    spark.createDataFrame(
+        [(f"r{i:02d}", "f", "q", f"v{i}", 100 + i) for i in range(n_docs)],
+        "row_key string, family string, qualifier string, value string, "
+        "ts_ms long").coalesce(1).write.parquet(src)
+    cfg = RiverConfig(table="t", index="i", type_name="d")
+
+    def drain() -> None:
+        q = start_river_stream(spark, cfg, src, str(sink), str(ckpt),
+                               available_now=True, sink_format="es_bulk")
+        assert q.awaitTermination(120), "stream did not drain in 120s"
+
+    def raw_lines() -> int:
+        return sum(1 for p in sink.iterdir() if p.name[0] not in "_."
+                   for ln in p.read_text().splitlines() if ln)
+
+    drain()
+    last = max(int(p.name) for p in (ckpt / "commits").iterdir()
+               if p.name.isdigit())
+    (ckpt / "commits" / str(last)).unlink()
+    (ckpt / "commits" / f".{last}.crc").unlink(missing_ok=True)
+    drain()
+    assert raw_lines() == 2 * n_docs
+    assert len(bulksink.committed_lines(str(sink))) == 2 * n_docs
+
+
+def test_unknown_sink_format_is_refused_before_the_query_starts(spark,
+                                                                 tmp_path):
+    src, ckpt = str(tmp_path / "src"), tmp_path / "ckpt"
+    spark.createDataFrame([("r1", "f", "q", "v", 1)],
+                          "row_key string, family string, qualifier string, "
+                          "value string, ts_ms long").write.parquet(src)
+    cfg = RiverConfig(table="t", index="i", type_name="d")
+    with pytest.raises(ValueError, match="sink_format"):
+        start_river_stream(spark, cfg, src, str(tmp_path / "sink"),
+                           str(ckpt), available_now=True, sink_format="json")
+    assert not ckpt.exists()
+    assert not (tmp_path / "sink").exists()
 
 
 def test_streaming_index_maintenance(spark, sf_dir, tmp_path):
@@ -255,11 +301,7 @@ def test_connector_river_latency_under_trickle(spark, tmp_path):
     regressions like a stream that only sees appends on restart."""
     import time
 
-    from elasticsearch_hbase_river_spark.sources import bulksink, cellstore
-
-    from elasticsearch_hbase_river_spark.streaming.river_stream import (
-        start_connector_river,
-    )
+    from elasticsearch_hbase_river_spark.sources import cellstore
 
     store = str(tmp_path / "store")
     bulk = str(tmp_path / "bulk")
@@ -269,7 +311,7 @@ def test_connector_river_latency_under_trickle(spark, tmp_path):
         cellstore.CELLS_DDL)
     cellstore.write_cellstore(base, store, n_regions=4)
     cfg = RiverConfig(table="t", index="i", type_name="d", interval_ms=500)
-    q = start_connector_river(spark, cfg, store, bulk, ckpt)
+    q = start_river_stream(spark, cfg, store, bulk, ckpt, sink_format="es_bulk")
 
     def n_docs() -> int:
         try:
@@ -634,14 +676,11 @@ def test_stream_sink_applies_custom_mapping(spark, sf_dir, tmp_path):
 
 def test_every_river_entry_point_writes_one_document_per_id(spark, tmp_path):
     """Rows r1 and r2 resolve to one id at one timestamp and r3's cell has
-    no timestamp. The tick, both stream sinks and the connector river all
-    run the tick's plan: one document for the id, r2's (the ``row_key``
-    tiebreak), and nothing for r3."""
+    no timestamp. The tick, both stream sinks and the stream over a
+    cellstore all run the tick's plan: one document for the id, r2's (the
+    ``row_key`` tiebreak), and nothing for r3."""
     from elasticsearch_hbase_river_spark.plans.pipeline import run_once
-    from elasticsearch_hbase_river_spark.sources import bulksink, cellstore
-    from elasticsearch_hbase_river_spark.streaming.river_stream import (
-        start_connector_river,
-    )
+    from elasticsearch_hbase_river_spark.sources import cellstore
 
     cells = spark.createDataFrame(
         [("r1", "f", "id", "X", 100), ("r1", "f", "v", "one", 100),
@@ -670,19 +709,18 @@ def test_every_river_entry_point_writes_one_document_per_id(spark, tmp_path):
     run_once(spark, cells, cfg, str(tmp_path / "tick"))
     drained(start_river_stream(spark, cfg, src, str(tmp_path / "stream"),
                                str(tmp_path / "ckpt_p"), available_now=True))
-    es = tmp_path / "es"
-    drained(start_river_stream(spark, cfg, src, str(es),
+    es = str(tmp_path / "es")
+    drained(start_river_stream(spark, cfg, src, es,
                                str(tmp_path / "ckpt_e"), available_now=True,
                                sink_format="es_bulk"))
-    drained(start_connector_river(spark, cfg, store, str(tmp_path / "bulk"),
-                                  str(tmp_path / "ckpt_c"),
-                                  available_now=True))
+    drained(start_river_stream(spark, cfg, store, str(tmp_path / "bulk"),
+                               str(tmp_path / "ckpt_c"), available_now=True,
+                               sink_format="es_bulk"))
 
     want = [("X", 100, '{"f":{"id":"X","v":"two"}}')]
     assert parquet_docs(str(tmp_path / "tick")) == want
     assert parquet_docs(str(tmp_path / "stream")) == want
-    assert bulk_docs([ln for p in es.iterdir() if p.name.startswith("part-")
-                      for ln in p.read_text().splitlines()]) == want
+    assert bulk_docs(bulksink.committed_lines(es)) == want
     assert bulk_docs(bulksink.committed_lines(str(tmp_path / "bulk"))) == want
 
 
